@@ -4885,48 +4885,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # The driver oracle-checks the FIRST 50 declared queries per round; the
 # window ROTATES to maximize the union of direct driver rows
-# (COVERAGE.md rotation table). Driver-round-6 window (frozen at round
-# start per the r3 lesson), in priority order: (1) the 15 round-5
-# additions (conflict family, semdedup_keep, interval_overlap, msmg,
-# LLM seams, knowledge flagship, api_key_scope, cooc_kcore,
-# boilerplate_removal, tag_documents) — zero driver rows, VERDICT r5
-# item 1; (2) the six events aggregates whose green rows predate the
-# events NTZ schema switch (VERDICT r5 item 7); (3) the 17 remaining
-# never-driver-checked queries (r3/r4 past-50 additions incl. the ten
-# straight-join TPC-H shapes); (4) 12 queries whose only driver rows
-# date to round 1 (stalest green). Demoted past 50: the entire r05
-# driver-green window (50/50 fresh rows, CORRECTNESS_r05), then newer-
-# green sets — tools/verify_oracle.py (full suite, re-run each round)
-# remains the superset check for everything demoted. Queries added
-# mid-round go at positions 51+ only and head the round-7 rotation.
-# Round-7 window (rotated ONCE at round start, then frozen — the
-# standing discipline). Ground truth recomputed from CORRECTNESS_r01-06:
-# 231 of 236 registered queries have at least one green driver row;
-# priority order: (1) the FIVE queries with no driver row ever (added
-# after the r6 freeze; judge-verified locally in VERDICT r6, this is
-# the independent driver replication); (2) the six queries whose
-# latest green row dates to round 1; (3) 39 of the 42 queries whose
-# latest green row dates to round 2 — dropped to fit 50: `vector_topk`
-# / `vector_threshold` (same similarity.py top-k path as the r6-green
-# `vector_knn_of_item`) and `dup_clusters` (checked every round by
-# `dup_clusters_inc`'s full-recompute-equality oracle, r5-green).
-# Demoted: everything with an r3+ row — tools/verify_oracle.py (full
-# suite, re-run each round) remains the superset check. Queries added
-# mid-round go at positions 51+ only and head the round-8 rotation.
-# Round-8 window (rotated ONCE at round start, then frozen). Ground
-# truth derived by tools/rotation_table.py from CORRECTNESS_r01-r07:
-# 236/242 registered queries have a green driver row; priority order:
-# (1) the SIX queries with no driver row ever (added after the r7
-# freeze; judge-verified locally in VERDICT r7 — this is the
-# independent driver replication); (2) the three r2-vintage rows
-# dropped from the r7 rotation (`vector_topk`/`vector_threshold`/
-# `dup_clusters`); (3) all 39 queries whose latest green row dates to
-# round 3; (4) the first two of the r4-vintage block (`hybrid_rrf_3way`
-# — the flagship, worth a fresh row — and `round_buffer_batch`) to
-# fill 50. Demoted: everything with an r4+ row — tools/verify_oracle.py
-# (full suite, re-run each round) remains the superset check. Queries
-# added mid-round go at positions 51+ only and head the round-9
-# rotation.
+# (COVERAGE.md rotation table).
 # Round-10 window (rotated ONCE at round start, then frozen). Ground
 # truth derived by tools/rotation_table.py from CORRECTNESS_r01-r09:
 # 243/246 registered queries have a green driver row;
@@ -4961,125 +4920,6 @@ _DRIVER_WINDOW_R10 = [
     "msmg_rollup", "msmg_neighborhood", "m1_episodes_former",
     "hybrid_with_knowledge",
 ]
-
-# superseded — round-9 priority order:
-# (1) `semdedup_scaled` — the ONE query with no driver row ever (added
-# after the r8 freeze; judge-verified in VERDICT r8 — the driver run
-# is the independent replication); (2) all 42 queries whose latest
-# green row dates to round 4; (3) the first seven of the r5-vintage
-# block to fill 50. Demoted: everything with an r5+ row —
-# tools/verify_oracle.py (full suite, re-run each round) remains the
-# superset check. Queries added mid-round go at positions 51+ only and
-# head the round-10 rotation.
-_DRIVER_WINDOW_R9 = [
-    # (1) never driver-checked (added after the r8 freeze)
-    "semdedup_scaled",
-    # (2) latest green row = round 4 (all 42)
-    "reservoir_sample", "corpus_report", "pca_top", "value_drift_psi",
-    "snapshot_diff", "hll_by_type", "asof_forward", "graph_ppr",
-    "salted_event_totals", "fk_integrity", "containment_pairs",
-    "rm3_expand", "ann_recall_audit", "time_grid_fill",
-    "vocab_overlap_hll", "weighted_sample", "graph_communities",
-    "bpe_merges_batched", "routed_hybrid", "scd2_versions",
-    "events_profile", "uniform_negatives", "click_attribution",
-    "bm25_v2_topk", "fusion_percentile", "late_interaction",
-    "token_budget_mix", "quality_dedup_keep", "ql_dirichlet",
-    "hist_quantiles_by_type", "ltr_features", "entity_cooccurrence",
-    "minhash_accuracy", "source_concentration", "asof_nearest",
-    "ohlc_bars", "dau_growth", "ewma_smooth", "item_cooccurrence",
-    "doc_keyterms", "search_highlights", "sessionize",
-    # (3) head of the r5-vintage block
-    "prefix_filter_stats", "m2_facts_extractor", "media_resize_plan",
-    "media_frame_plan", "char_entropy", "ngram_novelty",
-    "routed_hybrid_3way",
-]
-
-_DRIVER_WINDOW_R8 = [
-    # (1) never driver-checked (r7 positions 51-56)
-    "token_chunks", "token_stats_bpe", "perf_monitor_stats",
-    "perf_regressions", "minhash_recall_audit", "simhash_recall_audit",
-    # (2) latest green row = round 2 (dropped from the r7 window)
-    "vector_topk", "vector_threshold", "dup_clusters",
-    # (3) latest green row = round 3 (all 39)
-    "user_retention", "bloom_semi_join", "ivfpq_topk", "tpch_q2",
-    "tpch_q11", "tpch_q15", "tpch_q17", "tpch_q20", "tpch_q21",
-    "zorder_stats", "hist_quantiles", "centroid_topk",
-    "matryoshka_topk", "session_rollup", "proximity_search",
-    "typo_pairs", "bpe_merges", "temperature_resample",
-    "graph_pagerank", "phrase_search", "ann_multiprobe", "pq_topk",
-    "collocations_pmi", "cluster_keywords", "bigram_logprob",
-    "mmr_rerank", "hard_negatives", "gopher_quality", "span_dedup",
-    "m1_chunks", "m2_facts", "m3_patterns", "m0_m1_lineage",
-    "read_your_writes", "contextual_chunks", "fixed_char_chunks",
-    "events_window_agg", "asof_join", "session_listing",
-    # (4) head of the r4-vintage block
-    "hybrid_rrf_3way", "round_buffer_batch",
-]
-
-_DRIVER_WINDOW_R7 = [
-    # (1) never driver-checked (r6 positions 51-55)
-    "fact_conflicts_cumulative", "fact_validation_cumulative",
-    "source_kl", "zipf_slope", "centroid_shift",
-    # (2) latest green row = round 1
-    "tpch_q6", "window_running_sum", "vector_batch_topk",
-    "minhash_dedup_keep", "bm25_wrapped_score", "tfidf_topk",
-    # (3) latest green row = round 2 (39 of 42)
-    "m0_records", "bm25_topk", "like_search", "hybrid_rrf",
-    "fusion_weighted", "fusion_normalized", "quantized_topk",
-    "rerank_two_stage", "ann_lsh_topk", "ivf_centroids",
-    "ann_ivf_topk", "ivf_knn_join", "embedding_neardup",
-    "exact_dedup", "minhash_pairs", "simhash_pairs", "ngram_jaccard",
-    "unigram_logprob", "corpus_filter_pipeline", "token_stats",
-    "semantic_dedup", "decontaminate", "fingerprint", "sequence_pack",
-    "doc_repetition", "stratified_sample", "pii_redact", "train_split",
-    "tenant_filtered_topk", "speculative_prefetch", "graph_edges",
-    "graph_neighbors", "graph_edges_between", "graph_weighted_2hop",
-    "quality_classifier", "importance_weights", "length_buckets",
-    "domain_mixture", "graph_contextual",
-]
-
-_DRIVER_WINDOW_R6 = [
-    # (1) round-5 additions — first driver rows
-    "msmg_rollup", "msmg_neighborhood", "m1_episodes_former",
-    "hybrid_with_knowledge", "fact_conflicts", "fact_conflicts_detector",
-    "fact_consolidation", "fact_validation", "semdedup_keep",
-    "interval_overlap", "m6_contextual_enhancer", "api_key_scope",
-    "cooc_kcore", "boilerplate_removal", "tag_documents",
-    # (2) events aggregates post-NTZ-switch refresh
-    "moving_avg", "event_pivot", "event_percentiles", "distinct_users",
-    "props_json_extract", "buffer_quality",
-    # (3) never-driver-checked remainder
-    "lang_id", "graph_2hop", "quality_score", "orders_cube",
-    "value_bands", "top_ngrams", "global_shuffle", "tpch_q4",
-    "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q12", "tpch_q13",
-    "tpch_q14", "tpch_q16", "tpch_q19", "tpch_q22",
-    # (4) stalest green (round-1 rows only)
-    "chunk_stats", "hierarchy_summary", "simhash", "vector_knn_of_item",
-    "orders_topk", "revenue_by_nation", "set_ops_customers",
-    "semi_join_late_orders", "anti_join_customers", "rollup_orders",
-    "tpch_q1", "tpch_q3",
-]
-
-_DRIVER_WINDOW_R5 = [
-    "prefix_filter_stats", "m2_facts_extractor", "media_resize_plan",
-    "media_frame_plan", "char_entropy", "ngram_novelty",
-    "routed_hybrid_3way", "bq_topk", "hybrid_text_query",
-    "sentence_chunks", "compaction_plan", "join_skew_report",
-    "split_leakage", "hybrid_batch", "bq_store_topk",
-    "hybrid_batch_3way", "index_compact", "mutual_knn",
-    "tokenizer_fertility", "embedding_outliers", "backfill_queue",
-    "graph_kcore", "ann_store_lifecycle", "spellfix_search",
-    "bm25_stream_index", "retriever_agreement", "corpus_manifest",
-    "rolling_anomaly", "signal_correlation", "forecast_error",
-    "scd2_snapshot", "more_like_this", "classifier_calibration",
-    "query_difficulty", "quota_topk", "ann_stream_store",
-    "train_classifier", "classifier_eval", "dup_clusters_inc",
-    "dedup_rate_by_source",
-    "tpch_q5", "tpch_q10", "tpch_q18", "hll_users",
-    "cms_heavy_hitters", "cdc_chunks", "prefix_filter_pairs",
-    "value_outliers_mad", "graph_triangles", "event_funnel",
-]
-
 
 def release_memo_stores(spark: SparkSession, sf_dir: str) -> int:
     """Free the executor memory held by the per-(session, sf) memoized

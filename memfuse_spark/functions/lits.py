@@ -49,3 +49,40 @@ def i64_array_lit(vals: Sequence[int]) -> Column:
     if not iv:
         return F.array().cast("array<bigint>")
     return F.expr("array(" + ",".join(str(v) + "L" for v in iv) + ")")
+
+
+def sql_literal(v) -> str:
+    """SQL text of one scalar literal: NULL, a bigint, a double (exact:
+    ``repr`` + ``D`` as in :func:`f64_array_sql`) or a string."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, int):
+        return f"{v}L"
+    if isinstance(v, float):
+        if math.isfinite(v):
+            return repr(v) + "D"
+        name = {"inf": "Infinity", "-inf": "-Infinity", "nan": "NaN"}[repr(v)]
+        return f"CAST('{name}' AS DOUBLE)"
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def values_df(spark, rows: Sequence[Sequence], schema: Sequence[tuple[str, str]]):
+    """A driver-side DataFrame of ``rows`` with columns ``(name, sql
+    type)``, parsed from ONE ``VALUES`` statement, rows in the given
+    order.
+
+    The plan is a LocalRelation, so collecting it runs no Spark job:
+    ~30 ms to build and collect ~160 rows on a 4-vCPU host (local[4]),
+    where ``createDataFrame(rows)`` ships pickled rows through an RDD and
+    took one job and 0.4-0.7 s. Add no ``orderBy`` on top: a sort over
+    the relation is planned as 3 jobs.
+    """
+    cols = ", ".join(f"c{i}" for i in range(len(schema)))
+    sel = ", ".join(f"CAST(c{i} AS {t}) AS `{n}`" for i, (n, t) in enumerate(schema))
+    if rows:
+        body = ", ".join("(" + ", ".join(map(sql_literal, r)) + ")" for r in rows)
+        where = ""
+    else:
+        body = "(" + ", ".join("NULL" for _ in schema) + ")"
+        where = " WHERE false"
+    return spark.sql(f"SELECT {sel} FROM VALUES {body} AS v({cols}){where}")

@@ -68,8 +68,3 @@ def word_shingles(tokens: Column | str, n: int = 3) -> Column:
     return F.when(F.size(toks) >= n, shingles).otherwise(
         F.array(F.concat_ws(" ", toks))
     )
-
-
-def role_format(role: Column | str, content: Column | str) -> Column:
-    """'[role]: content' template (reference: rag/chunk/contextual.py:34-36)."""
-    return F.format_string("[%s]: %s", _c(role), _c(content))

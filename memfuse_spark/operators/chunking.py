@@ -53,35 +53,6 @@ def token_estimate(content) -> F.Column:
     return F.greatest(F.lit(1), F.floor(F.length(c) / 4)).cast("int")
 
 
-def message_chunks(
-    messages: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    role_col: str = "role",
-    content_col: str = "content",
-    id_col: str = "message_id",
-) -> DataFrame:
-    """C1: one chunk per message group; '[role]: content' lines joined by
-    blank lines, members ordered; lineage array carried (J7 source).
-
-    One shuffle on the group key; the ordered concat is an array_sort of
-    collected structs — no window, no second shuffle.
-    """
-    ordered = F.array_sort(
-        F.collect_list(F.struct(*[F.col(c) for c in order_cols], F.col(role_col).alias("__role"), F.col(content_col).alias("__content"), F.col(id_col).alias("__id")))
-    )
-    lines = F.transform(
-        ordered, lambda s: F.format_string("[%s]: %s", s["__role"], s["__content"])
-    )
-    member_ids = F.transform(ordered, lambda s: s["__id"])
-    content = F.concat_ws("\n\n", lines)
-    return (
-        messages.groupBy(*group_cols)
-        .agg(content.alias("content"), member_ids.alias("m0_raw_ids"))
-        .withColumn("token_count", F.ceil(F.length("content") / 4).cast("int"))
-    )
-
-
 def fixed_char_chunks(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -33,9 +33,11 @@ def tag_store(df: DataFrame, store_type: str) -> DataFrame:
 
 
 def union_results(*stores: DataFrame) -> DataFrame:
-    """Multi-path union (U1). Branches stay one lazy plan — Spark runs
-    them as parallel stages of a single job (reference used
-    asyncio.gather, hybrid.py:251-322)."""
+    """Multi-path union (U1) as one lazy plan. Under AQE every branch's
+    exchange is a query stage of its own, started as its own job, and
+    the branches run one after another, not side by side (the
+    reference gathers them concurrently with asyncio.gather,
+    hybrid.py:251-322)."""
     out = stores[0]
     for s in stores[1:]:
         out = out.unionByName(s)
@@ -113,6 +115,50 @@ def rrf_fusion(
             ).alias("score")
         )
     )
+
+
+def order_key(row) -> tuple:
+    """Sort key of an ``(id, score)`` pair in Spark's ``score DESC, id
+    ASC`` order: NaN first (Spark's largest double), NULL scores last,
+    NULL ids first."""
+    i, s = row[0], row[1]
+    if s is None:
+        sk = (2, 0.0)
+    elif s != s:
+        sk = (0, 0.0)
+    else:
+        sk = (1, -s)
+    return sk + ((0, 0) if i is None else (1, i))
+
+
+def max_per_id(pairs) -> dict:
+    """``{id: max(score)}`` over ``(id, score)`` pairs, with Spark's
+    ``max``: NULL scores ignored, NaN the largest."""
+    best: dict = {}
+    for i, s in pairs:
+        if i not in best or order_key((i, s)) < order_key((i, best[i])):
+            best[i] = s
+    return best
+
+
+def rrf_scores(
+    branches: dict[str, list],
+    weights: dict[str, float] | None = None,
+    rrf_k: float = DEFAULT_RRF_K,
+) -> dict:
+    """Driver-side twin of :func:`rrf_fusion` before its rounding, for
+    k-row branches already collected: ``{id: Σ_s w_s / (k + rank_s)}``
+    over ``branches = {store_type: [(id, score), ...]}``. Ranks follow
+    :func:`order_key`; a store missing from ``weights`` adds 0. The
+    arithmetic is the plan's, term for term; round the sums with
+    Spark's ``round(…, 6)`` to get its scores."""
+    weights = weights or DEFAULT_WEIGHTS
+    sums: dict = {}
+    for store, rows in branches.items():
+        w = float(weights.get(store, 0.0))
+        for rank, row in enumerate(sorted(rows, key=order_key), 1):
+            sums[row[0]] = sums.get(row[0], 0.0) + w / (float(rrf_k) + rank)
+    return sums
 
 
 def dedup_by_priority(

@@ -1206,45 +1206,61 @@ def contextual_retrieval(
     k: int = 10,
     id_col: str = "vec_id",
     score_decimals: int = 6,
+    *,
+    similar: list | None = None,
 ) -> DataFrame:
     """U7 three-layer contextual retrieval (reference rag/retrieve/
     hybrid.py:166-249): (1) items similar to the query, (2) items
     connected to those, (3) connected items re-scored by similarity.
-    Returns (vec_id, score, layer) — one union, layer-tagged.
+    Returns (vec_id, score, layer) — one union, layer-tagged, ordered by
+    layer, score desc, id asc.
 
-    The layer intermediates are tiny (≤ k rows, ≤ degree·k rows) but
-    the plan references l1 three times and `connected` twice — without
-    materializing them, every reference re-evaluates its whole input
-    subtree, including the similarity-EDGE construction when `edges` is
-    a derived plan (build_similarity_edges = the block-pair kernel over
-    the full corpus). localCheckpoint pins the k-row results so the
-    corpus-scale inputs are each scanned exactly once.
+    Each layer is a k-row result collected to the driver once:
+    - layer 1 is ``similarity_topk(embeddings, qvec, k)``, or the
+      caller's already collected rows of exactly that call (``similar=``,
+      as the 3-way recall passes its vector branch);
+    - the arcs out of layer 1, ``edges.filter(src ∈ layer 1)``, are
+      collected with their weights rounded by Spark; the max per ``dst``
+      and the exclusion of layer 1 happen on the driver (rounding is
+      monotone, so this is ``round(max(weight))``);
+    - layer 3 is ``similarity_topk`` over the connected ids' embeddings.
+    So a call runs 2 Spark jobs (3 without ``similar=``), no
+    checkpoint, and each collect holds ≤ k rows, except the arcs: ≤ the
+    out-degree sum of the k layer-1 nodes. The result is a driver-side
+    relation (:func:`~memfuse_spark.functions.lits.values_df`): it
+    collects with no job and pins no cached block, so any number of
+    results stay valid at once. Ids take the embeddings' id type.
     """
+    from memfuse_spark.functions.lits import sql_literal, values_df
+    from memfuse_spark.operators.fusion import max_per_id, order_key
     from memfuse_spark.operators.similarity import similarity_topk
 
-    cache.begin("graph.contextual")
-    l1 = similarity_topk(embeddings, qvec, k, id_col=id_col).withColumn(
-        "layer", F.lit("similar")
+    if similar is None:
+        similar = similarity_topk(embeddings, qvec, k, id_col=id_col).collect()
+    l1 = sorted(((r[0], r[1]) for r in similar), key=order_key)
+    l1_ids = {i for i, _ in l1}
+    arcs = []
+    if l1_ids:
+        out = edges.filter(F.expr(f"src IN ({', '.join(map(sql_literal, l1_ids))})"))
+        arcs = out.select("dst", F.round("weight", score_decimals)).collect()
+    connected = sorted(
+        max_per_id((d, w) for d, w in arcs if d not in l1_ids).items(), key=order_key
     )
-    l1, _ = cache.tracked_local_checkpoint(l1, "graph.contextual")
-    connected = (
-        l1.select(F.col(id_col).alias("src"))
-        .join(edges, "src")
-        .select(F.col("dst").alias(id_col), F.col("weight").alias("score"))
-        .groupBy(id_col)
-        .agg(F.round(F.max("score"), score_decimals).alias("score"))
-        .join(l1.select(id_col), id_col, "left_anti")
-        .withColumn("layer", F.lit("connected"))
+    rescored = []
+    if connected:
+        ids = ", ".join(sql_literal(i) for i, _ in connected)
+        near = embeddings.filter(F.expr(f"`{id_col}` IN ({ids})"))
+        rescored = similarity_topk(near, qvec, k, id_col=id_col).collect()
+    rows = (
+        [(i, s, "connected") for i, s in connected]
+        + [(i, s, "similar") for i, s in l1]
+        + [(r[0], r[1], "similar_contextual") for r in rescored]
     )
-    connected, _ = cache.tracked_local_checkpoint(connected, "graph.contextual")
-    rescored = (
-        connected.select(id_col)
-        .join(embeddings, id_col)
-        .transform(lambda df: similarity_topk(df, qvec, k, id_col=id_col))
-        .withColumn("layer", F.lit("similar_contextual"))
-    )
-    return l1.unionByName(connected).unionByName(rescored).orderBy(
-        "layer", F.desc("score"), F.asc(id_col)
+    id_type = embeddings.schema[id_col].dataType.simpleString()
+    return values_df(
+        embeddings.sparkSession,
+        rows,
+        [(id_col, id_type), ("score", "double"), ("layer", "string")],
     )
 
 

@@ -26,14 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from memfuse_spark.functions.lits import f64_array_lit, f64_array_sql
-from memfuse_spark.functions.vector import cosine_similarity, dot, normalize
-
-
-def _query_vec_lit(qvec: Sequence[float]) -> Column:
-    # ONE parsed array literal, not dim× F.lit py4j round-trips —
-    # bit-identical values, ~50x cheaper construction (functions/lits).
-    return f64_array_lit(qvec)
+from memfuse_spark.functions.lits import f64_array_sql
+from memfuse_spark.functions.vector import cosine_similarity, dot
 
 
 def similarity_topk(
@@ -270,12 +264,6 @@ def pairwise_scores_blocked(
     return tagged.groupBy("__bi", "__bj").applyInPandas(
         score_pair, "id_a long, id_b long, score double"
     )
-
-
-def normalize_embeddings(items: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Pre-normalize vectors so cosine becomes a plain dot product
-    (reference: numpy_store.py:163-187 keeps a normalized matrix)."""
-    return items.withColumn(vec_col, normalize(vec_col))
 
 
 # ---------------------------------------------------------------------------

@@ -3,18 +3,36 @@
 Reproduces the reference's query lifecycle (SURVEY.md §3.2:
 `POST /users/{id}/query` → HybridRetrieval → fusion → hydration →
 rerank/top-k, memfuse `services/memory_service.py:1508-1820`,
-`rag/retrieve/hybrid.py:99-164`) as ONE lazy DataFrame expression:
+`rag/retrieve/hybrid.py:99-164`).
 
-    fuse(vector_topk, bm25_topk).join(documents).orderBy(score).limit(k)
+A single recall (:func:`hybrid_retrieval`, :func:`hybrid_retrieval_3way`)
+collects each retrieval branch's k-row result to the driver ONCE and
+reuses it there:
+
+    vector  = similarity_topk(embeddings, q, fsk).collect()   # also graph layer 1
+    keyword = bm25_topk_from_index(index, text, fsk).collect()
+    graph   = contextual_retrieval(..., similar=vector)       # 2 k-row collects
+    fused   = rrf_scores({vector, graph, keyword})            # driver arithmetic
+    return documents.filter(doc_id IN fused).orderBy(score).limit(k)
+
+so every branch runs exactly once, nothing is checkpointed or cached,
+and the returned DataFrame is one lazy job over the documents. Each
+collect holds ≤ fsk rows
+(the graph's arc collect ≤ the out-degree sum of fsk nodes); the RRF
+sums reach the final plan as one parsed ``map(id, sum, …)`` literal and
+are rounded there by Spark's own ``round(…, 6)``.
+
+The batch recalls keep the branches as one lazy plan keyed by
+``query_id``: their per-query windows amortize over the batch.
 
 Differences by design (SURVEY.md §4): tenant/type filters apply BEFORE
 top-k (the reference post-filters after top-k and can return < k rows —
-a known wart); ties are totally ordered.
+a known wart); ties are totally ordered (score desc, id asc).
 
 Scale shape: both retrieval branches are corpus scans producing k-row
 results (TakeOrderedAndProject / partial-agg top-k); fusion operates on
-k-scale data; hydration is a broadcast join of the k ids back to the
-documents table. Nothing here shuffles the corpus.
+k-scale data; hydration reads only the fused ids' documents. Nothing
+here shuffles the corpus.
 """
 
 from __future__ import annotations
@@ -24,14 +42,55 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from memfuse_spark.functions.lits import sql_literal
 from memfuse_spark.operators.fusion import (
     DEFAULT_RRF_K,
+    max_per_id,
+    order_key,
     rrf_fusion,
+    rrf_scores,
     tag_store,
     union_results,
 )
 from memfuse_spark.operators.keyword import bm25_topk, bm25_topk_from_index
 from memfuse_spark.operators.similarity import similarity_topk
+
+
+def _keyword_rows(
+    documents: DataFrame, query_text: str, fsk: int, postings_index: str | None
+) -> list:
+    """The keyword branch's ≤ fsk (doc_id, score) rows."""
+    if postings_index is not None:
+        kw = bm25_topk_from_index(documents.sparkSession, postings_index, query_text, fsk)
+    else:
+        kw = bm25_topk(documents, query_text, fsk)
+    return kw.collect()
+
+
+def _fuse_and_hydrate(
+    documents: DataFrame,
+    branches: dict[str, list],
+    weights: dict[str, float],
+    rrf_k: float,
+    k: int,
+) -> DataFrame:
+    """RRF over collected k-row branches on the driver, then ONE lazy
+    plan: the fused ids' documents with their sums rounded by Spark,
+    (doc_id, score, text) ordered by score desc, doc_id asc, top k."""
+    sums = {i: s for i, s in rrf_scores(branches, weights, rrf_k).items() if i is not None}
+    if sums:
+        ids = ", ".join(map(sql_literal, sums))
+        pairs = ", ".join(f"{sql_literal(i)}, {sql_literal(s)}" for i, s in sums.items())
+        keep = F.expr(f"doc_id IN ({ids})")
+        score = F.expr(f"round(element_at(map({pairs}), doc_id), 6)")
+    else:
+        keep, score = F.lit(False), F.lit(None).cast("double")
+    return (
+        documents.filter(keep)
+        .select("doc_id", score.alias("score"), "text")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
 
 
 def hybrid_retrieval(
@@ -50,33 +109,18 @@ def hybrid_retrieval(
     first_stage_k defaults to 2×k (reference memory_service.py:1553-1555).
     With `postings_index` set, the keyword branch scans the prebuilt
     term-bucketed index instead of re-tokenizing the corpus per query.
+    Both branches are collected (≤ fsk rows each) and fused on the
+    driver; the returned plan is the hydration job alone.
     Returns (doc_id, score, text) ordered by score desc, doc_id asc.
     """
     fsk = first_stage_k or 2 * k
-    vec = tag_store(
-        similarity_topk(embeddings, qvec, fsk, id_col="vec_id").withColumnRenamed(
-            "vec_id", "doc_id"
-        ),
-        "vector",
+    branches = {
+        "vector": similarity_topk(embeddings, qvec, fsk, id_col="vec_id").collect(),
+        "keyword": _keyword_rows(documents, query_text, fsk, postings_index),
+    }
+    return _fuse_and_hydrate(
+        documents, branches, weights or {"vector": 0.5, "keyword": 0.2}, rrf_k, k
     )
-    if postings_index is not None:
-        kw_raw = bm25_topk_from_index(
-            documents.sparkSession, postings_index, query_text, fsk
-        )
-    else:
-        kw_raw = bm25_topk(documents, query_text, fsk)
-    kw = tag_store(kw_raw, "keyword")
-    fused = rrf_fusion(
-        union_results(vec, kw),
-        weights=weights or {"vector": 0.5, "keyword": 0.2},
-        rrf_k=rrf_k,
-    )
-    # Broadcast the <=2*fsk-row fused result into the corpus-sized text
-    # lookup — never the reverse (documents is the 10B-row side at scale).
-    hydrated = documents.select("doc_id", "text").join(F.broadcast(fused), "doc_id")
-    return hydrated.select("doc_id", "score", "text").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    ).limit(k)
 
 
 def hybrid_retrieval_3way(
@@ -102,48 +146,31 @@ def hybrid_retrieval_3way(
     layers — a node surfaced by several layers counts once at its best
     evidence) and capped at `first_stage_k` like the other branches.
 
-    Scale shape: all three branches produce ≤ first_stage_k rows before
-    fusion — vector via TakeOrderedAndProject, keyword via the
-    postings-index bucket scan, graph via k-row layer intermediates
-    pinned with localCheckpoint (contextual_retrieval) — so the RRF
-    windows and the hydration broadcast join all run on k-scale data.
+    Driver design: the vector top-k is collected once and serves both
+    as the vector branch and as the graph's layer 1 (``similar=``); the
+    keyword top-k and the two graph layers are collected once each.
+    Every collect holds ≤ first_stage_k rows, except the graph's arc
+    collect, which holds ≤ the out-degree sum of first_stage_k nodes.
+    Fusion runs on the driver; the returned DataFrame is the one lazy
+    hydration job. With a prebuilt postings index a recall runs 7 Spark
+    jobs in all (vector 1, keyword 3, graph 2, hydration 1) and no
+    checkpoint.
     """
     from memfuse_spark.operators.graph import contextual_retrieval
 
     fsk = first_stage_k or 2 * k
-    vec = tag_store(
-        similarity_topk(embeddings, qvec, fsk, id_col="vec_id").withColumnRenamed(
-            "vec_id", "doc_id"
-        ),
-        "vector",
+    vec = similarity_topk(embeddings, qvec, fsk, id_col="vec_id").collect()
+    kw = _keyword_rows(documents, query_text, fsk, postings_index)
+    gctx = contextual_retrieval(embeddings, edges, qvec, k=fsk, similar=vec).collect()
+    best = max_per_id((r[0], r[1]) for r in gctx)
+    graph = sorted(best.items(), key=order_key)[:fsk]
+    return _fuse_and_hydrate(
+        documents,
+        {"vector": vec, "graph": graph, "keyword": kw},
+        weights or {"vector": 0.5, "graph": 0.3, "keyword": 0.2},
+        rrf_k,
+        k,
     )
-    if postings_index is not None:
-        kw_raw = bm25_topk_from_index(
-            documents.sparkSession, postings_index, query_text, fsk
-        )
-    else:
-        kw_raw = bm25_topk(documents, query_text, fsk)
-    kw = tag_store(kw_raw, "keyword")
-    gctx = contextual_retrieval(embeddings, edges, qvec, k=fsk)
-    graph = tag_store(
-        gctx.groupBy("vec_id")
-        .agg(F.max("score").alias("score"))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(fsk)
-        .withColumnRenamed("vec_id", "doc_id"),
-        "graph",
-    )
-    fused = rrf_fusion(
-        union_results(vec, graph, kw),
-        weights=weights or {"vector": 0.5, "graph": 0.3, "keyword": 0.2},
-        rrf_k=rrf_k,
-    )
-    # Broadcast the <=2*fsk-row fused result into the corpus-sized text
-    # lookup — never the reverse (documents is the 10B-row side at scale).
-    hydrated = documents.select("doc_id", "text").join(F.broadcast(fused), "doc_id")
-    return hydrated.select("doc_id", "score", "text").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    ).limit(k)
 
 
 def anchor_vector(spark: SparkSession, embeddings: DataFrame, vec_id: int = 0) -> list[float]:

@@ -483,3 +483,52 @@ def test_knn_store_crashed_append_invisible_and_retry_clean(
     g.compact_knn_store(spark, p)
     assert _edge_rows(g.knn_store_edges(spark, p)) == want
     assert g.knn_store_vecs(spark, p).count() == inc_emb.count()
+
+
+def _recall_fixture(spark, tables):
+    import __spark_entry__ as m
+    from memfuse_spark.plans.pipeline import anchor_vector
+    from tests.conftest import SF_DIR
+
+    emb, edges = m._graph_edges(spark, SF_DIR)
+    qvecs = [anchor_vector(spark, emb, i) for i in (0, 1, 2)]
+    return emb, edges, tables["documents"], m._postings_index(spark, SF_DIR), qvecs
+
+
+def test_recall_results_survive_later_recalls(spark, tables):
+    """A recall's result stays collectable after two more recalls were
+    built. When the graph layers were localCheckpoints kept for one
+    prior generation per scope, the third call released the first
+    result's blocks and its collect failed with a Py4JJavaError."""
+    from memfuse_spark.plans.pipeline import hybrid_retrieval_3way
+
+    emb, edges, docs, idx, (q0, q1, q2) = _recall_fixture(spark, tables)
+
+    a = g.contextual_retrieval(emb, edges, q0, k=10)
+    for q in (q1, q2):
+        g.contextual_retrieval(emb, edges, q, k=10)
+    got = a.collect()
+    assert got == g.contextual_retrieval(emb, edges, q0, k=10).collect()
+    assert {r.layer for r in got} == {"similar", "connected", "similar_contextual"}
+
+    def recall(q):
+        return hybrid_retrieval_3way(
+            docs, emb, edges, "spark table scan query", q, k=10, postings_index=idx
+        )
+
+    a = recall(q0)
+    for q in (q1, q2):
+        recall(q)
+    got = a.collect()
+    assert got == recall(q0).collect()
+    assert len(got) == 10
+
+
+def test_recall_output_schemas_unchanged(spark, tables):
+    from memfuse_spark.plans.pipeline import hybrid_retrieval_3way
+
+    emb, edges, docs, idx, (q0, _, _) = _recall_fixture(spark, tables)
+    ctx = g.contextual_retrieval(emb, edges, q0, k=10)
+    assert ctx.dtypes == [("vec_id", "bigint"), ("score", "double"), ("layer", "string")]
+    rec = hybrid_retrieval_3way(docs, emb, edges, "spark query", q0, k=10, postings_index=idx)
+    assert rec.dtypes == [("doc_id", "bigint"), ("score", "double"), ("text", "string")]

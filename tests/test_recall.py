@@ -1,0 +1,158 @@
+"""The single recall (pipeline.hybrid_retrieval / hybrid_retrieval_3way):
+exact rows on degenerate inputs over a hand-built fixture, the
+driver-side RRF against the Spark plan, and a job-count guard."""
+
+from __future__ import annotations
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from memfuse_spark.operators import graph as g
+from memfuse_spark.operators.fusion import rrf_fusion
+from memfuse_spark.plans.pipeline import (
+    _fuse_and_hydrate,
+    hybrid_retrieval,
+    hybrid_retrieval_3way,
+)
+
+DOCS = [
+    (1, "apple banana"),
+    (2, "banana cherry"),
+    (3, "cherry date"),
+    (4, "apple apple"),
+    (5, "elder"),
+]
+# cosine with q=[1, 0]: 1 → 1.0, 2 → 0.8, 3 → 0.0, 4 → -1.0, 5 → 0.6
+VECS = [(1, [1.0, 0.0]), (2, [0.8, 0.6]), (3, [0.0, 1.0]), (4, [-1.0, 0.0]), (5, [0.6, -0.8])]
+# node 5 has no out-edges
+EDGES = [
+    (1, 3, 0.9, "SIMILAR_TO"),
+    (1, 4, 0.25, "SIMILAR_TO"),
+    (2, 4, 0.5, "SIMILAR_TO"),
+    (3, 5, 0.7, "SIMILAR_TO"),
+]
+W3 = {"vector": 0.5, "graph": 0.3, "keyword": 0.2}
+
+
+@pytest.fixture(scope="module")
+def fx(spark):
+    docs = spark.createDataFrame(DOCS, "doc_id bigint, text string")
+    emb = spark.createDataFrame(VECS, "vec_id bigint, embedding array<double>")
+    edges = spark.createDataFrame(
+        EDGES, "src bigint, dst bigint, weight double, relation string"
+    )
+    return docs, emb, edges
+
+
+def _rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
+def test_no_vocabulary_term_leaves_keyword_branch_empty(fx):
+    docs, emb, edges = fx
+    # vector [1, 2]; graph max over layers {1: 1.0, 3: 0.9, 2: 0.8, 4: 0.5}
+    # capped at 2 → [1, 3]; keyword []. RRF at k=60:
+    # 1 = 0.5/61 + 0.3/61, 2 = 0.5/62, 3 = 0.3/62
+    got = hybrid_retrieval_3way(
+        docs, emb, edges, "zebra", [1.0, 0.0], k=5, first_stage_k=2, weights=W3
+    )
+    assert _rows(got) == [
+        (1, 0.013115, "apple banana"),
+        (2, 0.008065, "banana cherry"),
+        (3, 0.004839, "cherry date"),
+    ]
+    two_way = hybrid_retrieval(docs, emb, "zebra", [1.0, 0.0], k=5, first_stage_k=2)
+    assert _rows(two_way) == [(1, 0.008197, "apple banana"), (2, 0.008065, "banana cherry")]
+
+
+def test_zero_query_vector_orders_ties_by_id(fx):
+    docs, emb, edges = fx
+    ctx = g.contextual_retrieval(emb, edges, [0.0, 0.0], k=2)
+    assert _rows(ctx) == [
+        (3, 0.9, "connected"),
+        (4, 0.5, "connected"),
+        (1, 0.0, "similar"),
+        (2, 0.0, "similar"),
+        (3, 0.0, "similar_contextual"),
+        (4, 0.0, "similar_contextual"),
+    ]
+    # vector [1, 2] (all cosines 0); graph [3 (0.9), 4 (0.5)];
+    # keyword [5] ("elder" occurs in doc 5 only)
+    got = hybrid_retrieval_3way(
+        docs, emb, edges, "elder", [0.0, 0.0], k=5, first_stage_k=2, weights=W3
+    )
+    assert _rows(got) == [
+        (1, 0.008197, "apple banana"),
+        (2, 0.008065, "banana cherry"),
+        (3, 0.004918, "cherry date"),
+        (4, 0.004839, "apple apple"),
+        (5, 0.003279, "elder"),
+    ]
+
+
+def test_layer_one_without_out_edges(fx):
+    docs, emb, edges = fx
+    # q=[0, -1]: node 5 (cosine 0.8) is layer 1 and has no out-edges
+    ctx = g.contextual_retrieval(emb, edges, [0.0, -1.0], k=1)
+    assert _rows(ctx) == [(5, 0.8, "similar")]
+    got = hybrid_retrieval_3way(
+        docs, emb, edges, "zebra", [0.0, -1.0], k=2, first_stage_k=1, weights=W3
+    )
+    assert _rows(got) == [(5, 0.013115, "elder")]
+
+
+_ids = st.integers(min_value=0, max_value=12)
+_scores = st.one_of(st.none(), st.sampled_from([-0.5, 0.0, 0.25, 0.5, 1.0]))
+_branch = st.dictionaries(_ids, _scores, max_size=8)
+
+
+@given(st.fixed_dictionaries({"vector": _branch, "graph": _branch, "keyword": _branch}))
+@settings(max_examples=25, deadline=None)
+def test_driver_rrf_matches_spark_rrf(spark, branches):
+    """On tied branch lists (scores drawn from a handful of values, NULLs
+    included), the driver-side sums rounded by Spark equal rrf_fusion's
+    scores for every fused id."""
+    rows = [
+        (i, s, store) for store, b in branches.items() for i, s in b.items()
+    ]
+    want = {}
+    if rows:
+        union = spark.createDataFrame(rows, "doc_id bigint, score double, store_type string")
+        want = {r.doc_id: r.score for r in rrf_fusion(union, W3, rrf_k=60.0).collect()}
+    docs = spark.createDataFrame([(i, str(i)) for i in range(13)], "doc_id bigint, text string")
+    got = _fuse_and_hydrate(
+        docs, {s: list(b.items()) for s, b in branches.items()}, W3, 60.0, k=20
+    ).collect()
+    assert {r.doc_id: r.score for r in got} == want
+    keys = [(-r.score, r.doc_id) for r in got]
+    assert keys == sorted(keys)
+
+
+def test_recall_job_budget_and_no_cached_blocks(spark, tables):
+    """One 3-way recall on the prebuilt index and edge store runs at most
+    7 Spark jobs and leaves no persisted RDD behind: a regression to
+    lazily re-planned branches or to checkpointed layers fails here."""
+    import __spark_entry__ as m
+    from memfuse_spark.plans.pipeline import anchor_vector
+    from tests.conftest import SF_DIR
+
+    emb, edges = m._graph_edges(spark, SF_DIR)
+    idx = m._postings_index(spark, SF_DIR)
+    qvec = anchor_vector(spark, emb, 0)
+    docs = tables["documents"]
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    sc.setJobGroup("test-recall-job-budget", "one hybrid_retrieval_3way recall")
+    try:
+        rows = hybrid_retrieval_3way(
+            docs, emb, edges, "spark table scan query", qvec, k=15,
+            first_stage_k=30, postings_index=idx,
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 15
+    jobs = sc.statusTracker().getJobIdsForGroup("test-recall-job-budget")
+    assert 0 < len(jobs) <= 7
+    assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) <= before
