@@ -1199,6 +1199,78 @@ FROM e{rounds} GROUP BY src ORDER BY node
     )
 
 
+def contextual_layers(
+    embeddings: DataFrame,
+    edges: DataFrame,
+    qvecs: dict,
+    similar: dict,
+    k: int,
+    id_col: str = "vec_id",
+    score_decimals: int = 6,
+) -> dict:
+    """U7's three layers for a batch of queries, computed on the driver
+    from each query's collected layer 1: ``{qid: [(id, score, layer),
+    ...]}`` with the connected layer first, then the similar layer, then
+    the rescored connected ids (``similar_contextual``), each ordered by
+    score desc, id asc.
+
+    ``qvecs`` maps each query id to its literal query vector, ``similar``
+    to its layer-1 rows: ``similarity_topk(embeddings, qvec, k)``
+    collected, or the same rows from a batch similarity join. Whatever
+    the batch size, this runs 2 Spark jobs and checkpoints nothing:
+    - the arcs out of the union of the layer-1 ids, their weights
+      rounded by Spark; per query, the max per ``dst`` and the exclusion
+      of its own layer 1 happen on the driver (rounding is monotone, so
+      this is ``round(max(weight))``);
+    - the union of the connected ids, each scored against the queries
+      it is connected to with
+      :func:`~memfuse_spark.operators.similarity.literal_score` (the
+      expression ``similarity_topk`` scores with) and rounded by Spark;
+      each query keeps its own connected ids' top k on the driver.
+    Both collects hold ≤ the out-degree sum of the union of the layer-1
+    ids, the rescore with one score column per query.
+    """
+    from memfuse_spark.functions.lits import sql_literal
+    from memfuse_spark.operators.fusion import max_per_id, order_key
+    from memfuse_spark.operators.similarity import literal_score
+
+    def among(col: str, ids):
+        return F.expr(f"`{col}` IN ({', '.join(map(sql_literal, ids))})")
+
+    l1 = {q: sorted(((r[0], r[1]) for r in rows), key=order_key) for q, rows in similar.items()}
+    srcs = {i for rows in l1.values() for i, _ in rows}
+    out_of: dict = {}
+    if srcs:
+        out = edges.filter(among("src", srcs))
+        for s, d, w in out.select("src", "dst", F.round("weight", score_decimals)).collect():
+            out_of.setdefault(s, []).append((d, w))
+    connected = {}
+    for q, rows in l1.items():
+        ids = {i for i, _ in rows}
+        arcs = ((d, w) for i in ids for d, w in out_of.get(i, ()) if d not in ids)
+        connected[q] = sorted(max_per_id(arcs).items(), key=order_key)
+    rescored: dict = {q: [] for q in l1}
+    qs = [q for q in l1 if connected[q]]
+    if qs:
+        mine = [{i for i, _ in connected[q]} for q in qs]
+        scores = [
+            F.when(among(id_col, ids), F.round(literal_score(qvecs[q]), score_decimals))
+            .alias(f"q{n}")
+            for n, (q, ids) in enumerate(zip(qs, mine))
+        ]
+        near = embeddings.filter(among(id_col, set().union(*mine)))
+        got = near.select(id_col, *scores).collect()
+        for n, (q, ids) in enumerate(zip(qs, mine), 1):
+            rows = ((r[0], r[n]) for r in got if r[0] in ids)
+            rescored[q] = sorted(rows, key=order_key)[:k]
+    return {
+        q: [(i, s, "connected") for i, s in connected[q]]
+        + [(i, s, "similar") for i, s in l1[q]]
+        + [(i, s, "similar_contextual") for i, s in rescored[q]]
+        for q in l1
+    }
+
+
 def contextual_retrieval(
     embeddings: DataFrame,
     edges: DataFrame,
@@ -1215,47 +1287,25 @@ def contextual_retrieval(
     Returns (vec_id, score, layer) — one union, layer-tagged, ordered by
     layer, score desc, id asc.
 
-    Each layer is a k-row result collected to the driver once:
-    - layer 1 is ``similarity_topk(embeddings, qvec, k)``, or the
-      caller's already collected rows of exactly that call (``similar=``,
-      as the 3-way recall passes its vector branch);
-    - the arcs out of layer 1, ``edges.filter(src ∈ layer 1)``, are
-      collected with their weights rounded by Spark; the max per ``dst``
-      and the exclusion of layer 1 happen on the driver (rounding is
-      monotone, so this is ``round(max(weight))``);
-    - layer 3 is ``similarity_topk`` over the connected ids' embeddings.
-    So a call runs 2 Spark jobs (3 without ``similar=``), no
-    checkpoint, and each collect holds ≤ k rows, except the arcs: ≤ the
-    out-degree sum of the k layer-1 nodes. The result is a driver-side
-    relation (:func:`~memfuse_spark.functions.lits.values_df`): it
-    collects with no job and pins no cached block, so any number of
+    The one-query case of :func:`contextual_layers`. Layer 1 is
+    ``similarity_topk(embeddings, qvec, k)`` collected, or the caller's
+    already collected rows of exactly that call (``similar=``, as the
+    3-way recall passes its vector branch). So a call runs 2 Spark jobs
+    (3 without ``similar=``), no checkpoint, and each collect holds ≤ k
+    rows, except the arcs and the rescore: ≤ the out-degree sum of the
+    k layer-1 nodes. ``qvec`` is a literal vector. The result is a
+    driver-side relation (:func:`~memfuse_spark.functions.lits.values_df`):
+    it collects with no job and pins no cached block, so any number of
     results stay valid at once. Ids take the embeddings' id type.
     """
-    from memfuse_spark.functions.lits import sql_literal, values_df
-    from memfuse_spark.operators.fusion import max_per_id, order_key
+    from memfuse_spark.functions.lits import values_df
     from memfuse_spark.operators.similarity import similarity_topk
 
     if similar is None:
         similar = similarity_topk(embeddings, qvec, k, id_col=id_col).collect()
-    l1 = sorted(((r[0], r[1]) for r in similar), key=order_key)
-    l1_ids = {i for i, _ in l1}
-    arcs = []
-    if l1_ids:
-        out = edges.filter(F.expr(f"src IN ({', '.join(map(sql_literal, l1_ids))})"))
-        arcs = out.select("dst", F.round("weight", score_decimals)).collect()
-    connected = sorted(
-        max_per_id((d, w) for d, w in arcs if d not in l1_ids).items(), key=order_key
-    )
-    rescored = []
-    if connected:
-        ids = ", ".join(sql_literal(i) for i, _ in connected)
-        near = embeddings.filter(F.expr(f"`{id_col}` IN ({ids})"))
-        rescored = similarity_topk(near, qvec, k, id_col=id_col).collect()
-    rows = (
-        [(i, s, "connected") for i, s in connected]
-        + [(i, s, "similar") for i, s in l1]
-        + [(r[0], r[1], "similar_contextual") for r in rescored]
-    )
+    rows = contextual_layers(
+        embeddings, edges, {0: qvec}, {0: similar}, k, id_col, score_decimals
+    )[0]
     id_type = embeddings.schema[id_col].dataType.simpleString()
     return values_df(
         embeddings.sparkSession,

@@ -30,6 +30,44 @@ from memfuse_spark.functions.lits import f64_array_sql
 from memfuse_spark.functions.vector import cosine_similarity, dot
 
 
+def literal_score(
+    qvec: Sequence[float], vec_col: str = "embedding", metric: str = "cosine"
+) -> Column:
+    """The unrounded score of each row's ``vec_col`` against a literal
+    query vector, as ONE parsed expression. :func:`similarity_topk` and
+    the graph layer's rescore (``graph.contextual_layers``) both score
+    with it, so their scores are bit-identical."""
+    # the query's norm is folded on the driver once (same sequential
+    # float64 fold the expression would do), so the plan does 2 array
+    # folds per row instead of 4. The whole guarded score is ONE parsed
+    # expression (r11): the Column-API form of the same tree cost
+    # ~180 ms of py4j round-trips per query construction at dim 64.
+    from memfuse_spark.functions.vector import _dot_sql
+
+    qsql = f64_array_sql([float(x) for x in qvec])
+    vsql = f"`{vec_col}`"
+    if metric == "dot":
+        return dot(vsql, qsql)
+    if metric != "cosine":
+        raise ValueError(f"unknown metric: {metric}")
+    import math
+
+    qn = 0.0
+    for x in qvec:
+        qn += float(x) * float(x)
+    # math.sqrt, not **0.5: pow can differ from SQRT by 1 ulp, and the
+    # Spark expression side uses SQRT (hypothesis-found)
+    qn = math.sqrt(qn)
+    if qn == 0.0:
+        return F.lit(0.0)
+    nv = f"sqrt({_dot_sql(vsql, vsql)})"
+    return F.expr(
+        f"case when {nv} > 0 then"
+        f" {_dot_sql(vsql, qsql)} / ({nv} * {qn!r}D)"
+        f" else 0.0D end"
+    )
+
+
 def similarity_topk(
     items: DataFrame,
     qvec: Sequence[float] | Column,
@@ -54,38 +92,7 @@ def similarity_topk(
         else:
             raise ValueError(f"unknown metric: {metric}")
     else:
-        # literal query vector: fold its norm on the driver once (same
-        # sequential float64 fold the expression would do), so the plan
-        # does 2 array folds per row instead of 4. The whole guarded
-        # score is ONE parsed expression (r11): the Column-API form of
-        # the same tree cost ~180 ms of py4j round-trips per query
-        # construction at dim 64.
-        from memfuse_spark.functions.vector import _dot_sql
-
-        qsql = f64_array_sql([float(x) for x in qvec])
-        vsql = f"`{vec_col}`"
-        if metric == "cosine":
-            import math
-
-            qn = 0.0
-            for x in qvec:
-                qn += float(x) * float(x)
-            # math.sqrt, not **0.5: pow can differ from SQRT by 1 ulp,
-            # and the Spark expression side uses SQRT (hypothesis-found)
-            qn = math.sqrt(qn)
-            if qn == 0.0:
-                score = F.lit(0.0)
-            else:
-                nv = f"sqrt({_dot_sql(vsql, vsql)})"
-                score = F.expr(
-                    f"case when {nv} > 0 then"
-                    f" {_dot_sql(vsql, qsql)} / ({nv} * {qn!r}D)"
-                    f" else 0.0D end"
-                )
-        elif metric == "dot":
-            score = dot(vsql, qsql)
-        else:
-            raise ValueError(f"unknown metric: {metric}")
+        score = literal_score(qvec, vec_col, metric)
     if score_decimals is not None:
         score = F.round(score, score_decimals)
     out = items.select(F.col(id_col), score.alias("score"))

@@ -11,19 +11,30 @@ reuses it there:
 
     vector  = similarity_topk(embeddings, q, fsk).collect()   # also graph layer 1
     keyword = bm25_topk_from_index(index, text, fsk).collect()
-    graph   = contextual_retrieval(..., similar=vector)       # 2 k-row collects
+    graph   = contextual_retrieval(..., similar=vector)       # 2 collects
     fused   = rrf_scores({vector, graph, keyword})            # driver arithmetic
     return documents.filter(doc_id IN fused).orderBy(score).limit(k)
 
 so every branch runs exactly once, nothing is checkpointed or cached,
 and the returned DataFrame is one lazy job over the documents. Each
-collect holds ≤ fsk rows
-(the graph's arc collect ≤ the out-degree sum of fsk nodes); the RRF
-sums reach the final plan as one parsed ``map(id, sum, …)`` literal and
-are rounded there by Spark's own ``round(…, 6)``.
+collect holds ≤ fsk rows (the graph's arc and rescore collects ≤ the
+out-degree sum of fsk nodes); the RRF sums reach the final plan as one
+parsed ``map(id, sum, …)`` literal and are rounded there by Spark's own
+``round(…, 6)``.
 
-The batch recalls keep the branches as one lazy plan keyed by
-``query_id``: their per-query windows amortize over the batch.
+A batch recall (:func:`hybrid_batch_retrieval`,
+:func:`hybrid_batch_retrieval_3way`) is the same recall for many
+queries, sharing one scan per layer:
+
+    vector  = similarity_join(qvecs, embeddings, fsk).collect()     # by query_id
+    keyword = bm25_batch_topk_from_index(index, texts, fsk).collect()
+    graph   = contextual_layers(..., similar=vector)  # 2 collects, any batch size
+    fused   = {q: rrf_scores({vector[q], graph[q], keyword[q]})}
+    return VALUES(q, id, sum) → round(…, 6) → per-query top-k ⋈ documents
+
+The vector and keyword collects each hold ≤ queries × fsk rows; the
+graph's arc and rescore collects ≤ the out-degree sum of the union of
+the layer-1 ids. Nothing is checkpointed or cached either.
 
 Differences by design (SURVEY.md §4): tenant/type filters apply BEFORE
 top-k (the reference post-filters after top-k and can return < k rows —
@@ -47,11 +58,10 @@ from memfuse_spark.operators.fusion import (
     DEFAULT_RRF_K,
     max_per_id,
     order_key,
-    rrf_fusion,
     rrf_scores,
-    tag_store,
-    union_results,
 )
+# not called here: perfbench --trace 1 wraps these names in this module
+from memfuse_spark.operators.fusion import rrf_fusion, tag_store, union_results  # noqa: F401
 from memfuse_spark.operators.keyword import bm25_topk, bm25_topk_from_index
 from memfuse_spark.operators.similarity import similarity_topk
 
@@ -67,16 +77,26 @@ def _keyword_rows(
     return kw.collect()
 
 
+def _graph_branch(layers, fsk: int) -> list:
+    """The graph branch from one query's contextual layers: one score
+    per node (max over layers — a node surfaced by several layers counts
+    once at its best evidence), top fsk by score desc, id asc."""
+    best = max_per_id((r[0], r[1]) for r in layers)
+    return sorted(best.items(), key=order_key)[:fsk]
+
+
 def _fuse_and_hydrate(
     documents: DataFrame,
     branches: dict[str, list],
     weights: dict[str, float],
     rrf_k: float,
     k: int,
+    cols: Sequence[str] = ("doc_id", "score", "text"),
 ) -> DataFrame:
     """RRF over collected k-row branches on the driver, then ONE lazy
     plan: the fused ids' documents with their sums rounded by Spark,
-    (doc_id, score, text) ordered by score desc, doc_id asc, top k."""
+    ``cols`` of ``documents`` (``score`` the fused one) ordered by score
+    desc, doc_id asc, top k."""
     sums = {i: s for i, s in rrf_scores(branches, weights, rrf_k).items() if i is not None}
     if sums:
         ids = ", ".join(map(sql_literal, sums))
@@ -87,7 +107,7 @@ def _fuse_and_hydrate(
         keep, score = F.lit(False), F.lit(None).cast("double")
     return (
         documents.filter(keep)
-        .select("doc_id", score.alias("score"), "text")
+        .select(*[score.alias("score") if c == "score" else c for c in cols])
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -149,8 +169,9 @@ def hybrid_retrieval_3way(
     Driver design: the vector top-k is collected once and serves both
     as the vector branch and as the graph's layer 1 (``similar=``); the
     keyword top-k and the two graph layers are collected once each.
-    Every collect holds ≤ first_stage_k rows, except the graph's arc
-    collect, which holds ≤ the out-degree sum of first_stage_k nodes.
+    Every collect holds ≤ first_stage_k rows, except the graph's arc and
+    rescore collects, which hold ≤ the out-degree sum of first_stage_k
+    nodes.
     Fusion runs on the driver; the returned DataFrame is the one lazy
     hydration job. With a prebuilt postings index a recall runs 7 Spark
     jobs in all (vector 1, keyword 3, graph 2, hydration 1) and no
@@ -162,11 +183,9 @@ def hybrid_retrieval_3way(
     vec = similarity_topk(embeddings, qvec, fsk, id_col="vec_id").collect()
     kw = _keyword_rows(documents, query_text, fsk, postings_index)
     gctx = contextual_retrieval(embeddings, edges, qvec, k=fsk, similar=vec).collect()
-    best = max_per_id((r[0], r[1]) for r in gctx)
-    graph = sorted(best.items(), key=order_key)[:fsk]
     return _fuse_and_hydrate(
         documents,
-        {"vector": vec, "graph": graph, "keyword": kw},
+        {"vector": vec, "graph": _graph_branch(gctx, fsk), "keyword": kw},
         weights or {"vector": 0.5, "graph": 0.3, "keyword": 0.2},
         rrf_k,
         k,
@@ -180,6 +199,62 @@ def anchor_vector(spark: SparkSession, embeddings: DataFrame, vec_id: int = 0) -
     return list(row["embedding"])
 
 
+def _batch_branches(
+    embeddings: DataFrame,
+    queries: dict[int, tuple[str, Sequence[float]]],
+    fsk: int,
+    postings_index: str | None,
+) -> tuple[dict, dict]:
+    """A batch's vector and keyword branches, ``{query_id: [(id,
+    score), ...]}`` each: ONE similarity join and ONE postings scan
+    serve every query, each collected once (≤ queries × fsk rows)."""
+    from memfuse_spark.operators.keyword import bm25_batch_topk_from_index
+    from memfuse_spark.operators.similarity import similarity_join
+
+    if postings_index is None:
+        raise ValueError("the batch recalls need a prebuilt postings index")
+    spark = embeddings.sparkSession
+    qvecs = spark.createDataFrame(
+        [(qid, list(map(float, vec))) for qid, (_, vec) in sorted(queries.items())],
+        "query_id int, qvec array<double>",
+    )
+    texts = {qid: t for qid, (t, _) in queries.items()}
+    vec, kw = {q: [] for q in queries}, {q: [] for q in queries}
+    for q, i, s in similarity_join(qvecs, embeddings, fsk, id_col="vec_id").collect():
+        vec[q].append((i, s))
+    for q, i, s in bm25_batch_topk_from_index(spark, postings_index, texts, fsk).collect():
+        kw[q].append((i, s))
+    return vec, kw
+
+
+def _hydrate_batch(documents: DataFrame, sums: dict[int, dict], k: int) -> DataFrame:
+    """ONE lazy plan over the per-query RRF sums, in the batch oracles'
+    order: round the sums with Spark's ``round(…, 6)``, keep each
+    query's top k (score desc, doc_id asc), then join the documents.
+    Returns (query_id, doc_id, score, text) ordered by query_id, score
+    desc, doc_id asc."""
+    from pyspark.sql import Window
+
+    from memfuse_spark.functions.lits import values_df
+
+    id_type = documents.schema["doc_id"].dataType.simpleString()
+    fused = values_df(
+        documents.sparkSession,
+        [(q, i, s) for q, by_id in sums.items() for i, s in by_id.items()],
+        [("query_id", "int"), ("doc_id", id_type), ("rrf", "double")],
+    ).select("query_id", "doc_id", F.round("rrf", 6).alias("score"))
+    topk_w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    top = fused.withColumn("__r", F.row_number().over(topk_w)).filter(F.col("__r") <= k)
+    return (
+        # broadcast the (queries x k)-row top-k into the corpus-sized
+        # text lookup — never the reverse
+        documents.select("doc_id", "text")
+        .join(F.broadcast(top), "doc_id")
+        .select("query_id", "doc_id", "score", "text")
+        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+    )
+
+
 def hybrid_batch_retrieval(
     documents: DataFrame,
     embeddings: DataFrame,
@@ -190,75 +265,24 @@ def hybrid_batch_retrieval(
     rrf_k: float = DEFAULT_RRF_K,
     postings_index: str | None = None,
 ) -> DataFrame:
-    """(query_id, doc_id, score, text) — the flagship fusion for a
-    BATCH of queries in one job: ONE corpus scan scores every query
-    vector (broadcast similarity join), ONE bucket-pruned index scan
-    serves every keyword query, then RRF/hydration windows keyed by
-    (query_id, …) fan the per-query results out. N queries ≈ the cost
-    of one — the amortization a retrieval SERVICE actually lives on
-    (the reference gathers per-query asyncio tasks; here batching is a
-    plan property, reference services/memory_service.py:1508-1820).
+    """(query_id, doc_id, score, text) — the 2-way recall for a BATCH
+    of queries: ONE corpus scan scores every query vector (broadcast
+    similarity join) and ONE bucket-pruned index scan serves every
+    keyword query; both are collected once, each query is fused on the
+    driver exactly as :func:`hybrid_retrieval` fuses it, and the
+    returned DataFrame is one hydration plan for all queries. N queries
+    share one scan per branch — the amortization a retrieval SERVICE
+    lives on (the reference gathers per-query asyncio tasks, reference
+    services/memory_service.py:1508-1820). Needs ``postings_index``
+    (``ValueError`` without it).
     """
-    from pyspark.sql import Window
-
-    from memfuse_spark.operators.keyword import bm25_batch_topk_from_index
-    from memfuse_spark.operators.similarity import similarity_join
-
-    spark = documents.sparkSession
     fsk = first_stage_k or 2 * k
     weights = weights or {"vector": 0.5, "keyword": 0.2}
-    qvecs = spark.createDataFrame(
-        [(qid, list(map(float, vec))) for qid, (_, vec) in sorted(queries.items())],
-        "query_id int, qvec array<double>",
-    )
-    vec = tag_store(
-        similarity_join(qvecs, embeddings, fsk, id_col="vec_id")
-        .withColumnRenamed("vec_id", "doc_id"),
-        "vector",
-    )
-    assert postings_index is not None, "batch path requires the prebuilt index"
-    kw = tag_store(
-        bm25_batch_topk_from_index(
-            spark, postings_index, {qid: t for qid, (t, _) in queries.items()}, fsk
-        ),
-        "keyword",
-    )
-    unioned = union_results(vec, kw)
-    rank_w = Window.partitionBy("query_id", "store_type").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    wcol = None
-    for store, wt in weights.items():
-        c = F.when(F.col("store_type") == store, F.lit(float(wt)))
-        wcol = c if wcol is None else wcol.when(
-            F.col("store_type") == store, F.lit(float(wt))
-        )
-    fused = (
-        unioned.withColumn("rnk", F.row_number().over(rank_w))
-        .withColumn("__w", F.coalesce(wcol, F.lit(0.0)))
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("__w") / (F.lit(float(rrf_k)) + F.col("rnk"))), 6
-            ).alias("score")
-        )
-    )
-    topk_w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        # broadcast the (queries x k)-row top-k into the corpus-sized
-        # text lookup — never the reverse
-        documents.select("doc_id", "text")
-        .join(
-            F.broadcast(
-                fused.withColumn("__r", F.row_number().over(topk_w)).filter(
-                    F.col("__r") <= k
-                )
-            ),
-            "doc_id",
-        )
-        .select("query_id", "doc_id", "score", "text")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-    )
+    vec, kw = _batch_branches(embeddings, queries, fsk, postings_index)
+    sums = {
+        q: rrf_scores({"vector": vec[q], "keyword": kw[q]}, weights, rrf_k) for q in queries
+    }
+    return _hydrate_batch(documents, sums, k)
 
 
 def hybrid_batch_retrieval_3way(
@@ -273,112 +297,31 @@ def hybrid_batch_retrieval_3way(
     postings_index: str | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, score, text) — the reference's DEFAULT
-    three-store fusion for a BATCH of queries in one job: one corpus
-    scan scores every query vector, one postings scan serves every
-    keyword query, and the graph branch expands ALL query frontiers
-    against the edge store in one join (frontier rows carry their
-    query_id). Every per-query step is a window/groupBy keyed by
-    (query_id, …) over batch×k-scale rows.
+    three-store recall for a BATCH of queries, each query fused exactly
+    as :func:`hybrid_retrieval_3way` fuses it. One corpus scan scores
+    every query vector (also every query's graph layer 1), one postings
+    scan serves every keyword query, and the graph layers of all
+    queries take 2 more collects (``graph.contextual_layers``). The
+    returned DataFrame is one hydration plan for all queries; nothing is
+    checkpointed. Needs ``postings_index`` (``ValueError`` without it).
     """
-    from pyspark.sql import Window
+    from memfuse_spark.operators.graph import contextual_layers
 
-    from memfuse_spark import cache
-    from memfuse_spark.functions.vector import cosine_similarity
-    from memfuse_spark.operators.keyword import bm25_batch_topk_from_index
-    from memfuse_spark.operators.similarity import similarity_join
-
-    spark = documents.sparkSession
     fsk = first_stage_k or 2 * k
     weights = weights or {"vector": 0.5, "graph": 0.3, "keyword": 0.2}
-    qvecs = spark.createDataFrame(
-        [(qid, list(map(float, vec))) for qid, (_, vec) in sorted(queries.items())],
-        "query_id int, qvec array<double>",
+    vec, kw = _batch_branches(embeddings, queries, fsk, postings_index)
+    layers = contextual_layers(
+        embeddings, edges, {q: v for q, (_, v) in queries.items()}, vec, fsk
     )
-    per_q = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-
-    cache.begin("pipeline.batch3")
-    # layer 1: per-query similar set — ONE corpus scan for the batch;
-    # checkpointed because three later subplans reference it
-    l1 = similarity_join(qvecs, embeddings, fsk, id_col="vec_id")
-    l1, _ = cache.tracked_local_checkpoint(l1, "pipeline.batch3")
-    connected = (
-        l1.select("query_id", F.col("vec_id").alias("src"))
-        .join(edges, "src")
-        .groupBy("query_id", F.col("dst").alias("vec_id"))
-        .agg(F.round(F.max("weight"), 6).alias("score"))
-        .join(l1.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_anti")
-    )
-    connected, _ = cache.tracked_local_checkpoint(connected, "pipeline.batch3")
-    rescored = (
-        connected.select("query_id", "vec_id")
-        .join(embeddings.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_similarity("embedding", "qvec"), 6).alias("score"),
+    sums = {
+        q: rrf_scores(
+            {"vector": vec[q], "graph": _graph_branch(layers[q], fsk), "keyword": kw[q]},
+            weights,
+            rrf_k,
         )
-        .withColumn("__r", F.row_number().over(per_q))
-        .filter(F.col("__r") <= fsk)
-        .drop("__r")
-    )
-    gctx = (
-        l1.select("query_id", "vec_id", "score")
-        .unionByName(connected)
-        .unionByName(rescored)
-        .groupBy("query_id", "vec_id")
-        .agg(F.max("score").alias("score"))
-        .withColumn("__r", F.row_number().over(per_q))
-        .filter(F.col("__r") <= fsk)
-        .select("query_id", F.col("vec_id").alias("doc_id"), "score")
-    )
-    graph = tag_store(gctx, "graph")
-    vec = tag_store(
-        l1.withColumnRenamed("vec_id", "doc_id"), "vector"
-    )
-    assert postings_index is not None, "batch path requires the prebuilt index"
-    kw = tag_store(
-        bm25_batch_topk_from_index(
-            spark, postings_index, {qid: t for qid, (t, _) in queries.items()}, fsk
-        ),
-        "keyword",
-    )
-    unioned = union_results(vec, graph, kw)
-    rank_w = Window.partitionBy("query_id", "store_type").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    wcol = None
-    for store, wt in weights.items():
-        c = F.when(F.col("store_type") == store, F.lit(float(wt)))
-        wcol = c if wcol is None else wcol.when(
-            F.col("store_type") == store, F.lit(float(wt))
-        )
-    fused = (
-        unioned.withColumn("rnk", F.row_number().over(rank_w))
-        .withColumn("__w", F.coalesce(wcol, F.lit(0.0)))
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("__w") / (F.lit(float(rrf_k)) + F.col("rnk"))), 6
-            ).alias("score")
-        )
-    )
-    topk_w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        # broadcast the (queries x k)-row top-k into the corpus-sized
-        # text lookup — never the reverse
-        documents.select("doc_id", "text")
-        .join(
-            F.broadcast(
-                fused.withColumn("__r", F.row_number().over(topk_w)).filter(
-                    F.col("__r") <= k
-                )
-            ),
-            "doc_id",
-        )
-        .select("query_id", "doc_id", "score", "text")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-    )
+        for q in queries
+    }
+    return _hydrate_batch(documents, sums, k)
 
 
 def hybrid_retrieval_with_flags(
@@ -409,6 +352,8 @@ def hybrid_retrieval_with_flags(
     content in-query with the deterministic X8 hash embedder — the
     reference's fallback-encoder behavior for not-yet-embedded rows.
     The two paths are value-identical by the embedder's determinism.
+    Both branches are collected and fused on the driver like
+    :func:`hybrid_retrieval`; the returned plan is the hydration job.
 
     Returns (doc_id, item_type, score, text) ordered by score desc.
     """
@@ -423,33 +368,20 @@ def hybrid_retrieval_with_flags(
             else hash_embedding("text", dim)
         ).alias("embedding"),
     )
-    vec = tag_store(
-        similarity_topk(emb, qvec, fsk, id_col="doc_id"), "vector"
-    )
     # ``postings_index`` serves the keyword branch from a prebuilt
     # corpus-wide index — ONLY valid when ``include_types`` selects the
     # entire corpus the index was built over (BM25's n_docs/avgdl/df are
     # corpus-wide stats; a narrower flag set must use the ad-hoc path so
     # the stats reflect the filtered corpus).
-    if postings_index is not None:
-        kw_raw = bm25_topk_from_index(
-            corpus.sparkSession, postings_index, query_text, fsk
-        )
-    else:
-        kw_raw = bm25_topk(allowed, query_text, fsk)
-    kw = tag_store(kw_raw, "keyword")
-    fused = rrf_fusion(
-        union_results(vec, kw),
-        weights=weights or {"vector": 0.5, "keyword": 0.2},
-        rrf_k=rrf_k,
-    )
-    # broadcast the <=2*fsk-row fused result into the corpus-sized
-    # lookup — never the reverse
-    hydrated = allowed.select("doc_id", "item_type", "text").join(
-        F.broadcast(fused), "doc_id"
-    )
-    return (
-        hydrated.select("doc_id", "item_type", "score", "text")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    branches = {
+        "vector": similarity_topk(emb, qvec, fsk, id_col="doc_id").collect(),
+        "keyword": _keyword_rows(allowed, query_text, fsk, postings_index),
+    }
+    return _fuse_and_hydrate(
+        allowed,
+        branches,
+        weights or {"vector": 0.5, "keyword": 0.2},
+        rrf_k,
+        k,
+        cols=("doc_id", "item_type", "score", "text"),
     )

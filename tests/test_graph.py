@@ -496,11 +496,14 @@ def _recall_fixture(spark, tables):
 
 
 def test_recall_results_survive_later_recalls(spark, tables):
-    """A recall's result stays collectable after two more recalls were
-    built. When the graph layers were localCheckpoints kept for one
-    prior generation per scope, the third call released the first
-    result's blocks and its collect failed with a Py4JJavaError."""
-    from memfuse_spark.plans.pipeline import hybrid_retrieval_3way
+    """A recall's result, single or batch, stays collectable after two
+    more recalls were built. When the graph layers were localCheckpoints
+    kept for one prior generation per scope, the third call released the
+    first result's blocks and its collect failed with a Py4JJavaError."""
+    from memfuse_spark.plans.pipeline import (
+        hybrid_batch_retrieval_3way,
+        hybrid_retrieval_3way,
+    )
 
     emb, edges, docs, idx, (q0, q1, q2) = _recall_fixture(spark, tables)
 
@@ -523,12 +526,42 @@ def test_recall_results_survive_later_recalls(spark, tables):
     assert got == recall(q0).collect()
     assert len(got) == 10
 
+    def batch(*qs):
+        queries = {i: ("spark table scan query", q) for i, q in enumerate(qs)}
+        return hybrid_batch_retrieval_3way(
+            docs, emb, edges, queries, k=10, postings_index=idx
+        )
+
+    a = batch(q0, q1)
+    for qs in ((q1, q2), (q2, q0)):
+        batch(*qs)
+    got = a.collect()
+    assert got == batch(q0, q1).collect()
+    assert [r.query_id for r in got] == [0] * 10 + [1] * 10
+
 
 def test_recall_output_schemas_unchanged(spark, tables):
-    from memfuse_spark.plans.pipeline import hybrid_retrieval_3way
+    import __spark_entry__ as m
+    from memfuse_spark.plans.pipeline import (
+        hybrid_batch_retrieval,
+        hybrid_batch_retrieval_3way,
+        hybrid_retrieval_3way,
+        hybrid_retrieval_with_flags,
+    )
 
-    emb, edges, docs, idx, (q0, _, _) = _recall_fixture(spark, tables)
+    emb, edges, docs, idx, (q0, q1, _) = _recall_fixture(spark, tables)
     ctx = g.contextual_retrieval(emb, edges, q0, k=10)
     assert ctx.dtypes == [("vec_id", "bigint"), ("score", "double"), ("layer", "string")]
     rec = hybrid_retrieval_3way(docs, emb, edges, "spark query", q0, k=10, postings_index=idx)
     assert rec.dtypes == [("doc_id", "bigint"), ("score", "double"), ("text", "string")]
+    queries = {0: ("spark query", q0), 1: ("table scan", q1)}
+    batch = [("query_id", "int"), ("doc_id", "bigint"), ("score", "double"), ("text", "string")]
+    assert hybrid_batch_retrieval(docs, emb, queries, k=10, postings_index=idx).dtypes == batch
+    b3 = hybrid_batch_retrieval_3way(docs, emb, edges, queries, k=10, postings_index=idx)
+    assert b3.dtypes == batch
+    typed = hybrid_retrieval_with_flags(
+        m._typed_corpus_with_knowledge(docs), "spark query", [0.1] * 16, k=5, dim=16
+    )
+    assert typed.dtypes == [
+        ("doc_id", "bigint"), ("item_type", "string"), ("score", "double"), ("text", "string")
+    ]

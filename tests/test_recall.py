@@ -1,6 +1,7 @@
-"""The single recall (pipeline.hybrid_retrieval / hybrid_retrieval_3way):
-exact rows on degenerate inputs over a hand-built fixture, the
-driver-side RRF against the Spark plan, and a job-count guard."""
+"""The recalls (pipeline.hybrid_retrieval / hybrid_retrieval_3way and
+their batch forms): exact rows on degenerate inputs over a hand-built
+fixture, batch rows against the single recall's, the driver-side RRF
+against the Spark plan, and job-count guards."""
 
 from __future__ import annotations
 
@@ -10,8 +11,11 @@ from hypothesis import strategies as st
 
 from memfuse_spark.operators import graph as g
 from memfuse_spark.operators.fusion import rrf_fusion
+from memfuse_spark.operators.keyword import build_postings_index
 from memfuse_spark.plans.pipeline import (
     _fuse_and_hydrate,
+    hybrid_batch_retrieval,
+    hybrid_batch_retrieval_3way,
     hybrid_retrieval,
     hybrid_retrieval_3way,
 )
@@ -102,6 +106,40 @@ def test_layer_one_without_out_edges(fx):
     assert _rows(got) == [(5, 0.013115, "elder")]
 
 
+def test_batch_rows_equal_single_recalls(spark, fx, tmp_path):
+    """One batch of the three degenerate queries above (no vocabulary
+    term, a zero vector, a layer 1 of node 5 alone) answers each query
+    with exactly the single recall's rows, 3-way and 2-way."""
+    docs, emb, edges = fx
+    idx = "test_recall_postings"
+    build_postings_index(spark, docs, idx, path=str(tmp_path))
+    queries = {0: ("zebra", [1.0, 0.0]), 1: ("elder", [0.0, 0.0]), 2: ("zebra", [0.0, -1.0])}
+    opts = dict(k=5, first_stage_k=1, postings_index=idx)
+    batches = {
+        "3way": hybrid_batch_retrieval_3way(docs, emb, edges, queries, weights=W3, **opts),
+        "2way": hybrid_batch_retrieval(docs, emb, queries, **opts),
+    }
+    for name, batch in batches.items():
+        got = {q: [] for q in queries}
+        for r in batch.collect():
+            got[r.query_id].append((r.doc_id, r.score, r.text))
+        for q, (text, vec) in queries.items():
+            if name == "3way":
+                single = hybrid_retrieval_3way(docs, emb, edges, text, vec, weights=W3, **opts)
+            else:
+                single = hybrid_retrieval(docs, emb, text, vec, **opts)
+            assert got[q] and got[q] == _rows(single), (name, q)
+
+
+def test_batch_without_postings_index_raises(fx):
+    docs, emb, edges = fx
+    queries = {0: ("apple", [1.0, 0.0])}
+    with pytest.raises(ValueError, match="postings index"):
+        hybrid_batch_retrieval(docs, emb, queries, k=2)
+    with pytest.raises(ValueError, match="postings index"):
+        hybrid_batch_retrieval_3way(docs, emb, edges, queries, k=2)
+
+
 _ids = st.integers(min_value=0, max_value=12)
 _scores = st.one_of(st.none(), st.sampled_from([-0.5, 0.0, 0.25, 0.5, 1.0]))
 _branch = st.dictionaries(_ids, _scores, max_size=8)
@@ -131,8 +169,9 @@ def test_driver_rrf_matches_spark_rrf(spark, branches):
 
 def test_recall_job_budget_and_no_cached_blocks(spark, tables):
     """One 3-way recall on the prebuilt index and edge store runs at most
-    7 Spark jobs and leaves no persisted RDD behind: a regression to
-    lazily re-planned branches or to checkpointed layers fails here."""
+    7 Spark jobs, a 3-query batch recall at most 15, and neither leaves a
+    persisted RDD behind: a regression to lazily re-planned branches or
+    to checkpointed layers fails here."""
     import __spark_entry__ as m
     from memfuse_spark.plans.pipeline import anchor_vector
     from tests.conftest import SF_DIR
@@ -155,4 +194,20 @@ def test_recall_job_budget_and_no_cached_blocks(spark, tables):
     assert len(rows) == 15
     jobs = sc.statusTracker().getJobIdsForGroup("test-recall-job-budget")
     assert 0 < len(jobs) <= 7
+    assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) <= before
+
+    queries = {i: (t, anchor_vector(spark, emb, i)) for i, t in enumerate(
+        ("spark table scan query", "fast vector merge", "customer orders batch stream")
+    )}
+    sc.setJobGroup("test-recall-job-budget-batch", "one 3-query hybrid_batch_retrieval_3way")
+    try:
+        rows = hybrid_batch_retrieval_3way(
+            docs, emb, edges, queries, k=15, first_stage_k=30, postings_index=idx
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 45
+    jobs = sc.statusTracker().getJobIdsForGroup("test-recall-job-budget-batch")
+    assert 0 < len(jobs) <= 15
     assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) <= before
