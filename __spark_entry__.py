@@ -2197,30 +2197,29 @@ _BUCKETED_STORE: dict[tuple[int, str], str] = {}
 
 def _bucketed_store_lc(spark: SparkSession, sf_dir: str) -> str:
     """Build the LSH-bucketed vector store lifecycle artifact ONCE per
-    (session, sf): write a ~80% base slice, append the rest in two
-    incremental batches (new files inside matching bucket directories —
-    O(batch)), COMPACT back to one file per bucket (shadow write +
-    atomic dir swap). An ingest-time store like _postings_index —
-    bench.py warms it in the fixture block so the timed slot measures
-    the SERVE path (VERDICT r6 #6); build cost is recorded in
-    PLANS.md."""
+    (session, sf): from an empty directory, write a ~60% slice and two
+    ~20% slices as epochs 0/1/2 of the vector epoch store (each lands
+    as new files inside its (epoch, bucket) directories — O(batch)),
+    then COMPACT to one file per bucket (shadow write + atomic dir
+    swap). An ingest-time store like _postings_index — bench.py warms
+    it in the fixture block so the timed slot measures the SERVE path
+    (VERDICT r6 #6); build cost is recorded in PLANS.md."""
     import hashlib
+    import shutil
     import tempfile
 
-    from memfuse_spark.operators.ann import (
-        compact_bucketed_corpus,
-        update_bucketed_corpus,
-        write_bucketed_corpus,
-    )
+    from memfuse_spark.operators.ann import compact_bucketed_corpus
+    from memfuse_spark.streaming.buffer import write_vector_epoch
 
     key = (id(spark.sparkContext), sf_dir)
     if key not in _BUCKETED_STORE:
         (emb,) = _tables(spark, sf_dir, "embeddings")
         qvec = anchor_vector(spark, emb, ANCHOR_VEC_ID)
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(
+        base = os.path.join(
             tempfile.gettempdir(), "memfuse_bucketed_lc", tag
         )
+        shutil.rmtree(base, ignore_errors=True)
         slice_of = F.conv(
             F.substring(
                 F.md5(F.concat(F.lit("vs"), F.col("vec_id").cast("string"))),
@@ -2230,13 +2229,11 @@ def _bucketed_store_lc(spark: SparkSession, sf_dir: str) -> str:
             16,
             10,
         ).cast("long") % 5
-        write_bucketed_corpus(
-            emb.filter(slice_of < 3), path, dim=len(qvec), num_planes=4
-        )
-        for lo in (3, 4):
-            update_bucketed_corpus(
-                emb.filter(slice_of == lo), path, dim=len(qvec), num_planes=4
+        for epoch, part in enumerate((slice_of < 3, slice_of == 3, slice_of == 4)):
+            write_vector_epoch(
+                emb.filter(part), base, epoch, dim=len(qvec), num_planes=4
             )
+        path = os.path.join(base, "vectors")
         compact_bucketed_corpus(spark, path)
         _BUCKETED_STORE[key] = path
     return _BUCKETED_STORE[key]

@@ -339,8 +339,8 @@ def ann_lsh_topk_multiprobe(
     1-flip buckets recovers them at (1 + num_planes)/2^num_planes of
     the corpus instead of doubling the planes (which would square the
     bucket count). The probe set is still a plain IN predicate — with
-    the corpus partitioned by bucket (write_bucketed_corpus) it prunes
-    to 1 + num_planes partitions before any scoring.
+    the corpus partitioned by bucket (buffer.write_vector_epoch) it
+    prunes to 1 + num_planes partitions before any scoring.
     """
     dim = len(qvec)
     qdf = embeddings.sparkSession.createDataFrame(
@@ -364,51 +364,20 @@ def ann_lsh_topk_multiprobe(
     )
 
 
-def write_bucketed_corpus(
-    embeddings: DataFrame,
-    path: str,
-    dim: int,
-    num_planes: int = NUM_HYPERPLANES,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the corpus partitioned by LSH bucket.
-
-    This is the 100 TB layout: `partitionBy("bucket")` makes each bucket
-    its own parquet directory, so a query's bucket predicate becomes
-    Catalyst PARTITION PRUNING — the scan never opens non-matching
-    buckets. (At real scale you'd also bucket-by-hash within partitions
-    for co-located joins.)
-    """
-    bucketed = embeddings.withColumn("bucket", lsh_bucket(vec_col, dim, num_planes))
-    bucketed.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-def update_bucketed_corpus(
-    new_embeddings: DataFrame,
-    path: str,
-    dim: int,
-    num_planes: int = NUM_HYPERPLANES,
-    vec_col: str = "embedding",
-) -> None:
-    """Append a vector batch to the bucketed corpus: the batch derives
-    its own LSH buckets (plan-time hyperplanes — identical for every
-    writer) and lands as new files inside the matching bucket
-    directories (dynamic partition append). Cost scales with the
-    batch, not the corpus; the postings-index-v2 treatment for the
-    vector store."""
-    bucketed = new_embeddings.withColumn(
-        "bucket", lsh_bucket(vec_col, dim, num_planes)
-    )
-    bucketed.write.mode("append").partitionBy("bucket").parquet(path)
+_BASE_EPOCH = -1  # compacted rows' epoch_id; stream epochs count from 0
 
 
 def compact_bucketed_corpus(spark, path: str) -> dict:
-    """Segment-merge the bucketed corpus back to one file per bucket
-    directory: shadow-write with rows co-located by bucket, then
-    atomic directory swap (the tables.py compact pattern — on a
-    lakehouse this is OPTIMIZE). N incremental appends otherwise leave
-    N files per touched bucket and query-time IO degrades linearly in
-    segment count. Returns {"files_before", "files_after"}.
+    """Segment-merge the bucketed vector store (the (epoch_id, bucket)
+    epoch store buffer.write_vector_epoch appends to) back to one file
+    per bucket: every epoch folds into one ``epoch_id=_BASE_EPOCH``
+    partition, an epoch id no writer uses, so a later replay of an
+    epoch can never replace the folded rows. Shadow write with rows
+    co-located by bucket, then atomic directory swap (the tables.py
+    compact pattern — on a lakehouse this is OPTIMIZE). N epochs
+    otherwise leave N files per touched bucket and query-time IO
+    degrades linearly in segment count. Returns {"files_before",
+    "files_after"}.
 
     Concurrency: the swap is two sequential os.rename calls, so there
     is a window where ``path`` does not exist — a CONCURRENT READER
@@ -421,13 +390,13 @@ def compact_bucketed_corpus(spark, path: str) -> dict:
     import shutil
     import uuid
 
+    from memfuse_spark.streaming.buffer import write_epoch
+
     df = spark.read.parquet(path)
     files_before = len(df.inputFiles())
     tag = uuid.uuid4().hex[:8]
     tmp = f"{path}__tmp_{tag}"
-    df.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(tmp)
+    write_epoch(df.repartition("bucket"), tmp, _BASE_EPOCH, "bucket")
     old = f"{path}__old_{tag}"
     os.rename(path, old)
     os.rename(tmp, path)
@@ -448,13 +417,14 @@ def bucketed_topk(
     num_planes: int = NUM_HYPERPLANES,
     score_decimals: int = 6,
 ) -> DataFrame:
-    """Query the bucketed corpus: the bucket equality predicate prunes
-    partitions before any IO; scoring touches one directory."""
-    dim = len(qvec)
-    qdf = spark.createDataFrame([(list(map(float, qvec)),)], "qv array<double>")
-    qbucket = qdf.select(lsh_bucket("qv", dim, num_planes).alias("b")).first()["b"]
-    corpus = spark.read.parquet(path).filter(F.col("bucket") == qbucket)
+    """Query the bucketed vector store: the bucket equality predicate
+    (the query's own bucket, computed in the filter from the literal
+    vector) prunes partitions before any IO; scoring touches one bucket
+    directory per epoch."""
     q = f64_array_sql([float(x) for x in qvec])
+    corpus = spark.read.parquet(path).filter(
+        F.col("bucket") == lsh_bucket(q, len(qvec), num_planes)
+    )
     return (
         corpus.select(
             id_col,
@@ -1255,7 +1225,7 @@ def ivfpq_topk(
 
     Cost model at 100 TB: the query touches (corpus/cells)·nprobe code
     rows of m bytes each — with the corpus partitioned by cell (see
-    write_bucketed_corpus for the parquet layout twin) the probe is a
+    buffer.write_vector_epoch for the parquet layout twin) the probe is a
     partition-pruned scan of the 32×-compressed surrogate; the full
     vectors are read by NOTHING. Codebooks and codes are index-time
     artifacts (two corpus passes, amortized); only the cell restriction

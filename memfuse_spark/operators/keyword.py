@@ -96,18 +96,12 @@ def build_postings_index(
     stats_writer.saveAsTable(f"{name}_stats")
 
 
-def _bm25_score(
-    matched: DataFrame,
-    k: int,
-    k1: float,
-    b: float,
-    score_decimals: int,
-) -> DataFrame:
-    """Shared BM25 arithmetic over matched postings carrying
-    (doc_id, tf, dl, df, n_docs, avgdl).
+def _bm25_term_score(k1: float, b: float):
+    """One matched posting's BM25 term score over the columns
+    (tf, dl, df, n_docs, avgdl):
 
     idf = ln((N - df + 0.5)/(df + 0.5) + 1)
-    score = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))
+    term_score = idf · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))
     (reference: bm25_store.py:212-249)
     """
     idf = F.log(
@@ -116,7 +110,20 @@ def _bm25_score(
     tf_part = (F.col("tf") * (k1 + 1)) / (
         F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
     )
-    scored = matched.select("doc_id", (idf * tf_part).alias("term_score"))
+    return (idf * tf_part).alias("term_score")
+
+
+def _bm25_score(
+    matched: DataFrame,
+    k: int,
+    k1: float,
+    b: float,
+    score_decimals: int,
+) -> DataFrame:
+    """Shared BM25 top-k over matched postings carrying
+    (doc_id, tf, dl, df, n_docs, avgdl): score = Σ_t term_score(t)
+    (:func:`_bm25_term_score`)."""
+    scored = matched.select("doc_id", _bm25_term_score(k1, b))
     return (
         scored.groupBy("doc_id")
         .agg(F.round(F.sum("term_score"), score_decimals).alias("score"))
@@ -1468,14 +1475,8 @@ def bm25_batch_topk_from_index(
     matched = postings.join(F.broadcast(qterms), "term").crossJoin(
         F.broadcast(stats)
     )
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    tf_part = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
-    )
     scored = (
-        matched.select("query_id", "doc_id", (idf * tf_part).alias("term_score"))
+        matched.select("query_id", "doc_id", _bm25_term_score(k1, b))
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("term_score"), score_decimals).alias("score"))
     )

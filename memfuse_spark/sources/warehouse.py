@@ -20,7 +20,7 @@ directly to a cluster:
 
 Complements the two layout tools that already exist for specific paths:
 ``keyword.build_postings_index`` (term-bucketed FTS index) and
-``ann.write_bucketed_corpus`` (IVF-cell-partitioned vectors);
+``buffer.write_vector_epoch`` (vectors partitioned by LSH bucket);
 ``operators/layout.py`` adds Z-order within files.
 
 Bucketed tables require the session warehouse (``saveAsTable``); callers

@@ -145,38 +145,62 @@ def round_buffer_stream(messages: DataFrame) -> DataFrame:
     )
 
 
+def write_epoch(df: DataFrame, path: str, epoch_id: int, *partition_cols: str) -> None:
+    """Land one epoch of an append-only store: ``df`` goes under an
+    ``epoch_id`` partition (``partition_cols`` nest below it), written
+    with dynamic partition overwrite as a write option, so replaying an
+    epoch REPLACES its own partitions instead of double-appending. Every
+    epoch store in the engine is written through here."""
+    (
+        df.withColumn("epoch_id", F.lit(epoch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch_id", *partition_cols)
+        .parquet(path)
+    )
+
+
+def _epoch_stream(stream: DataFrame, out_base: str, process_batch) -> "StreamingQuery":
+    """Start ``process_batch(batch, epoch_id)`` over ``stream`` as one
+    exactly-once ``foreachBatch`` per micro-batch: checkpoint under
+    ``out_base``, availableNow drain, empty micro-batches skipped."""
+
+    def run(batch: DataFrame, epoch_id: int) -> None:
+        if not batch.isEmpty():
+            process_batch(batch, epoch_id)
+
+    return (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", os.path.join(out_base, "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _prior_epochs(spark: SparkSession, path: str, epoch_id: int, schema: str) -> DataFrame:
+    """The epoch store at ``path`` minus epoch ``epoch_id`` (a replay
+    must not see its own earlier attempt), without the ``epoch_id``
+    column. Empty with ``schema`` only while the store does not exist
+    yet; any other read failure raises."""
+    if not os.path.exists(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(path).filter(F.col("epoch_id") != epoch_id).drop("epoch_id")
+
+
 def write_hierarchy_epoch(batch: DataFrame, epoch_id: int, out_base: str) -> None:
-    """Write one micro-batch's M0/M1/M2 fan-out, idempotently per epoch:
-    output is partitioned by ``epoch_id`` and written with dynamic
-    partition overwrite, so replaying an epoch REPLACES its partition
-    instead of double-appending."""
+    """Write one micro-batch's M0/M1/M2 fan-out, each layer one epoch
+    of its store (:func:`write_epoch`: replay-safe)."""
     from memfuse_spark.operators import hierarchy as h
 
-    if batch.isEmpty():
-        return
-
-    def write_epoch(df: DataFrame, name: str) -> None:
-        (
-            df.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(os.path.join(out_base, name))
-        )
-
     m0 = h.m0_from_events(batch)
-    write_epoch(m0, "m0")
+    write_epoch(m0, os.path.join(out_base, "m0"), epoch_id)
     m1 = h.m1_from_m0(m0)
-    write_epoch(m1, "m1")
+    write_epoch(m1, os.path.join(out_base, "m1"), epoch_id)
     m2 = h.m2_facts_from_m1(m1)
-    write_epoch(m2, "m2")
+    write_epoch(m2, os.path.join(out_base, "m2"), epoch_id)
 
 
-def ingest_stream(
-    events_stream: DataFrame,
-    out_base: str,
-    trigger_seconds: int | None = None,
-) -> "StreamingQuery":
+def ingest_stream(events_stream: DataFrame, out_base: str) -> "StreamingQuery":
     """B2/B9 micro-batch ingest: each batch writes M0, M1 chunks and M2
     facts in one exactly-once ``foreachBatch`` (the reference's parallel
     layer fan-out, hierarchy/parallel_manager.py:93-360 — Spark writes
@@ -188,17 +212,11 @@ def ingest_stream(
     double-appending — idempotent without relying on the checkpoint
     alone. Readers just scan the table; `epoch_id` is metadata.
     """
-    def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        write_hierarchy_epoch(batch, epoch_id, out_base)
-
-    writer = events_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", os.path.join(out_base, "_checkpoint")
+    return _epoch_stream(
+        events_stream,
+        out_base,
+        lambda batch, epoch_id: write_hierarchy_epoch(batch, epoch_id, out_base),
     )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_your_writes(
@@ -408,52 +426,30 @@ def dedup_ingest_stream(
     thr = JACCARD_THRESHOLD if threshold is None else threshold
     spark = docs_stream.sparkSession
 
-    def write_epoch(df: DataFrame, name: str, epoch_id: int) -> None:
-        (
-            df.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(os.path.join(out_base, name))
-        )
-
-    def _load(name: str, schema: str) -> DataFrame:
-        path = os.path.join(out_base, name)
-        try:
-            return spark.read.parquet(path)
-        except Exception:  # first epoch: nothing written yet
-            return spark.createDataFrame([], schema)
-
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        index = _load("index", f"{id_col} long, band int, bucket string, epoch_id long")
-        prior_docs = _load(
-            "docs", f"{id_col} long, {text_col} string, epoch_id long"
-        ).filter(F.col("epoch_id") != epoch_id)  # replay: exclude own partition
+        def prior(name: str, schema: str) -> DataFrame:
+            return _prior_epochs(spark, os.path.join(out_base, name), epoch_id, schema)
+
+        index = prior("index", f"{id_col} long, band int, bucket string")
+        prior_docs = prior("docs", f"{id_col} long, {text_col} string")
         all_docs = prior_docs.select(id_col, text_col).unionByName(
             batch.select(id_col, text_col)
         )
         pairs, new_rows = incremental_neardup_pairs(
             batch,
             all_docs,
-            index.filter(F.col("epoch_id") != epoch_id).select(
-                id_col, "band", "bucket"
-            ),
+            index.select(id_col, "band", "bucket"),
             id_col=id_col,
             text_col=text_col,
             threshold=thr,
         )
-        write_epoch(pairs, "pairs", epoch_id)
-        write_epoch(new_rows, "index", epoch_id)
-        write_epoch(batch.select(id_col, text_col), "docs", epoch_id)
+        write_epoch(pairs, os.path.join(out_base, "pairs"), epoch_id)
+        write_epoch(new_rows, os.path.join(out_base, "index"), epoch_id)
+        write_epoch(
+            batch.select(id_col, text_col), os.path.join(out_base, "docs"), epoch_id
+        )
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", os.path.join(out_base, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _epoch_stream(docs_stream, out_base, process_batch)
 
 
 def index_ingest_stream(
@@ -478,16 +474,12 @@ def index_ingest_stream(
 
     Outputs under out_base: ``postings/``, ``dfparts/``, ``statsparts/``.
     """
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        write_index_epoch(batch, out_base, epoch_id, id_col, text_col)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", os.path.join(out_base, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    return _epoch_stream(
+        docs_stream,
+        out_base,
+        lambda batch, epoch_id: write_index_epoch(
+            batch, out_base, epoch_id, id_col, text_col
+        ),
     )
 
 
@@ -513,13 +505,7 @@ def write_index_epoch(
         ("dfparts", document_frequency(postings)),
         ("statsparts", corpus_stats(postings)),
     ):
-        (
-            df.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(os.path.join(out_base, name))
-        )
+        write_epoch(df, os.path.join(out_base, name), epoch_id)
 
 
 def write_vector_epoch(
@@ -530,21 +516,19 @@ def write_vector_epoch(
     num_planes: int = 8,
     vec_col: str = "embedding",
 ) -> None:
-    """One epoch of vector-store ingest (shared by the stream below and
-    its batch twin): rows land under (epoch_id, bucket) partitions with
-    dynamic overwrite — bucket derivation is the same plan-time LSH as
-    ann.write_bucketed_corpus, so a replayed epoch rewrites exactly its
-    own partitions and query-time bucket pruning still applies (bucket
-    is a partition column regardless of the epoch level above it)."""
+    """One epoch of the LSH-bucketed vector store (shared by the stream
+    below, its batch twin and ann.compact_bucketed_corpus's store):
+    rows land under (epoch_id, bucket) partitions with dynamic overwrite,
+    so a replayed epoch rewrites exactly its own partitions, and
+    ann.bucketed_topk's bucket predicate still prunes partitions (bucket
+    is a partition column below the epoch level)."""
     from memfuse_spark.operators.ann import lsh_bucket
 
-    (
-        batch.withColumn("bucket", lsh_bucket(vec_col, dim, num_planes))
-        .withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id", "bucket")
-        .parquet(os.path.join(out_base, "vectors"))
+    write_epoch(
+        batch.withColumn("bucket", lsh_bucket(vec_col, dim, num_planes)),
+        os.path.join(out_base, "vectors"),
+        epoch_id,
+        "bucket",
     )
 
 
@@ -561,17 +545,12 @@ def vector_ingest_stream(
     overwrite: replay-safe); the store is queryable at any time with
     bucket partition pruning (ann.bucketed topk shape). Nothing
     historical is ever rewritten."""
-
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        write_vector_epoch(batch, out_base, epoch_id, dim, num_planes, vec_col)
-
-    return (
-        vec_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", os.path.join(out_base, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    return _epoch_stream(
+        vec_stream,
+        out_base,
+        lambda batch, epoch_id: write_vector_epoch(
+            batch, out_base, epoch_id, dim, num_planes, vec_col
+        ),
     )
 
 
@@ -608,26 +587,13 @@ def conflict_ingest_stream(
     spark = facts_stream.sparkSession
     fact_schema = (
         "chunk_id string, conversation_id string, fact_content string, "
-        "entities array<string>, confidence double, epoch_id long"
+        "entities array<string>, confidence double"
     )
 
-    def write_epoch(df: DataFrame, name: str, epoch_id: int) -> None:
-        (
-            df.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(os.path.join(out_base, name))
-        )
-
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        try:
-            prior = spark.read.parquet(os.path.join(out_base, "facts"))
-        except Exception:  # first epoch: nothing written yet
-            prior = spark.createDataFrame([], fact_schema)
-        prior = prior.filter(F.col("epoch_id") != epoch_id).drop("epoch_id")
+        prior = _prior_epochs(
+            spark, os.path.join(out_base, "facts"), epoch_id, fact_schema
+        )
         # vs the store, plus within-batch (earlier chunks of the same
         # write batch are "existing" by the time later ones insert —
         # batch_id order supplies the within-epoch temporal order)
@@ -638,12 +604,7 @@ def conflict_ingest_stream(
                 batch, batch, require_batch_order=True, detector=detector
             )
         )
-        write_epoch(conflicts, "conflicts", epoch_id)
-        write_epoch(batch, "facts", epoch_id)
+        write_epoch(conflicts, os.path.join(out_base, "conflicts"), epoch_id)
+        write_epoch(batch, os.path.join(out_base, "facts"), epoch_id)
 
-    return (
-        facts_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", os.path.join(out_base, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _epoch_stream(facts_stream, out_base, process_batch)

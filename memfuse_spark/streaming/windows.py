@@ -91,10 +91,10 @@ def sketch_ingest_stream(
     text_col: str = "text",
 ):
     """Streaming heavy-hitter maintenance: each micro-batch folds into a
-    per-epoch count-min sketch (2048 fixed cells), epoch-partitioned
-    with dynamic overwrite — a replayed epoch REPLACES its partition
-    (the same exactly-once pattern as ingest_stream / dedup_ingest
-    stream), and the raw text is never retained.
+    per-epoch count-min sketch (2048 fixed cells), written as one epoch
+    of ``{out_base}/cms`` (buffer.write_epoch: a replayed epoch REPLACES
+    its partition, the exactly-once pattern of every epoch store), and
+    the raw text is never retained.
 
     A SLIDING-window heavy-hitter query is then pure sketch algebra:
     read the last K epoch partitions, sum counters per (hash_row,
@@ -102,36 +102,25 @@ def sketch_ingest_stream(
     rescan, O(K × 2048) state: the reason sketches, not counts, are
     what a 100 TB stream stores per window.
     """
-    from pyspark.sql import functions as F
-
     from memfuse_spark.functions.text import tokenize
     from memfuse_spark.operators.sketches import cms_build
+    from memfuse_spark.streaming.buffer import _epoch_stream, write_epoch
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def write_epoch(batch, epoch_id: int) -> None:
+    def process_batch(batch, epoch_id: int) -> None:
         counts = (
             batch.select(F.explode_outer(tokenize(text_col)).alias("token"))
             .filter(F.col("token").isNotNull())
             .groupBy("token")
             .agg(F.count("*").alias("cnt"))
         )
-        sketch = cms_build(counts).withColumn("epoch_id", F.lit(int(epoch_id)))
-        (
-            sketch.write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(f"{out_base}/cms")
-        )
+        write_epoch(cms_build(counts), f"{out_base}/cms", epoch_id)
 
-    return (
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
-        .writeStream.foreachBatch(write_epoch)
-        .option("checkpointLocation", f"{out_base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
+    return _epoch_stream(stream, out_base, process_batch)
 
 
 def sliding_heavy_hitters(
@@ -139,8 +128,6 @@ def sliding_heavy_hitters(
 ) -> "DataFrame":
     """Merge the last K epoch sketches by counter addition and estimate
     the probe tokens' counts over that sliding window."""
-    from pyspark.sql import functions as F
-
     from memfuse_spark.operators.sketches import cms_estimate
 
     sketches = spark.read.parquet(f"{out_base}/cms")

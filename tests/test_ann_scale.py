@@ -10,16 +10,26 @@ from memfuse_spark.operators.ann import (
     bucketed_topk,
     ivf_kmeans_centroids,
     mllib_lsh_topk,
-    write_bucketed_corpus,
 )
 from memfuse_spark.plans.pipeline import anchor_vector
+from memfuse_spark.streaming.buffer import write_vector_epoch
 
 
 def test_bucketed_corpus_partition_pruning(spark, tables, tmp_path):
     emb = tables["embeddings"]
     qvec = anchor_vector(spark, emb, 0)
-    path = str(tmp_path / "bucketed")
-    write_bucketed_corpus(emb, path, dim=len(qvec), num_planes=4)
+    # two epochs of the vector epoch store: the bucket predicate must
+    # prune below the epoch level
+    out = str(tmp_path / "bucketed")
+    for epoch in (0, 1):
+        write_vector_epoch(
+            emb.filter(F.col("vec_id") % 2 == epoch),
+            out,
+            epoch,
+            dim=len(qvec),
+            num_planes=4,
+        )
+    path = f"{out}/vectors"
 
     got = bucketed_topk(spark, path, qvec, 10, num_planes=4)
     plan = got._sc._jvm.PythonSQLUtils.explainString(
@@ -132,21 +142,23 @@ def test_ivfpq_probe_restriction_and_full_probe_equivalence(spark):
 
 
 def test_bucketed_corpus_incremental_append_and_compaction(spark, tables, tmp_path):
-    """Appends must land inside bucket directories (O(batch)), and
-    compaction must merge segments to one file per bucket while
-    keeping results and partition pruning identical."""
-    from memfuse_spark.operators.ann import (
-        compact_bucketed_corpus,
-        update_bucketed_corpus,
-    )
+    """Epoch appends land inside (epoch, bucket) directories (O(batch)),
+    and compaction must merge every epoch to one file per bucket while
+    keeping rows, results and partition pruning identical."""
+    from memfuse_spark.operators.ann import compact_bucketed_corpus
 
     emb = tables["embeddings"]
     qvec = anchor_vector(spark, emb, 0)
-    path = str(tmp_path / "bucketed_inc")
-    base = emb.filter(F.col("vec_id") % 3 != 0)
-    write_bucketed_corpus(base, path, dim=len(qvec), num_planes=4)
-    update_bucketed_corpus(
-        emb.filter(F.col("vec_id") % 3 == 0), path, dim=len(qvec), num_planes=4
+    out = str(tmp_path / "bucketed_inc")
+    write_vector_epoch(
+        emb.filter(F.col("vec_id") % 3 != 0), out, 0, dim=len(qvec), num_planes=4
+    )
+    write_vector_epoch(
+        emb.filter(F.col("vec_id") % 3 == 0), out, 1, dim=len(qvec), num_planes=4
+    )
+    path = f"{out}/vectors"
+    rows_before = sorted(
+        map(repr, spark.read.parquet(path).drop("epoch_id").collect())
     )
     report = compact_bucketed_corpus(spark, path)
     assert report["files_after"] < report["files_before"]
@@ -159,6 +171,11 @@ def test_bucketed_corpus_incremental_append_and_compaction(spark, tables, tmp_pa
         for f in spark.read.parquet(path).inputFiles()
     )
     assert all(v == 1 for v in per_bucket.values())
+    # every epoch folded into the one base partition, rows unchanged
+    compacted = spark.read.parquet(path)
+    epochs = compacted.select("epoch_id").distinct().collect()
+    assert [r.epoch_id for r in epochs] == [-1]
+    assert sorted(map(repr, compacted.drop("epoch_id").collect())) == rows_before
 
     got = bucketed_topk(spark, path, qvec, 10, num_planes=4)
     plan = got._sc._jvm.PythonSQLUtils.explainString(

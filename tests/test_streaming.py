@@ -197,51 +197,128 @@ def test_windowed_event_counts_stream(spark, tmp_path):
     assert all(r.window.end > r.window.start for r in got)
 
 
-def test_epoch_replay_is_idempotent(spark, tmp_path):
-    """Exactly-once: replaying an epoch (checkpoint recovery re-runs the
-    last foreachBatch) must REPLACE its partition, not double-append."""
-    import datetime as dt
+EVENT_SCHEMA = (
+    "event_id bigint, ts timestamp, user_id bigint, event_type string, props string"
+)
 
-    t0 = dt.datetime(2025, 1, 1)
+
+def _events(spark, first_id: int, n: int):
+    t0 = datetime.datetime(2025, 1, 1)
     rows = [
-        (i, t0 + dt.timedelta(seconds=i), 1 + (i % 2), "click", f"payload {i}")
-        for i in range(10)
+        (
+            first_id + i,
+            t0 + datetime.timedelta(seconds=first_id + i),
+            1 + (i % 2),
+            "click",
+            f"payload {first_id + i}",
+        )
+        for i in range(n)
     ]
-    batch = spark.createDataFrame(
-        rows,
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, props string",
+    return spark.createDataFrame(rows, EVENT_SCHEMA)
+
+
+def _docs(spark, first_id: int, n: int):
+    return spark.createDataFrame(
+        [(first_id + i, f"memory {i % 3} scan doc {first_id + i}") for i in range(n)],
+        "doc_id long, text string",
     )
+
+
+def _vectors(spark, first_id: int, n: int):
+    return spark.createDataFrame(
+        [
+            (first_id + i, [float((i * j) % 5) - 2.0 for j in range(1, 5)])
+            for i in range(n)
+        ],
+        "vec_id long, embedding array<float>",
+    )
+
+
+# writer name -> (write(batch, epoch_id, out_base), batch(spark, first_id, n),
+# the store directories it writes under out_base)
+EPOCH_WRITERS = {
+    "write_hierarchy_epoch": (
+        sb.write_hierarchy_epoch,
+        _events,
+        ("m0", "m1", "m2"),
+    ),
+    "write_index_epoch": (
+        lambda b, e, out: sb.write_index_epoch(b, out, e),
+        _docs,
+        ("postings", "dfparts", "statsparts"),
+    ),
+    "write_vector_epoch": (
+        lambda b, e, out: sb.write_vector_epoch(b, out, e, dim=4, num_planes=3),
+        _vectors,
+        ("vectors",),
+    ),
+}
+
+
+def _store_rows(spark, out, names, epoch_id=None):
+    rows = {}
+    for name in names:
+        df = spark.read.parquet(os.path.join(out, name))
+        if epoch_id is not None:
+            df = df.filter(F.col("epoch_id") == epoch_id)
+        rows[name] = sorted(map(repr, df.collect()))
+    return rows
+
+
+@pytest.mark.parametrize("writer", sorted(EPOCH_WRITERS))
+def test_epoch_replay_is_idempotent(spark, tmp_path, writer):
+    """Exactly-once: replaying an epoch (checkpoint recovery re-runs the
+    last foreachBatch) must REPLACE its partitions, not double-append,
+    in every store the epoch writer fans out to."""
+    write, make_batch, names = EPOCH_WRITERS[writer]
+    batch = make_batch(spark, 0, 10)
+    out = str(tmp_path / "epoch_out")
+    write(batch, 0, out)
+    first = _store_rows(spark, out, names)
+    assert all(first.values())
+    # simulate a retried epoch 0 (same data, same epoch id)
+    write(batch, 0, out)
+    # then a genuine new epoch with different rows
+    write(make_batch(spark, 100, 5), 1, out)
+
+    assert _store_rows(spark, out, names, epoch_id=0) == first  # no dupes
+    second = _store_rows(spark, out, names, epoch_id=1)
+    assert all(second.values())
+    total = _store_rows(spark, out, names)
+    for name in names:
+        assert len(total[name]) == len(first[name]) + len(second[name])
+
+
+def test_empty_epoch_leaves_hierarchy_store_unchanged(spark, tmp_path):
+    """An empty micro-batch appended as a new epoch of an existing
+    hierarchy store writes no rows: m0/m1/m2 read back unchanged."""
+    batch = _events(spark, 0, 10)
     out = str(tmp_path / "epoch_out")
     sb.write_hierarchy_epoch(batch, 0, out)
-    first = {
-        name: spark.read.parquet(os.path.join(out, name)).orderBy("epoch_id").collect()
-        for name in ("m0", "m1", "m2")
-    }
-    # simulate a retried epoch 0 (same data, same epoch id)
-    sb.write_hierarchy_epoch(batch, 0, out)
-    # then a genuine new epoch with different rows
-    rows2 = [
-        (100 + i, t0 + dt.timedelta(seconds=100 + i), 3, "view", f"p {i}")
-        for i in range(5)
-    ]
-    batch2 = spark.createDataFrame(
-        rows2,
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, props string",
-    )
-    sb.write_hierarchy_epoch(batch2, 1, out)
+    before = _store_rows(spark, out, ("m0", "m1", "m2"))
+    sb.write_hierarchy_epoch(batch.filter(F.lit(False)), 1, out)
+    assert _store_rows(spark, out, ("m0", "m1", "m2")) == before
+    assert [len(before[n]) for n in ("m0", "m1", "m2")] == [10, 2, 2]
 
-    m0 = spark.read.parquet(os.path.join(out, "m0"))
-    assert m0.filter(F.col("epoch_id") == 0).count() == len(first["m0"])  # no dupes
-    assert m0.count() == 15
-    replayed = {
-        name: spark.read.parquet(os.path.join(out, name))
-        .filter(F.col("epoch_id") == 0)
-        .orderBy("epoch_id")
-        .collect()
-        for name in ("m0", "m1", "m2")
-    }
-    for name in ("m0", "m1", "m2"):
-        assert sorted(map(repr, replayed[name])) == sorted(map(repr, first[name]))
+
+def test_conflict_ingest_stream_raises_on_unreadable_store(spark, tmp_path):
+    """A fact store that exists but cannot be read fails the epoch; it
+    is not read as an empty history (which would silently skip every
+    conflict against it)."""
+    src = str(tmp_path / "facts_src")
+    spark.createDataFrame(
+        [("c1-0", "c1", "a co_occurs_with b", ["a", "b"], 0.9)],
+        "chunk_id string, conversation_id string, fact_content string, "
+        "entities array<string>, confidence double",
+    ).coalesce(1).write.parquet(src)
+    out = tmp_path / "conflict_out"
+    (out / "facts").mkdir(parents=True)
+    (out / "facts" / "notes.txt").write_text("not a parquet file")
+
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = sb.conflict_ingest_stream(stream, str(out))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        q.awaitTermination(240)
 
 
 def test_speculative_cache_hit_tracking(spark):

@@ -78,6 +78,31 @@ def test_session_window_agg_matches_sessionize_twin(spark, tables):
     assert n_native == n_twin
 
 
+def test_sketch_ingest_stream_leaves_session_write_mode_alone(spark, tmp_path):
+    """The sketch stream's replay-safe epoch write must not switch the
+    session to dynamic partition overwrite: afterwards a plain
+    overwrite of a partitioned table still replaces every partition."""
+    from memfuse_spark.streaming.windows import sketch_ingest_stream
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    src = str(tmp_path / "src")
+    spark.createDataFrame([("a b",), ("b c",)], "text string").write.parquet(src)
+    out = str(tmp_path / "hh")
+    q = sketch_ingest_stream(spark, src, spark.read.parquet(src).schema, out)
+    q.awaitTermination()
+    assert spark.read.parquet(f"{out}/cms").count() > 0
+    assert spark.conf.get(key) == before
+
+    table = str(tmp_path / "t")
+    rows = "p int, v string"
+    spark.createDataFrame([(1, "a"), (2, "b")], rows).write.partitionBy("p").parquet(table)
+    spark.createDataFrame([(3, "c")], rows).write.mode("overwrite").partitionBy(
+        "p"
+    ).parquet(table)
+    assert [r.p for r in spark.read.parquet(table).collect()] == [3]
+
+
 def test_sliding_heavy_hitters_matches_batch_merge(spark, tables, tmp_path):
     """Streamed per-epoch CMS sketches merged over the last K epochs give
     the same estimates as one batch sketch built from those epochs' raw

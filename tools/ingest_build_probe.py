@@ -93,6 +93,7 @@ def main() -> int:
             # within-batch, index absorbed after each epoch
             from memfuse_spark.catalog import load_table
             from memfuse_spark.operators.dedup import incremental_neardup_pairs
+            from memfuse_spark.streaming.buffer import write_epoch
 
             docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
             rows = docs.count()
@@ -120,13 +121,7 @@ def main() -> int:
                 (
                     pairs.write.mode("overwrite").format("noop").save()
                 )
-                (
-                    new_rows.withColumn("epoch_id", F.lit(e % 3))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch_id")
-                    .parquet(idx_path)
-                )
+                write_epoch(new_rows, idx_path, e)
                 secs.append(round(time.time() - t0, 2))
                 seen_epochs.add(e)
         else:
