@@ -390,9 +390,9 @@ def compact_bucketed_corpus(spark, path: str) -> dict:
     import shutil
     import uuid
 
-    from memfuse_spark.streaming.buffer import write_epoch
+    from memfuse_spark.streaming.buffer import read_epochs, write_epoch
 
-    df = spark.read.parquet(path)
+    df = read_epochs(spark, path)
     files_before = len(df.inputFiles())
     tag = uuid.uuid4().hex[:8]
     tmp = f"{path}__tmp_{tag}"
@@ -403,7 +403,7 @@ def compact_bucketed_corpus(spark, path: str) -> dict:
     shutil.rmtree(old, ignore_errors=True)
     return {
         "files_before": files_before,
-        "files_after": len(spark.read.parquet(path).inputFiles()),
+        "files_after": len(read_epochs(spark, path).inputFiles()),
     }
 
 
@@ -420,9 +420,15 @@ def bucketed_topk(
     """Query the bucketed vector store: the bucket equality predicate
     (the query's own bucket, computed in the filter from the literal
     vector) prunes partitions before any IO; scoring touches one bucket
-    directory per epoch."""
+    directory per epoch. The store is read through ``buffer.read_epochs``
+    with the schema recorded in its ``_schema.json``, so building the
+    query starts no Spark job and collecting it takes one. (An epoch with
+    more than 32 bucket directories adds Spark's parallel file-listing
+    job to the build.)"""
+    from memfuse_spark.streaming.buffer import read_epochs
+
     q = f64_array_sql([float(x) for x in qvec])
-    corpus = spark.read.parquet(path).filter(
+    corpus = read_epochs(spark, path).filter(
         F.col("bucket") == lsh_bucket(q, len(qvec), num_planes)
     )
     return (

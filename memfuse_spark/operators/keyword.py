@@ -1285,22 +1285,34 @@ def bm25_topk_from_stream_index(
     (partition-pruned epoch layout), the per-epoch df partials merge by
     keyed SUM and the stats partials recombine as the weighted mean —
     the associative-merge read side of the mergeable-partial design.
-    Scores equal the ad-hoc / v2-index paths by construction."""
+    Scores equal the ad-hoc / v2-index paths by construction.
+
+    The three stores are read through ``buffer.read_epochs`` with the
+    schema each one recorded in its ``_schema.json``, so building the
+    query starts no Spark job. The partials are a few rows per epoch, so
+    each merges in one partition (``coalesce(1)`` before the aggregate)
+    with no shuffle: collecting the result takes at most 4 jobs, one per
+    partial broadcast and two for the postings scan with its top-k."""
     import os
 
+    from memfuse_spark.streaming.buffer import read_epochs
+
     q_terms = sorted({t for t in _py_tokenize(query)})
-    postings = (
-        spark.read.parquet(os.path.join(out_base, "postings"))
-        .filter(F.col("term").isin(q_terms))
-    )
+
+    def store(name: str) -> DataFrame:
+        return read_epochs(spark, os.path.join(out_base, name))
+
+    postings = store("postings").filter(F.col("term").isin(q_terms))
     dfs = (
-        spark.read.parquet(os.path.join(out_base, "dfparts"))
+        store("dfparts")
         .filter(F.col("term").isin(q_terms))
+        .coalesce(1)
         .groupBy("term")
         .agg(F.sum("df").cast("long").alias("df"))
     )
     stats = (
-        spark.read.parquet(os.path.join(out_base, "statsparts"))
+        store("statsparts")
+        .coalesce(1)
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             (F.sum(F.col("avgdl") * F.col("n_docs")) / F.sum("n_docs")).alias(

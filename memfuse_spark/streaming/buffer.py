@@ -23,7 +23,9 @@ Spark-first mapping:
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -145,19 +147,78 @@ def round_buffer_stream(messages: DataFrame) -> DataFrame:
     )
 
 
+SCHEMA_FILE = "_schema.json"  # an epoch store's recorded read schema
+
+
 def write_epoch(df: DataFrame, path: str, epoch_id: int, *partition_cols: str) -> None:
     """Land one epoch of an append-only store: ``df`` goes under an
     ``epoch_id`` partition (``partition_cols`` nest below it), written
     with dynamic partition overwrite as a write option, so replaying an
     epoch REPLACES its own partitions instead of double-appending. Every
-    epoch store in the engine is written through here."""
+    epoch store in the engine is written through here.
+
+    After the data commit the store's read schema is recorded in the
+    hidden ``_schema.json`` at the store root (Spark, pyarrow and DuckDB
+    skip underscore files), replaced atomically. It is exactly the schema
+    ``spark.read.parquet(path)`` infers: the data columns, then
+    ``epoch_id``, then ``partition_cols``, their types inferred from the
+    directory names. Recording it reads no file footer: it lists the
+    partition directories on the driver and starts no Spark job (unless
+    one directory level holds more than Spark's parallel-listing
+    threshold, 32 by default). :func:`read_epochs` reads the store with
+    it, so a query starts no schema-inference job. An epoch whose column
+    names or types differ from the recorded schema (nullability aside)
+    raises ``ValueError`` before anything is written."""
+    out = df.withColumn("epoch_id", F.lit(epoch_id))
+    parts = ["epoch_id", *partition_cols]
+    data = StructType([f for f in out.schema.fields if f.name not in parts])
+    if os.path.exists(os.path.join(path, SCHEMA_FILE)):
+        recorded = _recorded_schema(path)
+        if (
+            recorded.names != data.names + parts
+            or StructType(recorded.fields[: len(data.fields)]).simpleString()
+            != data.simpleString()
+        ):
+            raise ValueError(
+                f"epoch {epoch_id} of {path}: columns {data.simpleString()} + {parts}"
+                f" differ from the recorded {recorded.simpleString()}"
+            )
     (
-        df.withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
+        out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id", *partition_cols)
+        .partitionBy(*parts)
         .parquet(path)
     )
+    # the data schema is given, so only the partition directories are
+    # listed (driver-side, no job); a store without rows yet has none
+    schema = df.sparkSession.read.schema(data).parquet(path).schema
+    for c in parts:
+        if c not in schema.names:
+            schema.add(c, out.schema[c].dataType)
+    tmp = os.path.join(path, f"{SCHEMA_FILE}.{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        fh.write(schema.json())
+    os.replace(tmp, os.path.join(path, SCHEMA_FILE))
+
+
+def _recorded_schema(path: str) -> StructType:
+    with open(os.path.join(path, SCHEMA_FILE)) as fh:
+        return StructType.fromJson(json.load(fh))
+
+
+def read_epochs(spark: SparkSession, path: str) -> DataFrame:
+    """Every epoch of the store at ``path``, read with the schema
+    :func:`write_epoch` recorded: no schema-inference job. A store
+    without ``_schema.json`` raises ``FileNotFoundError``; nothing falls
+    back to inference. Every epoch-store read in the engine goes through
+    here."""
+    try:
+        schema = _recorded_schema(path)
+    except FileNotFoundError as e:
+        raise FileNotFoundError(
+            f"{path} is not a parquet epoch store written by write_epoch: no {SCHEMA_FILE}"
+        ) from e
+    return spark.read.schema(schema).parquet(path)
 
 
 def _epoch_stream(stream: DataFrame, out_base: str, process_batch) -> "StreamingQuery":
@@ -184,7 +245,7 @@ def _prior_epochs(spark: SparkSession, path: str, epoch_id: int, schema: str) ->
     yet; any other read failure raises."""
     if not os.path.exists(path):
         return spark.createDataFrame([], schema)
-    return spark.read.parquet(path).filter(F.col("epoch_id") != epoch_id).drop("epoch_id")
+    return read_epochs(spark, path).filter(F.col("epoch_id") != epoch_id).drop("epoch_id")
 
 
 def write_hierarchy_epoch(batch: DataFrame, epoch_id: int, out_base: str) -> None:

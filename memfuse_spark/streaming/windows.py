@@ -129,8 +129,9 @@ def sliding_heavy_hitters(
     """Merge the last K epoch sketches by counter addition and estimate
     the probe tokens' counts over that sliding window."""
     from memfuse_spark.operators.sketches import cms_estimate
+    from memfuse_spark.streaming.buffer import read_epochs
 
-    sketches = spark.read.parquet(f"{out_base}/cms")
+    sketches = read_epochs(spark, f"{out_base}/cms")
     epochs = [
         r["epoch_id"]
         for r in sketches.select("epoch_id").distinct()

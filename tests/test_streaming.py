@@ -321,6 +321,123 @@ def test_conflict_ingest_stream_raises_on_unreadable_store(spark, tmp_path):
         q.awaitTermination(240)
 
 
+def test_write_epoch_rejects_schema_drift(spark, tmp_path):
+    """An epoch whose column names or types differ from the store's
+    recorded schema is refused before anything is written; a difference
+    in nullability alone is not drift."""
+    path = str(tmp_path / "drift")
+    sb.write_epoch(spark.createDataFrame([(1, "a")], "doc_id long, text string"), path, 0)
+    sb.write_epoch(spark.range(2).selectExpr("id AS doc_id", "'b' AS text"), path, 1)
+    before = sorted(map(repr, sb.read_epochs(spark, path).collect()))
+    assert len(before) == 3
+    with pytest.raises(ValueError, match="doc_id"):
+        sb.write_epoch(
+            spark.createDataFrame([("x", "c")], "doc_id string, text string"), path, 2
+        )
+    assert sorted(map(repr, sb.read_epochs(spark, path).collect())) == before
+
+
+def test_read_epochs_schema_is_the_inferred_schema(spark, tmp_path):
+    """Every epoch store reads back through its recorded schema with
+    exactly the schema parquet inference gives (names, types, order,
+    nullability): hierarchy, index and vector stores, the vector store
+    after compaction, and the sketch store. A store without a recorded
+    schema raises instead of being inferred."""
+    from memfuse_spark.operators.ann import compact_bucketed_corpus
+    from memfuse_spark.streaming.windows import sketch_ingest_stream
+
+    out = str(tmp_path / "stores")
+    for epoch, first in ((0, 0), (1, 100)):
+        sb.write_hierarchy_epoch(_events(spark, first, 10), epoch, out)
+        sb.write_index_epoch(_docs(spark, first, 10), out, epoch)
+        sb.write_vector_epoch(_vectors(spark, first, 10), out, epoch, dim=4, num_planes=3)
+
+    def assert_recorded_is_inferred(path):
+        assert sb.read_epochs(spark, path).schema == spark.read.parquet(path).schema
+
+    for name in ("m0", "m1", "m2", "postings", "dfparts", "statsparts", "vectors"):
+        assert_recorded_is_inferred(os.path.join(out, name))
+    compact_bucketed_corpus(spark, os.path.join(out, "vectors"))
+    assert_recorded_is_inferred(os.path.join(out, "vectors"))
+    # a store whose first epoch wrote no rows has no partition directory
+    # to infer from; the next epoch must still be accepted
+    first_empty = str(tmp_path / "first_empty")
+    for epoch, n in ((0, 0), (1, 10)):
+        sb.write_vector_epoch(_vectors(spark, 0, n), first_empty, epoch, dim=4, num_planes=3)
+    assert_recorded_is_inferred(os.path.join(first_empty, "vectors"))
+
+    src = str(tmp_path / "sketch_src")
+    for first in (0, 100):
+        _docs(spark, first, 10).coalesce(1).write.mode("append").parquet(src)
+    q = sketch_ingest_stream(spark, src, spark.read.parquet(src).schema, str(tmp_path / "hh"))
+    q.awaitTermination(240)
+    assert_recorded_is_inferred(str(tmp_path / "hh" / "cms"))
+
+    os.remove(os.path.join(out, "m0", sb.SCHEMA_FILE))
+    with pytest.raises(FileNotFoundError):
+        sb.read_epochs(spark, os.path.join(out, "m0"))
+
+
+def test_stream_reads_job_budget(spark, tmp_path):
+    """Read-your-writes reads of a 3-epoch index/vector store (epoch 1
+    replayed, epoch 2 empty) start no Spark job while the query is built,
+    since no schema is inferred. Collecting takes at most 4 jobs for the
+    keyword read and 1 for the ANN read, and the rows equal whole-corpus
+    BM25 (DuckDB) and LSH top-k over the epochs' union. A query with no
+    vocabulary term returns no rows."""
+    import duckdb
+
+    from memfuse_spark.operators.ann import ann_lsh_topk, bucketed_topk
+    from memfuse_spark.operators.keyword import (
+        bm25_topk_from_stream_index,
+        bm25_topk_sql,
+    )
+
+    out = str(tmp_path / "ryw")
+    docs = {0: _docs(spark, 0, 12), 1: _docs(spark, 100, 8), 2: _docs(spark, 200, 0)}
+    vecs = {0: _vectors(spark, 0, 12), 1: _vectors(spark, 100, 8), 2: _vectors(spark, 200, 0)}
+    for epoch in (0, 1, 2, 1):
+        sb.write_index_epoch(docs[epoch], out, epoch)
+        sb.write_vector_epoch(vecs[epoch], out, epoch, dim=4, num_planes=3)
+    sc = spark.sparkContext
+
+    def run_in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    con = duckdb.connect()
+    con.register("documents", docs[0].unionByName(docs[1]).toPandas())
+    try:
+        for i, query in enumerate(("memory 1 scan", "zzz unknown")):
+            kdf, built = run_in_group(
+                f"stream-kw-build-{i}",
+                lambda: bm25_topk_from_stream_index(spark, out, query, 10),
+            )
+            rows, collected = run_in_group(f"stream-kw-collect-{i}", kdf.collect)
+            assert built == 0 and collected <= 4
+            want = con.execute(bm25_topk_sql(query, 10)).fetchall()
+            assert [(r.doc_id, r.score) for r in rows] == [tuple(w) for w in want]
+            assert bool(rows) == (i == 0)  # the second has no vocabulary term
+    finally:
+        con.close()
+
+    qvec = [-1.0, 0.0, 1.0, 2.0]
+    adf, built = run_in_group(
+        "stream-ann-build",
+        lambda: bucketed_topk(spark, os.path.join(out, "vectors"), qvec, 5, num_planes=3),
+    )
+    rows, collected = run_in_group("stream-ann-collect", adf.collect)
+    assert built == 0 and collected == 1
+    want = ann_lsh_topk(vecs[0].unionByName(vecs[1]), qvec, 5, num_planes=3).collect()
+    assert [(r.vec_id, r.score) for r in rows] == [(r.vec_id, r.score) for r in want]
+    assert rows
+
+
 def test_speculative_cache_hit_tracking(spark):
     """B5 cache semantics: prefetched = top similar to the recent
     context; hits/misses tracked; bounded by max_size."""

@@ -93,7 +93,7 @@ def main() -> int:
             # within-batch, index absorbed after each epoch
             from memfuse_spark.catalog import load_table
             from memfuse_spark.operators.dedup import incremental_neardup_pairs
-            from memfuse_spark.streaming.buffer import write_epoch
+            from memfuse_spark.streaming.buffer import read_epochs, write_epoch
 
             docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
             rows = docs.count()
@@ -109,7 +109,7 @@ def main() -> int:
                     # silent empty-index fallback here would measure the
                     # candidate join against nothing and report a
                     # wrongly-flat epoch time as scaling evidence
-                    index = spark.read.parquet(idx_path).filter(
+                    index = read_epochs(spark, idx_path).filter(
                         F.col("epoch_id") != e
                     ).select("doc_id", "band", "bucket")
                 else:
