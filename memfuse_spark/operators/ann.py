@@ -364,47 +364,15 @@ def ann_lsh_topk_multiprobe(
     )
 
 
-_BASE_EPOCH = -1  # compacted rows' epoch_id; stream epochs count from 0
-
-
 def compact_bucketed_corpus(spark, path: str) -> dict:
     """Segment-merge the bucketed vector store (the (epoch_id, bucket)
     epoch store buffer.write_vector_epoch appends to) back to one file
-    per bucket: every epoch folds into one ``epoch_id=_BASE_EPOCH``
-    partition, an epoch id no writer uses, so a later replay of an
-    epoch can never replace the folded rows. Shadow write with rows
-    co-located by bucket, then atomic directory swap (the tables.py
-    compact pattern — on a lakehouse this is OPTIMIZE). N epochs
-    otherwise leave N files per touched bucket and query-time IO
-    degrades linearly in segment count. Returns {"files_before",
-    "files_after"}.
+    per bucket: ``buffer.compact_epochs`` with the rows co-located by
+    bucket. Returns {"files_before", "files_after"}; the concurrency
+    contract is ``compact_epochs``'s."""
+    from memfuse_spark.streaming.buffer import compact_epochs
 
-    Concurrency: the swap is two sequential os.rename calls, so there
-    is a window where ``path`` does not exist — a CONCURRENT READER
-    (not just a concurrent writer) errors during that gap. This
-    single-writer, paused-reader contract differs from the postings
-    index, whose catalog-rename swap stays readable throughout; if
-    concurrent reads during compaction are needed, front the path with
-    a symlink or catalog indirection and repoint it atomically."""
-    import os
-    import shutil
-    import uuid
-
-    from memfuse_spark.streaming.buffer import read_epochs, write_epoch
-
-    df = read_epochs(spark, path)
-    files_before = len(df.inputFiles())
-    tag = uuid.uuid4().hex[:8]
-    tmp = f"{path}__tmp_{tag}"
-    write_epoch(df.repartition("bucket"), tmp, _BASE_EPOCH, "bucket")
-    old = f"{path}__old_{tag}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return {
-        "files_before": files_before,
-        "files_after": len(read_epochs(spark, path).inputFiles()),
-    }
+    return compact_epochs(spark, path, lambda df: df.repartition("bucket"), "bucket")
 
 
 def bucketed_topk(
@@ -991,10 +959,14 @@ def ivf_centroids(
     groupBy(cell) whose aggregate is an array of per-position avgs —
     a single Exchange of |cells| rows and no row explosion (r11; one
     parsed expression, so construction stays one py4j call). Each
-    ``avg(v[i])`` ignores NULL elements and missing positions exactly
-    as the explode path's per-(cell,pos) avg does (posexplode emits no
-    row where getItem yields NULL), so the two paths are value-
-    identical; both feed the same round().
+    ``avg(get(v, i))`` ignores NULL elements and missing positions
+    (``get`` reads NULL past a vector's end, where ``v[i]`` raises
+    under ANSI mode) exactly as the explode path's per-(cell,pos) avg
+    does, so the two paths are value-identical on every position some
+    member vector has; both feed the same round(). They differ at trailing positions that NO
+    member vector of a cell has (all its vectors shorter than ``dim``):
+    the ``dim=`` centroid still has ``dim`` elements, NULL there, while
+    the explode path's centroid is that much shorter.
 
     Default (dim unknown): posexplode → groupBy(cell, pos) avg →
     re-assemble ordered array. Two narrow shuffles over (cells × dim)
@@ -1002,7 +974,7 @@ def ivf_centroids(
     """
     if dim is not None:
         comps = ",".join(
-            f"round(avg(cast(`{vec_col}`[{i}] as double)), {decimals})"
+            f"round(avg(cast(get(`{vec_col}`, {i}) as double)), {decimals})"
             for i in range(dim)
         )
         return embeddings.groupBy(F.col(cell_col).alias("cell")).agg(

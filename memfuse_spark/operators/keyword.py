@@ -18,6 +18,8 @@ scores BM25 in a Python loop (memfuse `store/keyword_store/bm25_store.py:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1048,227 +1050,68 @@ def rm3_topk_from_index(
 
 
 # ---------------------------------------------------------------------------
-# incrementally-maintainable index (v2: df/stats kept OUT of posting rows)
+# the incremental index: an epoch store of mergeable partials
+# (streaming/buffer.write_index_epoch; df and stats kept OUT of posting rows)
 # ---------------------------------------------------------------------------
 
-def build_postings_index_v2(
-    spark,
-    docs: DataFrame,
-    name: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_buckets: int = 16,
-    path: str | None = None,
-) -> None:
-    """Index layout for INCREMENTAL maintenance: the term-bucketed
-    postings table carries (term, doc_id, tf, dl) only; document
-    frequency lives in a separate tiny ``{name}_df`` table and corpus
-    stats in ``{name}_stats``. Appending a document batch then touches
-    three algebraic pieces — new posting rows (pure append), df += df
-    of the delta (keyed add), stats re-derived from two sums — and
-    NEVER rewrites existing posting rows (the v1 layout embeds df on
-    every row, so one new occurrence of a term would dirty every
-    posting of that term). Query-time cost is one extra broadcast join
-    of the query terms' df rows — a few rows.
-    """
 
-    def _loc(writer, suffix=""):
-        if path is not None:
-            writer = writer.option("path", f"{path}/{name}{suffix}")
-        return writer
+def _index_store(spark, out_base: str, name: str) -> DataFrame:
+    """One store of the index at ``out_base``, read with its recorded
+    schema (``buffer.read_epochs``)."""
+    from memfuse_spark.streaming.buffer import read_epochs
 
-    postings = build_postings(docs, id_col, text_col)
-    _loc(
-        postings.write.mode("overwrite").format("parquet")
-    ).bucketBy(num_buckets, "term").sortBy("term").saveAsTable(name)
-    _loc(
-        document_frequency(spark.table(name))
-        .write.mode("overwrite")
-        .format("parquet"),
-        "_df",
-    ).saveAsTable(f"{name}_df")
-    _loc(
-        corpus_stats(spark.table(name)).write.mode("overwrite").format("parquet"),
-        "_stats",
-    ).saveAsTable(f"{name}_stats")
+    return read_epochs(spark, os.path.join(out_base, name))
 
 
-def update_postings_index_v2(
-    spark,
-    name: str,
-    new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_buckets: int = 16,
-    path: str | None = None,
-) -> None:
-    """Append a document batch to a v2 index: postings of the delta are
-    INSERTed (bucketed append — only the delta shuffles), df merges by
-    keyed addition, stats recombine from (n_docs, avgdl) pairs as the
-    weighted mean. Cost scales with the batch, not the corpus — the
-    incremental contract `test_keyword.py` asserts against a full
-    rebuild."""
-    delta = build_postings(new_docs, id_col, text_col)
-    delta.write.mode("append").format("parquet").insertInto(name)
+def _sum_df(dfparts: DataFrame) -> DataFrame:
+    """(term, df): the df partials merged by keyed sum."""
+    return dfparts.groupBy("term").agg(F.sum("df").cast("long").alias("df"))
 
-    old_df = spark.table(f"{name}_df")
-    merged_df = (
-        old_df.unionByName(document_frequency(delta))
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
+
+def _mean_stats(statsparts: DataFrame) -> DataFrame:
+    """(n_docs, avgdl): the stats partials merged as the weighted mean."""
+    return statsparts.agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        (F.sum(F.col("avgdl") * F.col("n_docs")) / F.sum("n_docs")).alias("avgdl"),
     )
-    old_stats = spark.table(f"{name}_stats")
-    delta_stats = corpus_stats(delta)
-    merged_stats = (
-        old_stats.select("n_docs", "avgdl")
-        .unionByName(delta_stats.select("n_docs", "avgdl"))
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            (
-                F.sum(F.col("avgdl") * F.col("n_docs")) / F.sum("n_docs")
-            ).alias("avgdl"),
-        )
-    )
-    # the side tables are O(vocab) and O(1) rows — rewritten whole, but
-    # via localCheckpoint (executor-side materialization that truncates
-    # lineage) so the overwrite no longer references the table it reads
-    # and nothing vocab-sized ever lands on the driver
-    from memfuse_spark import cache as _cache
-
-    for tbl, df_new in ((f"{name}_df", merged_df), (f"{name}_stats", merged_stats)):
-        # tracked checkpoint: DataFrame.unpersist() does NOT release a
-        # localCheckpoint's underlying RDD blocks — release by RDD id
-        # (the graph/kcore discipline) or repeated updates leak 2
-        # cached RDDs each
-        snap, snap_ids = _cache.tracked_local_checkpoint(
-            df_new, "keyword.update_v2"
-        )
-        writer = snap.write.mode("overwrite").format("parquet")
-        if path is not None:
-            suffix = tbl[len(name):]
-            writer = writer.option("path", f"{path}/{name}{suffix}")
-        writer.saveAsTable(tbl)
-        _cache.unpersist_rdd_ids(spark, snap_ids)
 
 
-def compact_postings_index_v2(
-    spark,
-    name: str,
-    num_buckets: int = 16,
-    path: str | None = None,
-) -> dict:
-    """Segment-merge compaction for a v2 index — the lakehouse
-    OPTIMIZE step for the inverted index. Each incremental
-    :func:`update_postings_index_v2` appends ≥1 file per non-empty
-    bucket, so after N batches a bucket holds ~N small unsorted
-    segments and query latency degrades linearly in segment count.
-    Compaction shadow-writes the accumulated postings into a FRESH
-    bucketed table (`repartition(num_buckets, term)` aligns one task
-    per bucket → exactly one sorted file each), re-derives df and
-    stats from the postings themselves (self-healing: any drift the
-    keyed-add side tables accumulated is repaired), then swaps the
-    catalog name. On a lakehouse the swap is `REPLACE TABLE` /
-    `OPTIMIZE`; plain parquet tables get drop+rename, which is
-    single-writer only (noted, not hidden).
-
-    Returns ``{"files_before": int, "files_after": int}``.
-    """
-    import shutil
-    import uuid
-
-    files_before = len(spark.table(name).inputFiles())
-    tmp = f"{name}__compact"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    # repartition by the BUCKET ID expression (pmod(murmur3, n) — the
-    # same formula the bucketed writer uses), not by the raw column:
-    # that co-locates every row of a bucket in one task, so each
-    # non-empty bucket gets exactly one output file even when AQE
-    # re-lays-out the shuffle read
-    bucket_id = F.pmod(F.hash("term"), F.lit(num_buckets))
-    writer = (
-        spark.table(name)
-        .repartition(num_buckets, bucket_id)
-        .write.mode("overwrite")
-        .format("parquet")
-    )
-    old_loc = None
-    if path is not None:
-        # The superseded segment directory is the table's ACTUAL
-        # location (after a first compaction that is
-        # {path}/{name}__g<tag>, not the {path}/{name} convention) —
-        # read it from the catalog so a second compaction reclaims the
-        # real directory instead of rmtree'ing a nonexistent path and
-        # leaking the old segment.
-        desc = spark.sql(f"DESCRIBE EXTENDED {name}").collect()
-        loc = next(
-            (r.data_type for r in desc if r.col_name == "Location"), None
-        )
-        if loc is not None:
-            old_loc = loc.removeprefix("file:")
-        writer = writer.option("path", f"{path}/{name}__g{uuid.uuid4().hex[:8]}")
-    writer.bucketBy(num_buckets, "term").sortBy("term").saveAsTable(tmp)
-
-    # re-derive the side tables from the compacted postings (tiny:
-    # O(vocab) and O(1) rows; localCheckpoint breaks the read-write
-    # cycle exactly as update_postings_index_v2 does)
-    from memfuse_spark import cache as _cache
-
-    compacted = spark.table(tmp)
-    for suffix, df_new in (
-        ("_df", document_frequency(compacted)),
-        ("_stats", corpus_stats(compacted)),
-    ):
-        # tracked checkpoint (see update_postings_index_v2): plain
-        # DataFrame.unpersist() leaks the checkpoint's RDD blocks
-        snap, snap_ids = _cache.tracked_local_checkpoint(
-            df_new, "keyword.compact_v2"
-        )
-        w = snap.write.mode("overwrite").format("parquet")
-        if path is not None:
-            w = w.option("path", f"{path}/{name}{suffix}")
-        w.saveAsTable(f"{name}{suffix}")
-        _cache.unpersist_rdd_ids(spark, snap_ids)
-
-    spark.sql(f"DROP TABLE {name}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {name}")
-    # self-heal the served side tables (norms / FastSS variants) if the
-    # index carries them: they are exact-as-of-last-compaction artifacts
-    # (incremental updates leave them stale by design — O(batch) appends
-    # cannot rewrite corpus-sized tables), so compaction is where they
-    # re-sync with the postings
-    if spark.catalog.tableExists(f"{name}_norms"):
-        build_norms_index_v2(spark, name, num_buckets, path)
-    if spark.catalog.tableExists(f"{name}_delvar"):
-        build_spellfix_index_v2(spark, name, path)
-    if old_loc is not None:
-        # reclaim the superseded segment files (local FS here; a real
-        # deployment reclaims via the table format's vacuum)
-        shutil.rmtree(old_loc, ignore_errors=True)
-    return {
-        "files_before": files_before,
-        "files_after": len(spark.table(name).inputFiles()),
-    }
+def _sorted_files(df: DataFrame, col: str) -> DataFrame:
+    """Files range-partitioned and sorted by ``col``, so a point or
+    ``isin`` predicate on it skips files by their min/max. AQE merges
+    neighbouring ranges, so the file count follows the data size (a
+    small store compacts to one file) instead of a fixed partition
+    count that would split a small store into more files than it had."""
+    return df.repartitionByRange(col).sortWithinPartitions(col)
 
 
-def bm25_topk_from_index_v2(
-    spark,
-    name: str,
-    query: str,
-    k: int,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    score_decimals: int = 6,
-) -> DataFrame:
-    """BM25 against a v2 index: bucket-pruned postings scan + broadcast
-    join of the query terms' df rows + broadcast stats."""
-    q_terms = sorted({t for t in _py_tokenize(query)})
-    postings = spark.table(name).filter(F.col("term").isin(q_terms))
-    dfs = spark.table(f"{name}_df").filter(F.col("term").isin(q_terms))
-    stats = spark.table(f"{name}_stats")
-    matched = postings.join(F.broadcast(dfs), "term").crossJoin(
-        F.broadcast(stats)
-    )
-    return _bm25_score(matched, k, k1, b, score_decimals)
+def compact_stream_index(spark, out_base: str) -> dict:
+    """Segment-merge the index at ``out_base`` (the epochs
+    ``buffer.write_index_epoch`` appends): each of its three stores is
+    folded by ``buffer.compact_epochs``. Postings land in files
+    range-partitioned and sorted by term (:func:`_sorted_files`), so the
+    query-term ``isin`` skips files by min/max; the df partials fold to
+    one row per term (an exact long sum); the stats partials are carried
+    unchanged, so the readers' weighted mean sees the same addends. The
+    norms and FastSS stores (:func:`build_norms_index`,
+    :func:`build_spellfix_index`) are exact as of their last build, as
+    an append cannot rewrite a corpus-sized artifact and stay O(batch);
+    compaction rebuilds the ones that exist. Returns the postings
+    store's {"files_before", "files_after"}; the concurrency contract is
+    ``compact_epochs``'s."""
+    from memfuse_spark.streaming.buffer import compact_epochs
+
+    def store(name: str) -> str:
+        return os.path.join(out_base, name)
+
+    report = compact_epochs(spark, store("postings"), lambda df: _sorted_files(df, "term"))
+    compact_epochs(spark, store("dfparts"), _sum_df)
+    compact_epochs(spark, store("statsparts"), lambda df: df.coalesce(1))
+    if os.path.exists(store("norms")):
+        build_norms_index(spark, out_base)
+    if os.path.exists(store("delvar")):
+        build_spellfix_index(spark, out_base)
+    return report
 
 
 def bm25_topk_from_stream_index(
@@ -1280,12 +1123,13 @@ def bm25_topk_from_stream_index(
     b: float = BM25_B,
     score_decimals: int = 6,
 ) -> DataFrame:
-    """BM25 against a streaming-maintained index (streaming/buffer.
-    index_ingest_stream): postings are filtered to the query terms
-    (partition-pruned epoch layout), the per-epoch df partials merge by
-    keyed SUM and the stats partials recombine as the weighted mean —
-    the associative-merge read side of the mergeable-partial design.
-    Scores equal the ad-hoc / v2-index paths by construction.
+    """BM25 against the incremental index (streaming/buffer.
+    write_index_epoch and index_ingest_stream): postings are filtered to
+    the query terms (partition-pruned epoch layout), the per-epoch df
+    partials merge by keyed SUM and the stats partials recombine as the
+    weighted mean — the associative-merge read side of the
+    mergeable-partial design. Scores equal the ad-hoc / v1-index paths
+    by construction.
 
     The three stores are read through ``buffer.read_epochs`` with the
     schema each one recorded in its ``_schema.json``, so building the
@@ -1293,33 +1137,12 @@ def bm25_topk_from_stream_index(
     each merges in one partition (``coalesce(1)`` before the aggregate)
     with no shuffle: collecting the result takes at most 4 jobs, one per
     partial broadcast and two for the postings scan with its top-k."""
-    import os
-
-    from memfuse_spark.streaming.buffer import read_epochs
-
     q_terms = sorted({t for t in _py_tokenize(query)})
-
-    def store(name: str) -> DataFrame:
-        return read_epochs(spark, os.path.join(out_base, name))
-
-    postings = store("postings").filter(F.col("term").isin(q_terms))
-    dfs = (
-        store("dfparts")
-        .filter(F.col("term").isin(q_terms))
-        .coalesce(1)
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
+    postings = _index_store(spark, out_base, "postings").filter(F.col("term").isin(q_terms))
+    dfs = _sum_df(
+        _index_store(spark, out_base, "dfparts").filter(F.col("term").isin(q_terms)).coalesce(1)
     )
-    stats = (
-        store("statsparts")
-        .coalesce(1)
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            (F.sum(F.col("avgdl") * F.col("n_docs")) / F.sum("n_docs")).alias(
-                "avgdl"
-            ),
-        )
-    )
+    stats = _mean_stats(_index_store(spark, out_base, "statsparts").coalesce(1))
     matched = postings.join(F.broadcast(dfs), "term").crossJoin(
         F.broadcast(stats)
     )
@@ -1505,35 +1328,34 @@ def bm25_batch_topk_from_index(
 # ---------------------------------------------------------------------------
 
 
-def build_norms_index_v2(
-    spark, name: str, num_buckets: int = 16, path: str | None = None
-) -> None:
-    """Materialize the per-doc FORWARD side table ``{name}_norms``
-    (doc_id, nrm, terms) of a v2 postings index: the TF-IDF norm plus
-    the document's sorted distinct term list — the artifacts
+def build_norms_index(spark, out_base: str) -> None:
+    """Write the per-doc FORWARD store ``norms`` (doc_id, nrm, terms) of
+    the index at ``out_base``: the TF-IDF norm plus the document's
+    sorted distinct term list — the artifacts
     :func:`more_like_this_from_index` reads instead of re-aggregating
     (norm) or corpus-scanning (anchor term lookup) per query.
 
     w = (tf/dl) · ln((N+1)/(df+1)); nrm = sqrt(Σ_t w²) per document.
 
-    Bucketed by doc_id, so the query-time dots⋈norms join never
-    shuffles the corpus-sized norms side AND the anchor's forward row
-    is a bucket-pruned point lookup (the postings table itself is
-    term-bucketed — a doc_id filter there cannot prune). Norms depend
-    on corpus-global df/N, so they are EXACT as of the last
-    build/compaction: :func:`update_postings_index_v2` leaves them
-    stale (the standard IR-index convention — a batch append cannot
-    rewrite a corpus-sized artifact and stay O(batch));
-    :func:`compact_postings_index_v2` self-heals them, asserted by the
-    lifecycle test."""
-    postings = spark.table(name)
-    dfs = spark.table(f"{name}_df")
-    stats = spark.table(f"{name}_stats")
+    The store is one base epoch (``buffer.write_epoch``; a rebuild
+    replaces it), range-partitioned and sorted by doc_id, so the
+    anchor's forward row is a point lookup that skips files by min/max
+    (the postings are sorted by term — a doc_id filter there cannot
+    skip). Norms depend on corpus-global df/N, so they are EXACT as of
+    the last build/compaction: an appended epoch leaves them stale (the
+    standard IR-index convention — a batch append cannot rewrite a
+    corpus-sized artifact and stay O(batch)); :func:`compact_stream_index`
+    rebuilds them, asserted by the lifecycle test."""
+    from memfuse_spark.streaming.buffer import _BASE_EPOCH, write_epoch
+
+    dfs = _sum_df(_index_store(spark, out_base, "dfparts"))
+    stats = _mean_stats(_index_store(spark, out_base, "statsparts"))
     w = (F.col("tf") / F.col("dl")) * F.log(
         (F.col("n_docs") + 1.0) / (F.col("df") + 1.0)
     )
     norms = (
-        postings.join(dfs, "term")
+        _index_store(spark, out_base, "postings")
+        .join(dfs, "term")
         .crossJoin(F.broadcast(stats))
         .groupBy("doc_id")
         .agg(
@@ -1541,74 +1363,67 @@ def build_norms_index_v2(
             F.array_sort(F.collect_list("term")).alias("terms"),
         )
     )
-    spark.sql(f"DROP TABLE IF EXISTS {name}_norms")
-    writer = norms.write.mode("overwrite").format("parquet")
-    if path is not None:
-        writer = writer.option("path", f"{path}/{name}_norms")
-    writer.bucketBy(num_buckets, "doc_id").sortBy("doc_id").saveAsTable(
-        f"{name}_norms"
-    )
+    write_epoch(_sorted_files(norms, "doc_id"), os.path.join(out_base, "norms"), _BASE_EPOCH)
 
 
 def more_like_this_from_index(
     spark,
-    name: str,
+    out_base: str,
     anchor_id: int,
     k: int,
     score_decimals: int = 6,
 ) -> DataFrame:
-    """:func:`more_like_this` against a prebuilt v2 index with a
-    ``{name}_norms`` side table (build_norms_index_v2) — the served
-    shape: per-doc norms are a SCAN, not a per-query re-aggregation of
-    the whole corpus, and candidate postings are bucket-pruned to the
-    anchor's terms.
+    """:func:`more_like_this` against the index at ``out_base`` with its
+    ``norms`` store (build_norms_index) — the served shape: per-doc
+    norms are a SCAN, not a per-query re-aggregation of the whole
+    corpus, and candidate postings are pruned to the anchor's terms.
 
-    Plan: (1) point-lookup the anchor's term list (≤ one document's
-    terms on the driver — the same bounded two-job shape as RM3);
-    (2) one isin-pruned postings scan over those terms, broadcast df
-    rows, JVM-side weights; (3) dot products grouped by doc_id;
-    (4) join the STORED norms table (doc_id-bucketed — no shuffle of
-    the corpus side). Per-query cost is O(anchor terms × their posting
-    lists), with the only corpus-sized aggregation paid at index time."""
-    result = more_like_this_plan(spark, name, anchor_id, k, score_decimals)
+    Plan: (1) point-lookup the anchor's term list and (2) collect the
+    merged df of those terms with N (each ≤ one document's terms on the
+    driver — the same bounded shape as RM3); (3) one isin-pruned
+    postings scan over those terms, broadcast df rows, JVM-side weights;
+    (4) dot products grouped by doc_id; (5) join the STORED norms. Per-
+    query cost is O(anchor terms × their posting lists), with the only
+    corpus-sized aggregation paid at index time. An anchor missing from
+    the store yields no rows."""
+    result = more_like_this_plan(spark, out_base, anchor_id, k, score_decimals)
     rows = result.collect()  # ≤ k rows
     return spark.createDataFrame(rows, schema=result.schema)
 
 
 def more_like_this_plan(
     spark,
-    name: str,
+    out_base: str,
     anchor_id: int,
     k: int,
     score_decimals: int = 6,
 ) -> DataFrame:
     """The LAZY plan behind :func:`more_like_this_from_index` (exposed
-    so the plan-shape test can assert the norms subtree is a table
-    scan, not a re-aggregation)."""
-    postings = spark.table(name)
-    norms = spark.table(f"{name}_norms").select("doc_id", "nrm")
-    # anchor term list: bucket-pruned point lookup on the doc_id-
-    # bucketed forward table (≤ one document's distinct terms on the
-    # driver — the RM3-style bounded two-job shape)
-    fwd = (
-        spark.table(f"{name}_norms")
-        .filter(F.col("doc_id") == anchor_id)
-        .select("terms")
-        .collect()
-    )
-    terms = sorted(fwd[0].terms) if fwd else []
+    so the plan-shape test can assert the norms subtree is a file scan,
+    not a re-aggregation). The anchor's terms and their df rows are
+    collected while it is built."""
+    postings = _index_store(spark, out_base, "postings")
+    fwd = _index_store(spark, out_base, "norms").select("doc_id", "nrm", "terms")
+    norms = fwd.select("doc_id", "nrm")
+    anchor_terms = fwd.filter(F.col("doc_id") == anchor_id).select("terms").collect()
+    terms = sorted(anchor_terms[0].terms) if anchor_terms else []
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    dfs = spark.table(f"{name}_df").filter(F.col("term").isin(terms))
-    stats = spark.table(f"{name}_stats")
+    # the merged df of the anchor's terms with N, as a local relation:
+    # the per-query plan aggregates only the dot products
+    dfs = spark.createDataFrame(
+        _sum_df(
+            _index_store(spark, out_base, "dfparts").filter(F.col("term").isin(terms)).coalesce(1)
+        )
+        .crossJoin(_mean_stats(_index_store(spark, out_base, "statsparts").coalesce(1)))
+        .select("term", "df", "n_docs")
+        .collect(),
+        "term string, df long, n_docs long",
+    )
     w_expr = (F.col("tf") / F.col("dl")) * F.log(
         (F.col("n_docs") + 1.0) / (F.col("df") + 1.0)
     )
-    cand = (
-        postings.filter(F.col("term").isin(terms))
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(stats))
-    )
+    cand = postings.filter(F.col("term").isin(terms)).join(F.broadcast(dfs), "term")
     anchor = cand.filter(F.col("doc_id") == anchor_id).select(
         "term", w_expr.alias("wa")
     )
@@ -1650,11 +1465,11 @@ def _deletion_variants(tok: str) -> list[str]:
     return sorted(out)
 
 
-def build_spellfix_index_v2(spark, name: str, path: str | None = None) -> None:
-    """Materialize the FastSS (Bocek et al. '07) deletion-variant
-    vocabulary index ``{name}_delvar`` (variant, term, freq) from a v2
-    postings table — the served replacement for spellfix_topk's
-    per-query full-vocabulary levenshtein scan. Same k=2 blocking as
+def build_spellfix_index(spark, out_base: str) -> None:
+    """Write the FastSS (Bocek et al. '07) deletion-variant vocabulary
+    store ``delvar`` (variant, term, freq) of the index at ``out_base``
+    — the served replacement for spellfix_topk's per-query
+    full-vocabulary levenshtein scan. Same k=2 blocking as
     textanalysis.typo_pairs: dist(a,b) ≤ 2 ⟹ U2(a) ∩ U2(b) ≠ ∅, so a
     query-time EQUI-join on the variant key yields a candidate superset
     verified with levenshtein on candidate-count rows only.
@@ -1662,9 +1477,15 @@ def build_spellfix_index_v2(spark, name: str, path: str | None = None) -> None:
     Full vocabulary (no length/frequency floor — correction must reach
     every term spellfix_topk can reach); fan-out is O(len²) variants
     per term, constant per token. freq (corpus tf sum, the tie-break
-    key) is denormalized onto the variant rows; like the norms table
-    it is exact as of the last build/compaction."""
-    vocab = spark.table(name).groupBy("term").agg(F.sum("tf").alias("freq"))
+    key) is denormalized onto the variant rows; like the norms store it
+    is one base epoch, exact as of the last build/compaction."""
+    from memfuse_spark.streaming.buffer import _BASE_EPOCH, write_epoch
+
+    vocab = (
+        _index_store(spark, out_base, "postings")
+        .groupBy("term")
+        .agg(F.sum("tf").alias("freq"))
+    )
     del1 = (
         "transform(sequence(1, length(term)), "
         "i -> concat(substring(term, 1, i - 1), "
@@ -1691,16 +1512,12 @@ def build_spellfix_index_v2(spark, name: str, path: str | None = None) -> None:
             )
         ).alias("variant"),
     )
-    spark.sql(f"DROP TABLE IF EXISTS {name}_delvar")
-    writer = delvar.write.mode("overwrite").format("parquet")
-    if path is not None:
-        writer = writer.option("path", f"{path}/{name}_delvar")
-    writer.saveAsTable(f"{name}_delvar")
+    write_epoch(delvar, os.path.join(out_base, "delvar"), _BASE_EPOCH)
 
 
 def spellfix_topk_from_index(
     spark,
-    name: str,
+    out_base: str,
     query: str,
     k: int,
     max_dist: int = SPELLFIX_MAX_DIST,
@@ -1708,8 +1525,8 @@ def spellfix_topk_from_index(
     b: float = BM25_B,
     score_decimals: int = 6,
 ) -> DataFrame:
-    """:func:`spellfix_topk` against a prebuilt v2 index with a
-    ``{name}_delvar`` FastSS side table (build_spellfix_index_v2) —
+    """:func:`spellfix_topk` against the index at ``out_base`` with its
+    ``delvar`` FastSS store (build_spellfix_index) —
     the served shape the ad-hoc docstring promises: correction
     candidates come from an index EQUI-join on the deletion-variant
     key (the query's U2 set, a few dozen broadcast rows), never a
@@ -1724,11 +1541,11 @@ def spellfix_topk_from_index(
         )
     q_terms = sorted({t for t in _py_tokenize(query)})
     if not q_terms:
-        return bm25_topk_from_index_v2(spark, name, "", k, k1, b, score_decimals)
+        return bm25_topk_from_stream_index(spark, out_base, "", k, k1, b, score_decimals)
     qvar = [(t, v) for t in q_terms for v in _deletion_variants(t)]
     qdf = spark.createDataFrame(qvar, "qterm string, variant string")
     cand = (
-        spark.table(f"{name}_delvar")
+        _index_store(spark, out_base, "delvar")
         .join(F.broadcast(qdf), "variant")
         .select("qterm", "term", "freq")
         .distinct()
@@ -1747,6 +1564,6 @@ def spellfix_topk_from_index(
             .collect()  # ≤ |query terms| rows
         }
     )
-    return bm25_topk_from_index_v2(
-        spark, name, " ".join(corrected), k, k1, b, score_decimals
+    return bm25_topk_from_stream_index(
+        spark, out_base, " ".join(corrected), k, k1, b, score_decimals
     )

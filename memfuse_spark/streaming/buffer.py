@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from collections.abc import Iterator
 from typing import Any
@@ -148,6 +149,8 @@ def round_buffer_stream(messages: DataFrame) -> DataFrame:
 
 
 SCHEMA_FILE = "_schema.json"  # an epoch store's recorded read schema
+BASE_FILE = "_base_epochs.json"  # the epoch ids compaction folded into the base
+_BASE_EPOCH = -1  # compacted rows' epoch_id; stream epochs count from 0
 
 
 def write_epoch(df: DataFrame, path: str, epoch_id: int, *partition_cols: str) -> None:
@@ -155,7 +158,10 @@ def write_epoch(df: DataFrame, path: str, epoch_id: int, *partition_cols: str) -
     ``epoch_id`` partition (``partition_cols`` nest below it), written
     with dynamic partition overwrite as a write option, so replaying an
     epoch REPLACES its own partitions instead of double-appending. Every
-    epoch store in the engine is written through here.
+    epoch store in the engine is written through here. An epoch that
+    :func:`compact_epochs` already folded into the store's base (listed
+    in its hidden ``_base_epochs.json``) is skipped, so replaying it
+    after a compaction is a no-op too.
 
     After the data commit the store's read schema is recorded in the
     hidden ``_schema.json`` at the store root (Spark, pyarrow and DuckDB
@@ -169,6 +175,8 @@ def write_epoch(df: DataFrame, path: str, epoch_id: int, *partition_cols: str) -
     it, so a query starts no schema-inference job. An epoch whose column
     names or types differ from the recorded schema (nullability aside)
     raises ``ValueError`` before anything is written."""
+    if epoch_id in _base_epochs(path):
+        return
     out = df.withColumn("epoch_id", F.lit(epoch_id))
     parts = ["epoch_id", *partition_cols]
     data = StructType([f for f in out.schema.fields if f.name not in parts])
@@ -195,15 +203,27 @@ def write_epoch(df: DataFrame, path: str, epoch_id: int, *partition_cols: str) -
     for c in parts:
         if c not in schema.names:
             schema.add(c, out.schema[c].dataType)
-    tmp = os.path.join(path, f"{SCHEMA_FILE}.{uuid.uuid4().hex}")
+    _write_atomic(os.path.join(path, SCHEMA_FILE), schema.json())
+
+
+def _write_atomic(path: str, text: str) -> None:
+    tmp = f"{path}.{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
-        fh.write(schema.json())
-    os.replace(tmp, os.path.join(path, SCHEMA_FILE))
+        fh.write(text)
+    os.replace(tmp, path)
 
 
 def _recorded_schema(path: str) -> StructType:
     with open(os.path.join(path, SCHEMA_FILE)) as fh:
         return StructType.fromJson(json.load(fh))
+
+
+def _base_epochs(path: str) -> set[int]:
+    try:
+        with open(os.path.join(path, BASE_FILE)) as fh:
+            return set(json.load(fh))
+    except FileNotFoundError:
+        return set()
 
 
 def read_epochs(spark: SparkSession, path: str) -> DataFrame:
@@ -219,6 +239,48 @@ def read_epochs(spark: SparkSession, path: str) -> DataFrame:
             f"{path} is not a parquet epoch store written by write_epoch: no {SCHEMA_FILE}"
         ) from e
     return spark.read.schema(schema).parquet(path)
+
+
+def compact_epochs(spark: SparkSession, path: str, fold, *partition_cols: str) -> dict:
+    """Segment-merge the epoch store at ``path``: every epoch folds into
+    one ``epoch_id=_BASE_EPOCH`` partition (``partition_cols`` nest
+    below it, as :func:`write_epoch` lays them out), an epoch id no
+    writer uses. ``fold`` maps all the store's rows to the base's rows
+    and sets their file layout; each store passes its own. N appended
+    epochs otherwise leave N small files per partition, and query-time
+    IO degrades linearly in segment count. The base is shadow-written
+    next to the store, then swapped in by directory rename (on a
+    lakehouse this is OPTIMIZE). The shadow also records, atomically
+    and before the swap, which epoch ids the base now holds; the swap
+    moves that record with the data, and :func:`write_epoch` skips
+    those ids, so replaying a folded epoch cannot add its rows twice.
+    Returns {"files_before", "files_after"}.
+
+    Concurrency: the swap is two sequential os.rename calls, so there
+    is a window where ``path`` does not exist. A concurrent reader, not
+    just a concurrent writer, errors during that gap; this holds for
+    the vector store and for each of the keyword index's stores. The
+    contract is single writer, paused readers. If reads must continue
+    during compaction, front the path with a symlink or a catalog
+    indirection and repoint it atomically."""
+    df = read_epochs(spark, path)
+    files_before = len(df.inputFiles())
+    folded = _base_epochs(path) | {
+        int(d.split("=", 1)[1]) for d in os.listdir(path) if d.startswith("epoch_id=")
+    }
+    folded.discard(_BASE_EPOCH)
+    tag = uuid.uuid4().hex[:8]
+    tmp = f"{path}__tmp_{tag}"
+    write_epoch(fold(df), tmp, _BASE_EPOCH, *partition_cols)
+    _write_atomic(os.path.join(tmp, BASE_FILE), json.dumps(sorted(folded)))
+    old = f"{path}__old_{tag}"
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+    return {
+        "files_before": files_before,
+        "files_after": len(read_epochs(spark, path).inputFiles()),
+    }
 
 
 def _epoch_stream(stream: DataFrame, out_base: str, process_batch) -> "StreamingQuery":
@@ -519,19 +581,20 @@ def index_ingest_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> "StreamingQuery":
-    """Streaming maintenance of the inverted index — the live-service
-    twin of keyword.build_postings_index_v2/update_postings_index_v2.
+    """Streaming maintenance of the incremental inverted index: each
+    micro-batch is one :func:`write_index_epoch`, the same epoch a batch
+    build (epoch 0) or append (the next epoch) writes.
 
     Per micro-batch, THREE associative partials land as epoch_id
     partitions with dynamic overwrite (a replayed epoch replaces its
     own partitions — the exactly-once pattern every sink here uses):
     the batch's postings rows, its per-term df partial, and its
     (n_docs, avgdl) stats partial. Because document frequency and
-    corpus stats are MERGEABLE (keyed sum / weighted mean), nothing
-    historical is ever rewritten — unlike the batch updater, which
-    rewrites the O(vocab) side tables per append. Query-time merge is
+    corpus stats are MERGEABLE (keyed sum / weighted mean), an append
+    rewrites nothing historical. Query-time merge is
     keyword.bm25_topk_from_stream_index: filter postings to the query
-    terms, sum the df partials, recombine stats.
+    terms, sum the df partials, recombine stats;
+    keyword.compact_stream_index folds the epochs into one base.
 
     Outputs under out_base: ``postings/``, ``dfparts/``, ``statsparts/``.
     """
@@ -551,8 +614,8 @@ def write_index_epoch(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """One epoch's index partials (shared by the stream above and its
-    batch twin): postings + df partial + stats partial, each under an
+    """One epoch's index partials (shared by the stream above and the
+    batch builds): postings + df partial + stats partial, each under an
     epoch_id partition with dynamic overwrite (replay-safe)."""
     from memfuse_spark.operators.keyword import (
         build_postings,
@@ -578,7 +641,7 @@ def write_vector_epoch(
     vec_col: str = "embedding",
 ) -> None:
     """One epoch of the LSH-bucketed vector store (shared by the stream
-    below, its batch twin and ann.compact_bucketed_corpus's store):
+    below and its batch twin; ann.compact_bucketed_corpus compacts it):
     rows land under (epoch_id, bucket) partitions with dynamic overwrite,
     so a replayed epoch rewrites exactly its own partitions, and
     ann.bucketed_topk's bucket predicate still prunes partitions (bucket

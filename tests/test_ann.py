@@ -39,6 +39,28 @@ def test_ivf_centroids_shape(tables):
     assert all(len(r.centroid) == 64 for r in cents)
 
 
+def test_ivf_centroids_dim_path_ragged_edges(spark):
+    """The ``dim=`` one-pass path against the posexplode path on ragged
+    input: a NULL element is skipped by both averages, so the centroids
+    are equal; a cell whose vectors are all shorter than ``dim`` gets a
+    trailing NULL from ``dim=`` where the posexplode path returns a
+    shorter array (the documented difference)."""
+    emb = spark.createDataFrame(
+        [
+            (0, "a", [1.0, None, 3.0]),
+            (1, "a", [3.0, 2.0, 5.0]),
+            (2, "b", [1.0, 2.0]),
+            (3, "b", [3.0, 4.0]),
+        ],
+        "vec_id long, label string, embedding array<double>",
+    )
+    by_dim = {r.cell: r.centroid for r in ivf_centroids(emb, dim=3).collect()}
+    exploded = {r.cell: r.centroid for r in ivf_centroids(emb).collect()}
+    assert by_dim["a"] == exploded["a"] == [2.0, 2.0, 4.0]
+    assert by_dim["b"] == [2.0, 3.0, None]
+    assert exploded["b"] == [2.0, 3.0]
+
+
 def test_ivf_assign_covers_all(tables):
     emb = tables["embeddings"]
     cents = ivf_centroids(emb)

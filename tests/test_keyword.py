@@ -270,16 +270,30 @@ def test_rm3_index_path_matches_adhoc(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {name}_stats")
 
 
-def test_v2_index_incremental_update_matches_rebuild(spark, tmp_path):
-    """Appending a batch to the v2 index must equal a full rebuild over
-    the union corpus — postings appended, df keyed-add, stats weighted
-    — and query results must match the ad-hoc BM25 on the union."""
-    from memfuse_spark.operators.keyword import (
-        bm25_topk,
-        bm25_topk_from_index_v2,
-        build_postings_index_v2,
-        update_postings_index_v2,
-    )
+def _merged_index(spark, out_base):
+    """The incremental index at ``out_base`` as a reader sees it, one
+    entry per merged partial: postings rows, df summed per term, and
+    the weighted-mean (n_docs, avgdl)."""
+    from memfuse_spark.operators.keyword import _mean_stats, _sum_df
+    from memfuse_spark.streaming.buffer import read_epochs
+
+    def store(name):
+        return read_epochs(spark, f"{out_base}/{name}")
+
+    return {
+        "postings": sorted(map(tuple, store("postings").drop("epoch_id").collect())),
+        "df": sorted(map(tuple, _sum_df(store("dfparts")).collect())),
+        "stats": sorted(map(tuple, _mean_stats(store("statsparts")).collect())),
+    }
+
+
+def test_index_epoch_append_matches_rebuild(spark, tmp_path):
+    """Appending a batch to the incremental index as its next epoch must
+    equal a full rebuild over the union corpus, per merged partial —
+    postings appended, df keyed-add, stats weighted — and query results
+    must match the ad-hoc BM25 on the union."""
+    from memfuse_spark.operators.keyword import bm25_topk, bm25_topk_from_stream_index
+    from memfuse_spark.streaming.buffer import write_index_epoch
 
     base = spark.createDataFrame(
         [
@@ -296,47 +310,39 @@ def test_v2_index_incremental_update_matches_rebuild(spark, tmp_path):
         ],
         "doc_id bigint, text string",
     )
-    inc, reb = "v2_inc", "v2_reb"
-    try:
-        build_postings_index_v2(spark, base, inc, path=str(tmp_path / "a"))
-        update_postings_index_v2(spark, inc, delta, path=str(tmp_path / "a"))
-        build_postings_index_v2(
-            spark, base.unionByName(delta), reb, path=str(tmp_path / "b")
-        )
-        for side in ("", "_df", "_stats"):
-            a = sorted(map(tuple, spark.table(inc + side).collect()))
-            b = sorted(map(tuple, spark.table(reb + side).collect()))
-            assert a == b, side
+    inc, reb = str(tmp_path / "a"), str(tmp_path / "b")
+    write_index_epoch(base, inc, 0)
+    write_index_epoch(delta, inc, 1)
+    write_index_epoch(base.unionByName(delta), reb, 0)
+    a, b = _merged_index(spark, inc), _merged_index(spark, reb)
+    for side in ("postings", "df", "stats"):
+        assert a[side] == b[side], side
 
-        q = "spark query scan"
-        via_idx = [
-            (r.doc_id, r.score)
-            for r in bm25_topk_from_index_v2(spark, inc, q, 5).collect()
-        ]
-        adhoc = [
-            (r.doc_id, r.score)
-            for r in bm25_topk(base.unionByName(delta), q, 5).collect()
-        ]
-        assert via_idx == adhoc
-    finally:
-        for n in ("v2_inc", "v2_reb"):
-            for side in ("", "_df", "_stats"):
-                spark.sql(f"DROP TABLE IF EXISTS {n}{side}")
+    q = "spark query scan"
+    via_idx = [
+        (r.doc_id, r.score)
+        for r in bm25_topk_from_stream_index(spark, inc, q, 5).collect()
+    ]
+    adhoc = [
+        (r.doc_id, r.score)
+        for r in bm25_topk(base.unionByName(delta), q, 5).collect()
+    ]
+    assert via_idx == adhoc
 
 
-def test_v2_index_compaction_merges_segments_and_preserves_results(
-    spark, tmp_path
-):
-    """Compaction must (a) shrink the postings segment count to one
-    file per non-empty bucket, (b) leave every table byte-identical in
-    content to a fresh rebuild (self-healed df/stats included), and
-    (c) leave query results unchanged."""
+def test_index_compaction_merges_segments_and_preserves_results(spark, tmp_path):
+    """Compaction must (a) shrink the postings segment count, (b) leave
+    every merged partial equal in content to a fresh rebuild, the df
+    partials folded to the rebuild's one row per term, and (c) leave
+    query results unchanged; a query with no vocabulary term still
+    returns no rows."""
+    import os
+
     from memfuse_spark.operators.keyword import (
-        bm25_topk_from_index_v2,
-        build_postings_index_v2,
-        compact_postings_index_v2,
-        update_postings_index_v2,
+        bm25_topk_from_stream_index,
+        compact_stream_index,
     )
+    from memfuse_spark.streaming.buffer import read_epochs, write_index_epoch
 
     batches = [
         [(0, "spark shuffles data between stages"),
@@ -350,58 +356,47 @@ def test_v2_index_compaction_merges_segments_and_preserves_results(
         spark.createDataFrame(rows, "doc_id bigint, text string")
         for rows in batches
     ]
-    name = "v2_cmp"
-    try:
-        build_postings_index_v2(spark, dfs[0], name, path=str(tmp_path / "a"))
-        for d in dfs[1:]:
-            update_postings_index_v2(spark, name, d, path=str(tmp_path / "a"))
-        before_q = sorted(
-            map(tuple, bm25_topk_from_index_v2(spark, name, "spark query scan", 5).collect())
-        )
-        report = compact_postings_index_v2(spark, name, path=str(tmp_path / "a"))
-        assert report["files_after"] < report["files_before"]
-        # one file per non-empty bucket: 16 buckets max, small vocab
-        assert report["files_after"] <= 16
+    out, reb = str(tmp_path / "a"), str(tmp_path / "b")
+    for epoch, d in enumerate(dfs):
+        write_index_epoch(d, out, epoch)
+    before_q = sorted(
+        map(tuple, bm25_topk_from_stream_index(spark, out, "spark query scan", 5).collect())
+    )
+    report = compact_stream_index(spark, out)
+    assert report["files_after"] < report["files_before"]
+    assert report["files_after"] <= 16
 
-        union = dfs[0]
-        for d in dfs[1:]:
-            union = union.unionByName(d)
-        build_postings_index_v2(spark, union, "v2_cmp_reb", path=str(tmp_path / "b"))
-        for side in ("", "_df", "_stats"):
-            a = sorted(map(tuple, spark.table(name + side).collect()))
-            b = sorted(map(tuple, spark.table("v2_cmp_reb" + side).collect()))
-            assert a == b, side
-        after_q = sorted(
-            map(tuple, bm25_topk_from_index_v2(spark, name, "spark query scan", 5).collect())
-        )
-        assert before_q == after_q
+    union = dfs[0]
+    for d in dfs[1:]:
+        union = union.unionByName(d)
+    write_index_epoch(union, reb, 0)
+    a, b = _merged_index(spark, out), _merged_index(spark, reb)
+    for side in ("postings", "df", "stats"):
+        assert a[side] == b[side], side
 
-        # SECOND compaction: old_loc must be the table's ACTUAL
-        # directory ({name}__g<tag> after the first compaction), so the
-        # superseded segment is reclaimed — not orphaned — and queries
-        # still serve. Exactly one data dir remains under the path.
-        import os
+    def raw_dfparts(path):
+        return sorted(map(tuple, read_epochs(spark, f"{path}/dfparts").drop("epoch_id").collect()))
 
-        update_postings_index_v2(
-            spark,
-            name,
-            spark.createDataFrame(
-                [(6, "another spark scan batch")], "doc_id bigint, text string"
-            ),
-            path=str(tmp_path / "a"),
-        )
-        compact_postings_index_v2(spark, name, path=str(tmp_path / "a"))
-        seg_dirs = [
-            d
-            for d in os.listdir(tmp_path / "a")
-            if d == name or d.startswith(name + "__g")
-        ]
-        assert len(seg_dirs) == 1, f"orphaned segment dirs: {seg_dirs}"
-        assert bm25_topk_from_index_v2(spark, name, "spark query scan", 5).count() > 0
-    finally:
-        for n in ("v2_cmp", "v2_cmp_reb", "v2_cmp__compact"):
-            for side in ("", "_df", "_stats"):
-                spark.sql(f"DROP TABLE IF EXISTS {n}{side}")
+    assert raw_dfparts(out) == raw_dfparts(reb)
+    after_q = sorted(
+        map(tuple, bm25_topk_from_stream_index(spark, out, "spark query scan", 5).collect())
+    )
+    assert before_q == after_q
+    assert bm25_topk_from_stream_index(spark, out, "zzz unknown", 5).count() == 0
+
+    # SECOND compaction after another epoch: each store is swapped in
+    # place, no shadow (__tmp_) or superseded (__old_) directory is left
+    # behind, and queries still serve
+    write_index_epoch(
+        spark.createDataFrame(
+            [(6, "another spark scan batch")], "doc_id bigint, text string"
+        ),
+        out,
+        len(dfs),
+    )
+    compact_stream_index(spark, out)
+    assert sorted(os.listdir(out)) == ["dfparts", "postings", "statsparts"]
+    assert bm25_topk_from_stream_index(spark, out, "spark query scan", 5).count() > 0
 
 
 def test_ql_dirichlet_matches_python_reference(spark):
@@ -488,15 +483,15 @@ def test_more_like_this_prefers_term_overlap(spark):
 
 
 def test_more_like_this_index_matches_adhoc(spark, tmp_path):
-    """Index-served MLT (stored norms table) must equal the ad-hoc
-    per-query recompute — the 'hash unchanged' contract of the served
-    rewrite."""
+    """Index-served MLT (stored norms) must equal the ad-hoc per-query
+    recompute — the 'hash unchanged' contract of the served rewrite.
+    An anchor missing from the index yields no rows, typed as a hit."""
     from memfuse_spark.operators.keyword import (
-        build_norms_index_v2,
-        build_postings_index_v2,
+        build_norms_index,
         more_like_this,
         more_like_this_from_index,
     )
+    from memfuse_spark.streaming.buffer import write_index_epoch
 
     docs = spark.createDataFrame(
         [
@@ -509,40 +504,43 @@ def test_more_like_this_index_matches_adhoc(spark, tmp_path):
         ],
         "doc_id bigint, text string",
     )
-    build_postings_index_v2(spark, docs, "t_mlt", path=str(tmp_path / "wh"))
-    build_norms_index_v2(spark, "t_mlt", path=str(tmp_path / "wh"))
+    idx = str(tmp_path / "t_mlt")
+    write_index_epoch(docs, idx, 0)
+    build_norms_index(spark, idx)
     adhoc = [(r.doc_id, r.score) for r in more_like_this(docs, 0, 5).collect()]
     served = [
         (r.doc_id, r.score)
-        for r in more_like_this_from_index(spark, "t_mlt", 0, 5).collect()
+        for r in more_like_this_from_index(spark, idx, 0, 5).collect()
     ]
     assert adhoc == served and len(adhoc) > 0
+    missing = more_like_this_from_index(spark, idx, 99, 5)
+    assert missing.count() == 0
+    assert missing.schema.simpleString() == "struct<doc_id:bigint,score:double>"
 
 
 def test_more_like_this_index_plan_norms_are_a_scan(spark, tmp_path):
-    """The norms subtree must be a FileScan of {name}_norms — ONE
+    """The norms subtree must be a FileScan of the norms store — ONE
     aggregation in the whole plan (the dot products), no per-query
     re-derivation of corpus-sized norms (which would add a second
     corpus-wide HashAggregate)."""
     from memfuse_spark.operators.keyword import (
-        build_norms_index_v2,
-        build_postings_index_v2,
+        build_norms_index,
         more_like_this_plan,
     )
+    from memfuse_spark.streaming.buffer import write_index_epoch
 
     docs = spark.createDataFrame(
         [(i, f"term{i % 3} shared word spark scan row{i}") for i in range(8)],
         "doc_id bigint, text string",
     )
-    build_postings_index_v2(spark, docs, "t_mltp", path=str(tmp_path / "wh"))
-    build_norms_index_v2(spark, "t_mltp", path=str(tmp_path / "wh"))
-    plan = (
-        more_like_this_plan(spark, "t_mltp", 0, 5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "t_mltp_norms" in plan
+    idx = str(tmp_path / "t_mltp")
+    write_index_epoch(docs, idx, 0)
+    build_norms_index(spark, idx)
+    df = more_like_this_plan(spark, idx, 0, 5)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # the plan string abbreviates long locations, so the scanned norms
+    # store is asserted on the plan's input files
+    assert any(f"{idx}/norms/" in f for f in df.inputFiles())
     # the dots aggregation is the ONLY aggregate: partial+final = 2
     # HashAggregate nodes; a norms recompute would add 2 more
     assert plan.count("HashAggregate") <= 2
@@ -553,11 +551,11 @@ def test_spellfix_index_matches_adhoc(spark, tmp_path):
     """FastSS-indexed spellfix must equal the full-vocabulary-scan
     spellfix (k=2 deletion-neighborhood completeness)."""
     from memfuse_spark.operators.keyword import (
-        build_postings_index_v2,
-        build_spellfix_index_v2,
+        build_spellfix_index,
         spellfix_topk,
         spellfix_topk_from_index,
     )
+    from memfuse_spark.streaming.buffer import write_index_epoch
 
     docs = spark.createDataFrame(
         [
@@ -569,13 +567,14 @@ def test_spellfix_index_matches_adhoc(spark, tmp_path):
         ],
         "doc_id bigint, text string",
     )
-    build_postings_index_v2(spark, docs, "t_sfx", path=str(tmp_path / "wh"))
-    build_spellfix_index_v2(spark, "t_sfx", path=str(tmp_path / "wh"))
+    idx = str(tmp_path / "t_sfx")
+    write_index_epoch(docs, idx, 0)
+    build_spellfix_index(spark, idx)
     typo_q = "sparc tabel scann queyr z"
     adhoc = [(r.doc_id, r.score) for r in spellfix_topk(docs, typo_q, 5).collect()]
     served = [
         (r.doc_id, r.score)
-        for r in spellfix_topk_from_index(spark, "t_sfx", typo_q, 5).collect()
+        for r in spellfix_topk_from_index(spark, idx, typo_q, 5).collect()
     ]
     assert adhoc == served and len(adhoc) > 0
     # single-char vocab terms must not break the del2 variant guard
@@ -593,16 +592,15 @@ def test_spellfix_index_rejects_out_of_bound_distance(spark, tmp_path):
 
 def test_compaction_refreshes_norms_and_delvar(spark, tmp_path):
     """norms/delvar are exact-as-of-last-compaction artifacts: an
-    incremental update leaves them stale (O(batch) contract), and
-    compact_postings_index_v2 self-heals BOTH to match a from-scratch
-    rebuild over the full corpus."""
+    appended epoch leaves them stale (O(batch) contract), and
+    compact_stream_index rebuilds BOTH to match a from-scratch build
+    over the full corpus."""
     from memfuse_spark.operators.keyword import (
-        build_norms_index_v2,
-        build_postings_index_v2,
-        build_spellfix_index_v2,
-        compact_postings_index_v2,
-        update_postings_index_v2,
+        build_norms_index,
+        build_spellfix_index,
+        compact_stream_index,
     )
+    from memfuse_spark.streaming.buffer import read_epochs, write_index_epoch
 
     base = spark.createDataFrame(
         [(0, "spark table scan"), (1, "query planner joins")],
@@ -612,37 +610,28 @@ def test_compaction_refreshes_norms_and_delvar(spark, tmp_path):
         [(2, "spark spark codegen"), (3, "zephyr token appears")],
         "doc_id bigint, text string",
     )
-    wh = str(tmp_path / "wh")
-    build_postings_index_v2(spark, base, "t_cmp", path=wh)
-    build_norms_index_v2(spark, "t_cmp", path=wh)
-    build_spellfix_index_v2(spark, "t_cmp", path=wh)
-    update_postings_index_v2(spark, "t_cmp", delta, path=wh)
-    compact_postings_index_v2(spark, "t_cmp", path=wh)
+    cmp_idx, ref_idx = str(tmp_path / "t_cmp"), str(tmp_path / "t_ref")
+    write_index_epoch(base, cmp_idx, 0)
+    build_norms_index(spark, cmp_idx)
+    build_spellfix_index(spark, cmp_idx)
+    write_index_epoch(delta, cmp_idx, 1)
+    compact_stream_index(spark, cmp_idx)
 
-    # reference: rebuild from the full corpus in fresh tables
+    # reference: build from the full corpus in a fresh index
     full = base.unionByName(delta)
-    build_postings_index_v2(spark, full, "t_ref", path=wh)
-    build_norms_index_v2(spark, "t_ref", path=wh)
-    build_spellfix_index_v2(spark, "t_ref", path=wh)
+    write_index_epoch(full, ref_idx, 0)
+    build_norms_index(spark, ref_idx)
+    build_spellfix_index(spark, ref_idx)
 
-    got_norms = {
-        (r.doc_id, round(r.nrm, 9))
-        for r in spark.table("t_cmp_norms").collect()
-    }
-    want_norms = {
-        (r.doc_id, round(r.nrm, 9))
-        for r in spark.table("t_ref_norms").collect()
-    }
+    def rows(idx, store):
+        return read_epochs(spark, f"{idx}/{store}").collect()
+
+    got_norms = {(r.doc_id, round(r.nrm, 9)) for r in rows(cmp_idx, "norms")}
+    want_norms = {(r.doc_id, round(r.nrm, 9)) for r in rows(ref_idx, "norms")}
     assert got_norms == want_norms and len(got_norms) == 4
 
-    got_var = {
-        (r.variant, r.term, r.freq)
-        for r in spark.table("t_cmp_delvar").collect()
-    }
-    want_var = {
-        (r.variant, r.term, r.freq)
-        for r in spark.table("t_ref_delvar").collect()
-    }
+    got_var = {(r.variant, r.term, r.freq) for r in rows(cmp_idx, "delvar")}
+    want_var = {(r.variant, r.term, r.freq) for r in rows(ref_idx, "delvar")}
     assert got_var == want_var
     # the post-compaction variants must include the delta-only term
     assert any(t == "zephyr" for _, t, _ in got_var)

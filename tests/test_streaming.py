@@ -289,6 +289,49 @@ def test_epoch_replay_is_idempotent(spark, tmp_path, writer):
         assert len(total[name]) == len(first[name]) + len(second[name])
 
 
+def _compact_index(spark, out):
+    from memfuse_spark.operators.keyword import compact_stream_index
+
+    compact_stream_index(spark, out)
+
+
+def _compact_vectors(spark, out):
+    from memfuse_spark.operators.ann import compact_bucketed_corpus
+
+    compact_bucketed_corpus(spark, os.path.join(out, "vectors"))
+
+
+@pytest.mark.parametrize(
+    "writer, compact",
+    [("write_index_epoch", _compact_index), ("write_vector_epoch", _compact_vectors)],
+)
+def test_replay_of_a_compacted_epoch_is_a_noop(spark, tmp_path, writer, compact):
+    """Replaying an epoch that compaction already folded into the base
+    leaves every store's rows unchanged (it would otherwise count that
+    epoch twice); a new epoch id still appends."""
+    write, make_batch, names = EPOCH_WRITERS[writer]
+    out = str(tmp_path / "compacted")
+    epoch1 = make_batch(spark, 100, 5)
+    write(make_batch(spark, 0, 10), 0, out)
+    write(epoch1, 1, out)
+    compact(spark, out)
+
+    def counts(epoch_id=None):
+        stores = {n: sb.read_epochs(spark, os.path.join(out, n)) for n in names}
+        if epoch_id is not None:
+            stores = {n: df.filter(F.col("epoch_id") == epoch_id) for n, df in stores.items()}
+        return {n: df.count() for n, df in stores.items()}
+
+    folded = counts()
+    assert all(folded.values())
+    write(epoch1, 1, out)
+    assert counts() == folded
+    write(make_batch(spark, 200, 4), 2, out)
+    appended = counts(epoch_id=2)
+    assert all(appended.values())
+    assert counts() == {n: folded[n] + appended[n] for n in names}
+
+
 def test_empty_epoch_leaves_hierarchy_store_unchanged(spark, tmp_path):
     """An empty micro-batch appended as a new epoch of an existing
     hierarchy store writes no rows: m0/m1/m2 read back unchanged."""
