@@ -8,7 +8,11 @@ DuckDB-equivalent SQL the driver hash-compares against at sf0.01.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -119,6 +123,24 @@ def q_vector_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity_topk(emb, qvec, 50, threshold=0.2)
 
 
+_FIXTURE_ROOT: list[str] = []
+_FIXTURE_ROOT_LOCK = threading.Lock()
+
+
+def _fixture_dir(*parts: str) -> str:
+    """``parts`` under this process's fixture root, where every memoized
+    store below is built: a temp directory made on first use and removed
+    at exit. The memos are per process, so their stores are too; a
+    store at a path shared across processes is rebuilt by one process
+    under another that is reading it."""
+    with _FIXTURE_ROOT_LOCK:
+        if not _FIXTURE_ROOT:
+            root = tempfile.mkdtemp(prefix="memfuse_")
+            atexit.register(shutil.rmtree, root, ignore_errors=True)
+            _FIXTURE_ROOT.append(root)
+    return os.path.join(_FIXTURE_ROOT[0], *parts)
+
+
 _POSTINGS_IDX: dict[tuple[int, str], str] = {}
 
 
@@ -127,7 +149,6 @@ def _postings_index(spark: SparkSession, sf_dir: str) -> str:
     and reuse it across every keyword query — the reference's
     persistent FTS5 index, not a rebuild-per-query."""
     import hashlib
-    import tempfile
 
     key = (id(spark.sparkContext), sf_dir)
     if key not in _POSTINGS_IDX:
@@ -136,7 +157,7 @@ def _postings_index(spark: SparkSession, sf_dir: str) -> str:
         (docs,) = _tables(spark, sf_dir, "documents")
         kw_ops.build_postings_index(
             spark, docs, name,
-            path=os.path.join(tempfile.gettempdir(), "memfuse_idx"),
+            path=_fixture_dir("memfuse_idx"),
         )
         _POSTINGS_IDX[key] = name
     return _POSTINGS_IDX[key]
@@ -154,15 +175,13 @@ def _postings_index_v2(spark: SparkSession, sf_dir: str) -> str:
     re-deriving corpus-sized aggregates per query — the same
     build-once/serve-many contract as _postings_index."""
     import hashlib
-    import shutil
-    import tempfile
 
     from memfuse_spark.streaming.buffer import write_index_epoch
 
     key = (id(spark.sparkContext), sf_dir)
     if key not in _POSTINGS_IDX_V2:
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        base = os.path.join(tempfile.gettempdir(), "memfuse_idx", f"mfs_postings2_{tag}")
+        base = _fixture_dir("memfuse_idx", f"mfs_postings2_{tag}")
         shutil.rmtree(base, ignore_errors=True)
         (docs,) = _tables(spark, sf_dir, "documents")
         write_index_epoch(docs, base, 0)
@@ -336,7 +355,6 @@ def _knowledge_postings(spark: SparkSession, sf_dir: str) -> str:
     for reads whose include flags select the whole corpus (the stats
     and df are corpus-wide)."""
     import hashlib
-    import tempfile
 
     key = (id(spark.sparkContext), sf_dir)
     if key not in _KNOW_POSTINGS:
@@ -344,7 +362,7 @@ def _knowledge_postings(spark: SparkSession, sf_dir: str) -> str:
         name = f"mfs_know_postings_{tag}"
         kw_ops.build_postings_index(
             spark, _knowledge_corpus(spark, sf_dir).select("doc_id", "text"),
-            name, path=os.path.join(tempfile.gettempdir(), "memfuse_idx"),
+            name, path=_fixture_dir("memfuse_idx"),
         )
         _KNOW_POSTINGS[key] = name
     return _KNOW_POSTINGS[key]
@@ -2209,8 +2227,6 @@ def _bucketed_store_lc(spark: SparkSession, sf_dir: str) -> str:
     it in the fixture block so the timed slot measures the SERVE path
     (VERDICT r6 #6); build cost is recorded in PLANS.md."""
     import hashlib
-    import shutil
-    import tempfile
 
     from memfuse_spark.operators.ann import compact_bucketed_corpus
     from memfuse_spark.streaming.buffer import write_vector_epoch
@@ -2220,9 +2236,7 @@ def _bucketed_store_lc(spark: SparkSession, sf_dir: str) -> str:
         (emb,) = _tables(spark, sf_dir, "embeddings")
         qvec = anchor_vector(spark, emb, ANCHOR_VEC_ID)
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        base = os.path.join(
-            tempfile.gettempdir(), "memfuse_bucketed_lc", tag
-        )
+        base = _fixture_dir("memfuse_bucketed_lc", tag)
         shutil.rmtree(base, ignore_errors=True)
         slice_of = F.conv(
             F.substring(
@@ -2438,7 +2452,6 @@ def q_bq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the exact rescore joins the winners back by id. Identical
     results (and oracle) to the inline bq_topk."""
     import hashlib
-    import tempfile
 
     from memfuse_spark.operators.ann import bq_topk_from_store, build_bq_store
 
@@ -2449,7 +2462,7 @@ def q_bq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         name = f"mfs_bq_{tag}"
         build_bq_store(
             spark, emb, name,
-            path=os.path.join(tempfile.gettempdir(), "memfuse_idx"),
+            path=_fixture_dir("memfuse_idx"),
         )
         _BQ_STORE[key] = name
     qvec = anchor_vector(spark, emb, ANCHOR_VEC_ID)
@@ -2573,10 +2586,10 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = _tables(spark, sf_dir, "documents")
     idx = _postings_index(spark, sf_dir)
     vecs = hashed_bow_vectors(docs, postings=spark.table(idx))
-    # the served index's stats row already holds the vector count
+    # the served index's recorded stats already hold the vector count
     # (n_docs = distinct doc_id in postings = hashed-BoW rows), so the
     # scale rule needs no derive-n materialization of the vectors
-    n = int(spark.table(f"{idx}_stats").select("n_docs").first()[0])
+    n = kw_ops.index_stats(spark, idx)[0]
     return semdedup_keep(
         vecs, id_col="doc_id", vec_col="vector", dim=64, num_planes=None,
         threshold=0.95, n_hint=n,
@@ -2947,7 +2960,6 @@ def _graph_edges(spark: SparkSession, sf_dir: str):
     at ingest/flush, queried many times), exactly the _postings_index
     treatment the keyword path got."""
     import hashlib
-    import tempfile
 
     from memfuse_spark.operators import graph as g
 
@@ -2958,7 +2970,7 @@ def _graph_edges(spark: SparkSession, sf_dir: str):
         name = f"mfs_edges_{tag}"
         g.build_edges_store(
             spark, emb, name,
-            path=os.path.join(tempfile.gettempdir(), "memfuse_idx"),
+            path=_fixture_dir("memfuse_idx"),
         )
         _EDGES_STORE[key] = name
     return emb, spark.table(_EDGES_STORE[key])
@@ -3043,7 +3055,6 @@ def _knn_graph_edges(spark: SparkSession, sf_dir: str):
     densifies quadratically on a saturating space (PLANS.md round-9
     density probe)."""
     import hashlib
-    import tempfile
 
     from memfuse_spark.operators import graph as g
 
@@ -3054,7 +3065,7 @@ def _knn_graph_edges(spark: SparkSession, sf_dir: str):
         name = f"mfs_knn_edges_{tag}"
         g.build_knn_edges_store(
             spark, emb, name, k=KNN_EDGES_K,
-            path=os.path.join(tempfile.gettempdir(), "memfuse_idx"),
+            path=_fixture_dir("memfuse_idx"),
         )
         _KNN_EDGES_STORE[key] = name
     return emb, spark.table(_KNN_EDGES_STORE[key])
@@ -3140,16 +3151,13 @@ def _knn_inc_store(spark: SparkSession, sf_dir: str) -> str:
     whole corpus with the base as fit — which is exactly what the
     DuckDB twin (oracles.knn_store_inc_edges_sql) computes."""
     import hashlib
-    import tempfile
 
     from memfuse_spark.operators import graph as g
 
     key = (id(spark.sparkContext), sf_dir)
     if key not in _KNN_INC_STORE:
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(
-            tempfile.gettempdir(), "memfuse_idx", f"mfs_knn_inc_{tag}"
-        )
+        path = _fixture_dir("memfuse_idx", f"mfs_knn_inc_{tag}")
         (emb,) = _tables(spark, sf_dir, "embeddings")
         base = emb.filter(F.col("vec_id") % KNN_INC_FIT_MOD != 0)
         batch = emb.filter(F.col("vec_id") % KNN_INC_FIT_MOD == 0)
@@ -4179,14 +4187,13 @@ def _stream_index(spark: SparkSession, sf_dir: str) -> str:
     the fixture block so the timed slot measures the SERVE path
     (VERDICT r6 #6); build cost in PLANS.md."""
     import hashlib
-    import tempfile
 
     from memfuse_spark.streaming.buffer import write_index_epoch
 
     key = (id(spark.sparkContext), sf_dir)
     if key not in _STREAM_IDX:
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        base = os.path.join(tempfile.gettempdir(), "memfuse_stream_idx", tag)
+        base = _fixture_dir("memfuse_stream_idx", tag)
         (docs,) = _tables(spark, sf_dir, "documents")
         epoch_of = F.conv(
             F.substring(
@@ -4226,7 +4233,6 @@ def _vec_stream_store(spark: SparkSession, sf_dir: str) -> str:
     timed slot measures the SERVE path (the VERDICT r6 #6 split);
     build cost rides fixture_builds + PLANS.md."""
     import hashlib
-    import tempfile
 
     from memfuse_spark.streaming.buffer import write_vector_epoch
 
@@ -4235,7 +4241,7 @@ def _vec_stream_store(spark: SparkSession, sf_dir: str) -> str:
         (emb,) = _tables(spark, sf_dir, "embeddings")
         dim = len(anchor_vector(spark, emb, ANCHOR_VEC_ID))
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        base = os.path.join(tempfile.gettempdir(), "memfuse_vec_stream", tag)
+        base = _fixture_dir("memfuse_vec_stream", tag)
         epoch_of = F.conv(
             F.substring(
                 F.md5(F.concat(F.lit("vse"), F.col("vec_id").cast("string"))),
@@ -4658,15 +4664,13 @@ def _postings_index_c(spark: SparkSession, sf_dir: str) -> str:
     timed slot measures the SERVE path (VERDICT r6 #6); build cost in
     PLANS.md."""
     import hashlib
-    import shutil
-    import tempfile
 
     from memfuse_spark.streaming.buffer import write_index_epoch
 
     key = (id(spark.sparkContext), sf_dir)
     if key not in _POSTINGS_IDX_C:
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        base = os.path.join(tempfile.gettempdir(), "memfuse_idx_v2c", f"mfs_postings2c_{tag}")
+        base = _fixture_dir("memfuse_idx_v2c", f"mfs_postings2c_{tag}")
         shutil.rmtree(base, ignore_errors=True)
         (docs,) = _tables(spark, sf_dir, "documents")
         bucket = F.pmod(F.xxhash64("doc_id"), F.lit(10))

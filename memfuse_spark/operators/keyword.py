@@ -8,8 +8,10 @@ scores BM25 in a Python loop (memfuse `store/keyword_store/bm25_store.py:
 
 - the inverted index IS a DataFrame: ``explode(tokenize(text))`` →
   ``groupBy(doc, term).count()`` — one shuffle, map-side combined.
-- corpus stats (N, avgdl, df) are tiny aggregates, broadcast into the
-  scoring join.
+- corpus stats (N, avgdl, df) are tiny aggregates. Ad hoc they are
+  broadcast into the scoring join; a prebuilt index records (N, avgdl)
+  when it is written and the query reads them as two plan literals
+  (:func:`index_stats`), so scoring it starts no job for them.
 - scoring a query = equi-join of the postings table with the (broadcast)
   query-term list + pure column arithmetic + top-k. At 100 TB the
   postings table would be bucketed by term so query joins touch only
@@ -20,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from memfuse_spark.functions.text import tokenize
@@ -77,11 +79,13 @@ def build_postings_index(
 
     df (document frequency) is joined onto each posting row at BUILD
     time — the join shuffles on `term`, which is exactly the bucket key
-    the write needs, so it costs nothing extra — and query-time scoring
-    becomes: bucket-pruned scan → broadcast stats → arithmetic → top-k.
-    At 100 TB the per-query cost is O(postings of the query terms), not
-    O(corpus): the isin(term) predicate prunes buckets AND pushes into
-    the parquet scan.
+    the write needs, so it costs nothing extra. The corpus stats
+    (n_docs, avgdl) are written to ``{name}_stats`` and, observed on the
+    way, recorded for :func:`index_stats`, so query-time scoring
+    becomes: bucket-pruned scan → arithmetic with the stats as literals
+    → top-k. At 100 TB the per-query cost is
+    O(postings of the query terms), not O(corpus): the isin(term)
+    predicate prunes buckets AND pushes into the parquet scan.
     """
     postings = build_postings(docs, id_col, text_col)
     with_df = postings.join(document_frequency(postings), "term")
@@ -90,27 +94,66 @@ def build_postings_index(
         writer = writer.option("path", f"{path}/{name}")
     writer.bucketBy(num_buckets, "term").sortBy("term").saveAsTable(name)
 
-    stats_writer = corpus_stats(spark.table(name)).write.mode("overwrite").format(
-        "parquet"
+    # the one stats row passes through an observation on its way to the
+    # table, so recording it costs no job of its own
+    recorded = Observation()
+    stats_writer = (
+        corpus_stats(spark.table(name))
+        .observe(recorded, F.max("n_docs").alias("n_docs"), F.max("avgdl").alias("avgdl"))
+        .write.mode("overwrite")
+        .format("parquet")
     )
     if path is not None:
         stats_writer = stats_writer.option("path", f"{path}/{name}_stats")
     stats_writer.saveAsTable(f"{name}_stats")
+    got = recorded.get
+    _INDEX_STATS[(spark.sparkContext, name)] = (got["n_docs"], got["avgdl"])
 
 
-def _bm25_term_score(k1: float, b: float):
+# (SparkContext, index name) → (n_docs, avgdl) of the last
+# build_postings_index of that name. The catalog is in-memory, so a name
+# resolves only under the SparkContext that built it.
+_INDEX_STATS: dict[tuple[object, str], tuple[int, float | None]] = {}
+
+
+def index_stats(spark, index_name: str) -> tuple[int, float | None]:
+    """(n_docs, avgdl) of a :func:`build_postings_index` index, as
+    Python values equal to its ``{index_name}_stats`` row: recorded at
+    build, so reading them starts no Spark job and no SQL command. An
+    index this process did not build is read from the stats table once."""
+    key = (spark.sparkContext, index_name)
+    if key not in _INDEX_STATS:
+        n_docs, avgdl = spark.table(f"{index_name}_stats").select("n_docs", "avgdl").first()
+        _INDEX_STATS[key] = (n_docs, avgdl)
+    return _INDEX_STATS[key]
+
+
+def _stats_literals(spark, index_name: str) -> dict:
+    """:func:`_bm25_term_score`'s ``stats``: the index's (n_docs, avgdl)
+    as a bigint and a double literal (same types and bits as its stats
+    table's columns)."""
+    n_docs, avgdl = index_stats(spark, index_name)
+    return {
+        "n_docs": F.lit(n_docs).cast("bigint"),
+        "avgdl": F.lit(avgdl).cast("double"),
+    }
+
+
+def _bm25_term_score(k1: float, b: float, stats: dict | None = None):
     """One matched posting's BM25 term score over the columns
-    (tf, dl, df, n_docs, avgdl):
+    (tf, dl, df, n_docs, avgdl), or (tf, dl, df) with ``stats`` giving
+    n_docs and avgdl (:func:`_stats_literals`):
 
     idf = ln((N - df + 0.5)/(df + 0.5) + 1)
     term_score = idf · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))
     (reference: bm25_store.py:212-249)
     """
+    stats = stats or {"n_docs": F.col("n_docs"), "avgdl": F.col("avgdl")}
     idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
+        (stats["n_docs"] - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
     tf_part = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+        F.col("tf") + k1 * (1 - b + b * F.col("dl") / stats["avgdl"])
     )
     return (idf * tf_part).alias("term_score")
 
@@ -121,11 +164,12 @@ def _bm25_score(
     k1: float,
     b: float,
     score_decimals: int,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Shared BM25 top-k over matched postings carrying
-    (doc_id, tf, dl, df, n_docs, avgdl): score = Σ_t term_score(t)
-    (:func:`_bm25_term_score`)."""
-    scored = matched.select("doc_id", _bm25_term_score(k1, b))
+    (doc_id, tf, dl, df) and, without ``stats``, (n_docs, avgdl):
+    score = Σ_t term_score(t) (:func:`_bm25_term_score`)."""
+    scored = matched.select("doc_id", _bm25_term_score(k1, b, stats))
     return (
         scored.groupBy("doc_id")
         .agg(F.round(F.sum("term_score"), score_decimals).alias("score"))
@@ -145,12 +189,13 @@ def bm25_topk_from_index(
 ) -> DataFrame:
     """T3/X2 against a prebuilt index (build_postings_index): scans the
     postings table only — never the documents table — with bucket
-    pruning on the query terms."""
+    pruning on the query terms; the corpus stats are literals
+    (:func:`index_stats`)."""
     q_terms = sorted({t for t in _py_tokenize(query)})
     postings = spark.table(index_name).filter(F.col("term").isin(q_terms))
-    stats = spark.table(f"{index_name}_stats")
-    matched = postings.crossJoin(F.broadcast(stats))
-    return _bm25_score(matched, k, k1, b, score_decimals)
+    return _bm25_score(
+        postings, k, k1, b, score_decimals, _stats_literals(spark, index_name)
+    )
 
 
 def bm25_topk(
@@ -975,11 +1020,9 @@ def rm3_topk_from_index(
     lam = orig_weight
     qw = 1.0 / len(q_terms)
     postings = spark.table(index_name)  # (term, doc_id, tf, dl, df)
-    stats = spark.table(f"{index_name}_stats")
-    matched1 = postings.filter(F.col("term").isin(q_terms)).crossJoin(
-        F.broadcast(stats)
-    )
-    pass1 = _bm25_score(matched1, fb_docs, k1, b, score_decimals)
+    stats = _stats_literals(spark, index_name)
+    matched1 = postings.filter(F.col("term").isin(q_terms))
+    pass1 = _bm25_score(matched1, fb_docs, k1, b, score_decimals, stats)
     # materialize the <= fb_docs feedback rows ONCE — pass1 feeds three
     # downstream subplans (doc join, score total, and transitively the
     # weight table) and would otherwise re-run its pruned scan per use
@@ -1027,16 +1070,14 @@ def rm3_topk_from_index(
     wrows = weights.collect()  # <= |Q| + fb_terms rows
     wdf = spark.createDataFrame(wrows, schema=weights.schema)
     terms2 = sorted(r["term"] for r in wrows)
-    matched2 = (
-        postings.filter(F.col("term").isin(terms2))
-        .join(F.broadcast(wdf), "term")
-        .crossJoin(F.broadcast(stats))
+    matched2 = postings.filter(F.col("term").isin(terms2)).join(
+        F.broadcast(wdf), "term"
     )
     idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
+        (stats["n_docs"] - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
     tf_part = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+        F.col("tf") + k1 * (1 - b + b * F.col("dl") / stats["avgdl"])
     )
     scored = matched2.select(
         "doc_id", (F.col("wt") * idf * tf_part).alias("term_score")
@@ -1306,12 +1347,11 @@ def bm25_batch_topk_from_index(
     qterms = spark.createDataFrame(rows, "query_id int, term string")
     all_terms = sorted({t for _, t in rows})
     postings = spark.table(index_name).filter(F.col("term").isin(all_terms))
-    stats = spark.table(f"{index_name}_stats")
-    matched = postings.join(F.broadcast(qterms), "term").crossJoin(
-        F.broadcast(stats)
-    )
+    matched = postings.join(F.broadcast(qterms), "term")
     scored = (
-        matched.select("query_id", "doc_id", _bm25_term_score(k1, b))
+        matched.select(
+            "query_id", "doc_id", _bm25_term_score(k1, b, _stats_literals(spark, index_name))
+        )
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("term_score"), score_decimals).alias("score"))
     )

@@ -7,27 +7,34 @@ rerank/top-k, memfuse `services/memory_service.py:1508-1820`,
 
 A single recall (:func:`hybrid_retrieval`, :func:`hybrid_retrieval_3way`)
 collects each retrieval branch's k-row result to the driver ONCE and
-reuses it there:
+reuses it there. The keyword branch runs BESIDE the vector → graph
+chain (:func:`_collect_beside`, the reference's ``asyncio.gather`` of
+its store queries, `rag/retrieve/hybrid.py:190-195`):
 
-    vector  = similarity_topk(embeddings, q, fsk).collect()   # also graph layer 1
-    keyword = bm25_topk_from_index(index, text, fsk).collect()
-    graph   = contextual_retrieval(..., similar=vector)       # 2 collects
+    kw_plan = bm25_topk_from_index(index, text, fsk)          # caller builds
+    keyword = kw_plan.collect()              # on an InheritableThread, while
+    vector  = similarity_topk(embeddings, q, fsk).collect()   # the caller runs
+    graph   = contextual_retrieval(..., similar=vector)       # vector → graph
     fused   = rrf_scores({vector, graph, keyword})            # driver arithmetic
     return documents.filter(doc_id IN fused).orderBy(score).limit(k)
 
 so every branch runs exactly once, nothing is checkpointed or cached,
-and the returned DataFrame is one lazy job over the documents. Each
-collect holds ≤ fsk rows (the graph's arc and rescore collects ≤ the
-out-degree sum of fsk nodes); the RRF sums reach the final plan as one
-parsed ``map(id, sum, …)`` literal and are rounded there by Spark's own
-``round(…, 6)``.
+and the returned DataFrame is one lazy job over the documents. The
+critical path is vector → graph → hydration; every plan is built on the
+caller's thread and only the keyword ``collect()`` runs on the other,
+which inherits the caller's job group and is joined before the recall
+returns or raises. Each collect holds ≤ fsk rows (the graph's arc and
+rescore collects ≤ the out-degree sum of fsk nodes); the RRF sums reach
+the final plan as one parsed ``map(id, sum, …)`` literal and are
+rounded there by Spark's own ``round(…, 6)``.
 
 A batch recall (:func:`hybrid_batch_retrieval`,
 :func:`hybrid_batch_retrieval_3way`) is the same recall for many
-queries, sharing one scan per layer:
+queries, sharing one scan per layer, its keyword collect again beside
+vector → graph:
 
+    keyword = bm25_batch_topk_from_index(index, texts, fsk).collect()  # thread
     vector  = similarity_join(qvecs, embeddings, fsk).collect()     # by query_id
-    keyword = bm25_batch_topk_from_index(index, texts, fsk).collect()
     graph   = contextual_layers(..., similar=vector)  # 2 collects, any batch size
     fused   = {q: rrf_scores({vector[q], graph[q], keyword[q]})}
     return VALUES(q, id, sum) → round(…, 6) → per-query top-k ⋈ documents
@@ -48,8 +55,10 @@ here shuffles the corpus.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from typing import TypeVar
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,15 +75,46 @@ from memfuse_spark.operators.keyword import bm25_topk, bm25_topk_from_index
 from memfuse_spark.operators.similarity import similarity_topk
 
 
-def _keyword_rows(
+T = TypeVar("T")
+
+
+def _keyword_plan(
     documents: DataFrame, query_text: str, fsk: int, postings_index: str | None
-) -> list:
-    """The keyword branch's ≤ fsk (doc_id, score) rows."""
+) -> DataFrame:
+    """The keyword branch's ≤ fsk (doc_id, score) rows, as a plan."""
     if postings_index is not None:
-        kw = bm25_topk_from_index(documents.sparkSession, postings_index, query_text, fsk)
-    else:
-        kw = bm25_topk(documents, query_text, fsk)
-    return kw.collect()
+        return bm25_topk_from_index(documents.sparkSession, postings_index, query_text, fsk)
+    return bm25_topk(documents, query_text, fsk)
+
+
+def _collect_beside(side: DataFrame, main: Callable[[], T]) -> tuple[list, T]:
+    """``(side.collect(), main())`` with the collect on an
+    InheritableThread while the caller runs ``main``.
+
+    The thread only collects: ``side`` is built on the caller's thread,
+    as is every plan ``main`` builds, so the driver-side construction a
+    tracer wraps stays on one thread. The thread starts with the
+    caller's local properties (job group, description), so its jobs
+    count under the caller's group. It is joined before this returns or
+    raises, so no job of the recall outlives it; ``main``'s error wins,
+    else the thread's error is raised here."""
+    out: dict[str, object] = {}
+
+    def collect() -> None:
+        try:
+            out["rows"] = side.collect()
+        except BaseException as exc:  # re-raised on the caller's thread
+            out["error"] = exc
+
+    worker = InheritableThread(target=collect, session=side.sparkSession)
+    worker.start()
+    try:
+        result = main()
+    finally:
+        worker.join()
+    if "error" in out:
+        raise out["error"]
+    return out["rows"], result
 
 
 def _graph_branch(layers, fsk: int) -> list:
@@ -129,17 +169,22 @@ def hybrid_retrieval(
     first_stage_k defaults to 2×k (reference memory_service.py:1553-1555).
     With `postings_index` set, the keyword branch scans the prebuilt
     term-bucketed index instead of re-tokenizing the corpus per query.
-    Both branches are collected (≤ fsk rows each) and fused on the
-    driver; the returned plan is the hydration job alone.
+    Both branches are collected (≤ fsk rows each), the keyword one
+    beside the vector one, and fused on the driver; the returned plan
+    is the hydration job alone.
     Returns (doc_id, score, text) ordered by score desc, doc_id asc.
     """
     fsk = first_stage_k or 2 * k
-    branches = {
-        "vector": similarity_topk(embeddings, qvec, fsk, id_col="vec_id").collect(),
-        "keyword": _keyword_rows(documents, query_text, fsk, postings_index),
-    }
+    kw, vec = _collect_beside(
+        _keyword_plan(documents, query_text, fsk, postings_index),
+        lambda: similarity_topk(embeddings, qvec, fsk, id_col="vec_id").collect(),
+    )
     return _fuse_and_hydrate(
-        documents, branches, weights or {"vector": 0.5, "keyword": 0.2}, rrf_k, k
+        documents,
+        {"vector": vec, "keyword": kw},
+        weights or {"vector": 0.5, "keyword": 0.2},
+        rrf_k,
+        k,
     )
 
 
@@ -171,18 +216,25 @@ def hybrid_retrieval_3way(
     keyword top-k and the two graph layers are collected once each.
     Every collect holds ≤ first_stage_k rows, except the graph's arc and
     rescore collects, which hold ≤ the out-degree sum of first_stage_k
-    nodes.
+    nodes. The keyword collect runs on a driver thread beside vector →
+    graph (:func:`_collect_beside`), so the critical path is vector →
+    graph → hydration.
     Fusion runs on the driver; the returned DataFrame is the one lazy
-    hydration job. With a prebuilt postings index a recall runs 7 Spark
-    jobs in all (vector 1, keyword 3, graph 2, hydration 1) and no
-    checkpoint.
+    hydration job. With a prebuilt postings index a recall runs 6 Spark
+    jobs in all (vector 1, keyword 2, graph 2, hydration 1) and no
+    checkpoint; the index's corpus stats are plan literals.
     """
     from memfuse_spark.operators.graph import contextual_retrieval
 
     fsk = first_stage_k or 2 * k
-    vec = similarity_topk(embeddings, qvec, fsk, id_col="vec_id").collect()
-    kw = _keyword_rows(documents, query_text, fsk, postings_index)
-    gctx = contextual_retrieval(embeddings, edges, qvec, k=fsk, similar=vec).collect()
+
+    def vector_then_graph():
+        vec = similarity_topk(embeddings, qvec, fsk, id_col="vec_id").collect()
+        return vec, contextual_retrieval(embeddings, edges, qvec, k=fsk, similar=vec).collect()
+
+    kw, (vec, gctx) = _collect_beside(
+        _keyword_plan(documents, query_text, fsk, postings_index), vector_then_graph
+    )
     return _fuse_and_hydrate(
         documents,
         {"vector": vec, "graph": _graph_branch(gctx, fsk), "keyword": kw},
@@ -204,10 +256,12 @@ def _batch_branches(
     queries: dict[int, tuple[str, Sequence[float]]],
     fsk: int,
     postings_index: str | None,
-) -> tuple[dict, dict]:
+    then: Callable[[dict], T] = lambda vec: None,
+) -> tuple[dict, dict, T]:
     """A batch's vector and keyword branches, ``{query_id: [(id,
-    score), ...]}`` each: ONE similarity join and ONE postings scan
-    serve every query, each collected once (≤ queries × fsk rows)."""
+    score), ...]}`` each, and ``then(vector)``: ONE similarity join and
+    ONE postings scan serve every query, each collected once (≤ queries
+    × fsk rows), the keyword one beside vector → ``then``."""
     from memfuse_spark.operators.keyword import bm25_batch_topk_from_index
     from memfuse_spark.operators.similarity import similarity_join
 
@@ -219,12 +273,21 @@ def _batch_branches(
         "query_id int, qvec array<double>",
     )
     texts = {qid: t for qid, (t, _) in queries.items()}
-    vec, kw = {q: [] for q in queries}, {q: [] for q in queries}
-    for q, i, s in similarity_join(qvecs, embeddings, fsk, id_col="vec_id").collect():
-        vec[q].append((i, s))
-    for q, i, s in bm25_batch_topk_from_index(spark, postings_index, texts, fsk).collect():
-        kw[q].append((i, s))
-    return vec, kw
+
+    def by_query(rows) -> dict:
+        out = {q: [] for q in queries}
+        for q, i, s in rows:
+            out[q].append((i, s))
+        return out
+
+    def vector_then():
+        vec = by_query(similarity_join(qvecs, embeddings, fsk, id_col="vec_id").collect())
+        return vec, then(vec)
+
+    kw, (vec, extra) = _collect_beside(
+        bm25_batch_topk_from_index(spark, postings_index, texts, fsk), vector_then
+    )
+    return vec, by_query(kw), extra
 
 
 def _hydrate_batch(documents: DataFrame, sums: dict[int, dict], k: int) -> DataFrame:
@@ -278,7 +341,7 @@ def hybrid_batch_retrieval(
     """
     fsk = first_stage_k or 2 * k
     weights = weights or {"vector": 0.5, "keyword": 0.2}
-    vec, kw = _batch_branches(embeddings, queries, fsk, postings_index)
+    vec, kw, _ = _batch_branches(embeddings, queries, fsk, postings_index)
     sums = {
         q: rrf_scores({"vector": vec[q], "keyword": kw[q]}, weights, rrf_k) for q in queries
     }
@@ -309,9 +372,13 @@ def hybrid_batch_retrieval_3way(
 
     fsk = first_stage_k or 2 * k
     weights = weights or {"vector": 0.5, "graph": 0.3, "keyword": 0.2}
-    vec, kw = _batch_branches(embeddings, queries, fsk, postings_index)
-    layers = contextual_layers(
-        embeddings, edges, {q: v for q, (_, v) in queries.items()}, vec, fsk
+    qvecs = {q: v for q, (_, v) in queries.items()}
+    vec, kw, layers = _batch_branches(
+        embeddings,
+        queries,
+        fsk,
+        postings_index,
+        then=lambda vec: contextual_layers(embeddings, edges, qvecs, vec, fsk),
     )
     sums = {
         q: rrf_scores(
@@ -373,13 +440,13 @@ def hybrid_retrieval_with_flags(
     # entire corpus the index was built over (BM25's n_docs/avgdl/df are
     # corpus-wide stats; a narrower flag set must use the ad-hoc path so
     # the stats reflect the filtered corpus).
-    branches = {
-        "vector": similarity_topk(emb, qvec, fsk, id_col="doc_id").collect(),
-        "keyword": _keyword_rows(allowed, query_text, fsk, postings_index),
-    }
+    kw, vec = _collect_beside(
+        _keyword_plan(allowed, query_text, fsk, postings_index),
+        lambda: similarity_topk(emb, qvec, fsk, id_col="doc_id").collect(),
+    )
     return _fuse_and_hydrate(
         allowed,
-        branches,
+        {"vector": vec, "keyword": kw},
         weights or {"vector": 0.5, "keyword": 0.2},
         rrf_k,
         k,

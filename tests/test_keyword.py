@@ -103,11 +103,64 @@ def test_postings_index_matches_adhoc(spark, tmp_path):
     assert adhoc == via_idx and len(adhoc) > 0
 
     # the query side scans the postings table with bucket pruning,
-    # never the documents table
-    plan = bm25_topk_from_index(spark, "t_idx", "spark query scan", 5)._jdf.queryExecution().executedPlan().toString()
+    # never the documents table. With the stats as literals no join sits
+    # between the scan and the doc_id shuffle, so autoBucketedScan plans
+    # a plain scan (one task, not one per bucket) that still reads only
+    # the selected buckets' files but prints no bucket count; pin it off
+    # for the assertion, as in test_warehouse.py
+    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    try:
+        plan = bm25_topk_from_index(spark, "t_idx", "spark query scan", 5)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     assert "t_idx" in plan
     assert "SelectedBucketsCount" in plan
     assert "documents" not in plan
+
+
+def test_index_stats_are_literals_recorded_at_build(spark, tmp_path):
+    """BM25 on a prebuilt index reads (n_docs, avgdl) as plan literals
+    recorded by the LAST build of that name: after a rebuild over
+    another corpus it scores that corpus with the ad-hoc path's exact
+    floats, and its plan reads no ``{name}_stats`` file."""
+    from memfuse_spark.operators.keyword import (
+        bm25_topk,
+        bm25_topk_from_index,
+        build_postings,
+        build_postings_index,
+        corpus_stats,
+        index_stats,
+    )
+
+    corpus_a = spark.createDataFrame(
+        [(0, "spark scan"), (1, "spark spark query")], "doc_id bigint, text string"
+    )
+    # 3 docs, 10 tokens: avgdl 10/3 has no exact binary form
+    corpus_b = spark.createDataFrame(
+        [
+            (0, "spark query scan"),
+            (1, "a table scan reads row groups"),
+            (7, "scan"),
+        ],
+        "doc_id bigint, text string",
+    )
+    name = "stats_literal_idx"
+    build_postings_index(spark, corpus_a, name, path=str(tmp_path))
+    build_postings_index(spark, corpus_b, name, path=str(tmp_path))
+    assert index_stats(spark, name) == tuple(corpus_stats(build_postings(corpus_b)).first())
+    assert index_stats(spark, name) == (3, 10 / 3)
+
+    # 30 decimals: Spark's round leaves every double as it is
+    query = "spark scan query"
+    via_idx = bm25_topk_from_index(spark, name, query, 5, score_decimals=30)
+    adhoc = bm25_topk(corpus_b, query, 5, score_decimals=30)
+    assert [tuple(r) for r in via_idx.collect()] == [tuple(r) for r in adhoc.collect()]
+    files = via_idx.inputFiles()
+    assert files and not [f for f in files if f"{name}_stats" in f]
+
+    none = bm25_topk_from_index(spark, name, "zebra", 5)
+    assert none.collect() == []
+    assert none.schema.simpleString() == "struct<doc_id:bigint,score:double>"
 
 
 def test_adhoc_bm25_leaves_no_cached_rdds(spark):

@@ -459,3 +459,32 @@ def test_lifecycle_slots_serve_from_prebuilt_stores(spark):
     p3 = _plan(m.q_ann_store_lifecycle(spark, SF_DIR))
     assert "memfuse_bucketed_lc" in p3
     assert "embeddings.parquet" not in p3
+
+
+def test_fixture_stores_live_under_a_root_of_their_own_process():
+    """The memoized registry stores are built under one root per
+    process: two fixtures of this process share it, another process
+    gets a different one and removes its own at exit, so no process
+    rebuilds a store under another that is reading it."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import __spark_entry__ as m
+
+    root = m._fixture_dir()
+    assert os.path.isdir(root)
+    assert m._fixture_dir("memfuse_idx") == os.path.join(root, "memfuse_idx")
+    assert m._fixture_dir("memfuse_stream_idx", "t") == os.path.join(root, "memfuse_stream_idx", "t")
+    out = subprocess.run(
+        [sys.executable, "-c", "import __spark_entry__ as m; print(m._fixture_dir())"],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=120,
+    )
+    other = os.path.normpath(out.stdout.strip().splitlines()[-1])
+    assert other != os.path.normpath(root)
+    assert not os.path.exists(other)

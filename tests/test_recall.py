@@ -1,11 +1,15 @@
 """The recalls (pipeline.hybrid_retrieval / hybrid_retrieval_3way and
 their batch forms): exact rows on degenerate inputs over a hand-built
 fixture, batch rows against the single recall's, the driver-side RRF
-against the Spark plan, and job-count guards."""
+against the Spark plan, errors on either side of the keyword branch's
+driver thread, and job-count guards."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
+from pyspark import InheritableThread
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -140,6 +144,56 @@ def test_batch_without_postings_index_raises(fx):
         hybrid_batch_retrieval_3way(docs, emb, edges, queries, k=2)
 
 
+def _single_3way(docs, emb, edges, opts):
+    return hybrid_retrieval_3way(docs, emb, edges, "apple", [1.0, 0.0], **opts)
+
+
+def _batch_3way(docs, emb, edges, opts):
+    queries = {0: ("apple", [1.0, 0.0]), 1: ("cherry", [0.0, 1.0])}
+    return hybrid_batch_retrieval_3way(docs, emb, edges, queries, **opts)
+
+
+def _no_thread_or_job_left(spark):
+    assert not [t for t in threading.enumerate() if isinstance(t, InheritableThread)]
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+
+
+@pytest.mark.parametrize("recall", [_single_3way, _batch_3way])
+def test_keyword_thread_error_fails_the_recall(spark, fx, tmp_path, recall):
+    """The keyword branch collects on a driver thread: when that collect
+    fails (its postings files deleted after the table's files were
+    listed), the recall raises the error on the caller, from the
+    thread's collect, and leaves no job running."""
+    docs, emb, edges = fx
+    idx = f"test_recall_broken_{recall.__name__.strip('_')}"
+    build_postings_index(spark, docs, idx, path=str(tmp_path))
+    opts = dict(k=5, first_stage_k=2, weights=W3, postings_index=idx)
+    assert recall(docs, emb, edges, opts).collect()
+    for f in (tmp_path / idx).glob("part-*"):
+        f.unlink()
+    with pytest.raises(Exception, match="FILE_NOT_EXIST") as err:
+        recall(docs, emb, edges, opts)
+    assert any(e.name == "collect" and e.path.name == "pipeline.py" for e in err.traceback)
+    _no_thread_or_job_left(spark)
+
+
+@pytest.mark.parametrize("recall", [_single_3way, _batch_3way])
+def test_caller_branch_error_joins_the_keyword_thread(spark, fx, tmp_path, recall):
+    """The vector branch raises on the caller (embeddings without
+    ``vec_id``) while the keyword collect runs on its thread: the recall
+    raises that error only after joining the thread, so no thread and
+    no job of the recall is left."""
+    from pyspark.errors import AnalysisException
+
+    docs, emb, edges = fx
+    idx = f"test_recall_joined_{recall.__name__.strip('_')}"
+    build_postings_index(spark, docs, idx, path=str(tmp_path))
+    opts = dict(k=5, first_stage_k=2, weights=W3, postings_index=idx)
+    with pytest.raises(AnalysisException, match="vec_id"):
+        recall(docs, emb.withColumnRenamed("vec_id", "id"), edges, opts)
+    _no_thread_or_job_left(spark)
+
+
 _ids = st.integers(min_value=0, max_value=12)
 _scores = st.one_of(st.none(), st.sampled_from([-0.5, 0.0, 0.25, 0.5, 1.0]))
 _branch = st.dictionaries(_ids, _scores, max_size=8)
@@ -169,9 +223,10 @@ def test_driver_rrf_matches_spark_rrf(spark, branches):
 
 def test_recall_job_budget_and_no_cached_blocks(spark, tables):
     """One 3-way recall on the prebuilt index and edge store runs at most
-    7 Spark jobs, a 3-query batch recall at most 15, and neither leaves a
-    persisted RDD behind: a regression to lazily re-planned branches or
-    to checkpointed layers fails here."""
+    6 Spark jobs, a 3-query batch recall at most 14, and neither leaves a
+    persisted RDD behind: a regression to lazily re-planned branches, to
+    checkpointed layers or to a job for the index's corpus stats fails
+    here."""
     import __spark_entry__ as m
     from memfuse_spark.plans.pipeline import anchor_vector
     from tests.conftest import SF_DIR
@@ -193,7 +248,7 @@ def test_recall_job_budget_and_no_cached_blocks(spark, tables):
         sc.setLocalProperty("spark.job.description", None)
     assert len(rows) == 15
     jobs = sc.statusTracker().getJobIdsForGroup("test-recall-job-budget")
-    assert 0 < len(jobs) <= 7
+    assert 0 < len(jobs) <= 6
     assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) <= before
 
     queries = {i: (t, anchor_vector(spark, emb, i)) for i, t in enumerate(
@@ -209,5 +264,5 @@ def test_recall_job_budget_and_no_cached_blocks(spark, tables):
         sc.setLocalProperty("spark.job.description", None)
     assert len(rows) == 45
     jobs = sc.statusTracker().getJobIdsForGroup("test-recall-job-budget-batch")
-    assert 0 < len(jobs) <= 15
+    assert 0 < len(jobs) <= 14
     assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) <= before
