@@ -1186,8 +1186,8 @@ def q_token_stats_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F.session_window gap sessionization (batch twin of the streaming
-    session aggregation in streaming/windows.py), per-session rollup."""
+    """F.session_window gap sessionization (streaming/windows.py
+    session_window_agg), per-session rollup."""
     from memfuse_spark.streaming.windows import session_window_agg
 
     (ev,) = _tables(spark, sf_dir, "events")
@@ -1668,11 +1668,10 @@ def q_read_your_writes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_round_buffer_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B1 batch twin: greedy token-budget grouping of m0 messages per
-    conversation (token 800 trigger semantics; applyInPandas). The
-    stateful greedy accumulation is replayed by a RECURSIVE-CTE oracle
-    (_round_buffer_batch_sql); the streaming variant is exercised in
-    tests/test_streaming.py."""
+    """B1 RoundBuffer: greedy token-budget grouping of m0 messages per
+    conversation (chunking.contextual_chunks; applyInPandas keyed by
+    session). The stateful greedy accumulation is replayed by a
+    RECURSIVE-CTE oracle (_round_buffer_batch_sql)."""
     from memfuse_spark.operators import hierarchy as h
     from memfuse_spark.operators.chunking import contextual_chunks
 
@@ -3258,8 +3257,8 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC top-k with label-derived codebooks (the
-    deterministic twin of the MLlib-KMeans PQ tier in ann.pq_train)."""
+    """Product-quantization ADC top-k with label-derived codebooks
+    (ann.pq_topk_from_labels: codebook, encode, ADC lookup)."""
     from memfuse_spark.operators.ann import pq_topk_from_labels
 
     (emb,) = _tables(spark, sf_dir, "embeddings")
@@ -4694,9 +4693,7 @@ def q_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """View→click attribution pairs within 30 minutes per user — the
-    BATCH twin of the watermarked stream-stream interval join
-    (streaming/windows.attribution_join; stream-vs-batch parity is
-    test-asserted)."""
+    event-time interval join streaming/windows.attribution_join."""
     from memfuse_spark.streaming.windows import attribution_join
 
     (events,) = _tables(spark, sf_dir, "events")

@@ -162,77 +162,3 @@ def release(scope: str | None = None) -> None:
 
 def release_all() -> None:
     release(None)
-
-
-# ---------------------------------------------------------------------------
-# LRU query-result cache (reference: buffer/query_buffer.py:391-425)
-# ---------------------------------------------------------------------------
-
-class QueryResultCache:
-    """Session-level LRU cache of materialized query results.
-
-    Spark twin of the reference QueryBuffer's query cache
-    (memfuse `buffer/query_buffer.py:391-425`): results are keyed by a
-    caller-chosen cache key, capacity-bounded, and evicted least-
-    recently-used. Two differences forced by the engine:
-
-    - Entries are MATERIALIZED local rows re-wrapped as a DataFrame,
-      not persisted lazy plans. A persisted plan pins executor memory
-      and (worse) stays wired to its input snapshot through lineage;
-      retrieval results are top-k-sized by construction, so row
-      materialization is cheap and makes eviction a pure driver-side
-      dict pop with no executor RPC.
-    - ``get`` returns a FRESH DataFrame per hit (createDataFrame over
-      the cached rows) so callers can compose it into new plans freely;
-      the cached rows themselves are never aliased out (the reference
-      returns ``.copy()`` for the same reason).
-
-    Invalidation is the caller's job (key by table version/epoch), same
-    as the reference, which clears on buffer writes.
-    """
-
-    def __init__(self, capacity: int = 100) -> None:
-        self.capacity = capacity
-        self._entries: dict[str, tuple[list, object]] = {}  # key -> (rows, schema)
-        self._order: list[str] = []  # LRU order, oldest first
-        self.hits = 0
-        self.misses = 0
-
-    def get(self, spark, key: str) -> DataFrame | None:
-        if key not in self._entries:
-            self.misses += 1
-            return None
-        self.hits += 1
-        self._order.remove(key)
-        self._order.append(key)
-        rows, schema = self._entries[key]
-        return spark.createDataFrame(rows, schema)
-
-    def put(self, key: str, df: DataFrame) -> DataFrame:
-        """Materialize ``df`` (must be result-sized) into the cache; returns
-        a re-wrapped DataFrame backed by the cached rows."""
-        rows = df.collect()
-        self._entries[key] = (rows, df.schema)
-        if key in self._order:
-            self._order.remove(key)
-        self._order.append(key)
-        while len(self._entries) > self.capacity:
-            oldest = self._order.pop(0)
-            self._entries.pop(oldest, None)
-        return df.sparkSession.createDataFrame(rows, df.schema)
-
-    def get_or_compute(self, spark, key: str, thunk) -> DataFrame:
-        """Cache-through: return the cached result or run ``thunk()`` and
-        cache it. ``thunk`` returns the (lazy) result DataFrame."""
-        hit = self.get(spark, key)
-        if hit is not None:
-            return hit
-        return self.put(key, thunk())
-
-    def stats(self) -> dict:
-        return {
-            "size": len(self._entries),
-            "capacity": self.capacity,
-            "hits": self.hits,
-            "misses": self.misses,
-        }

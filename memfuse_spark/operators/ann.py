@@ -429,140 +429,6 @@ def ivf_kmeans_centroids(
     return model, assigned
 
 
-def mllib_lsh_topk(
-    embeddings: DataFrame,
-    qvec: Sequence[float],
-    k: int,
-    bucket_length: float = 2.0,
-    num_tables: int = 3,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """MLlib BucketedRandomProjectionLSH approximate NN (the built-in
-    alternative to our md5-derived sign LSH; euclidean-distance based).
-    Returns (id, distCol) for the approx k nearest."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.linalg import Vectors
-
-    feats = embeddings.withColumn(
-        "features", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_tables,
-        seed=seed,
-    )
-    model = lsh.fit(feats)
-    key = Vectors.dense([float(x) for x in qvec])
-    return model.approxNearestNeighbors(feats, key, k).select(id_col, "distCol")
-
-
-def pq_train(
-    embeddings: DataFrame,
-    m: int = 8,
-    ks: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    dim: int = 64,
-):
-    """Product-quantization codebooks: split the vector into `m`
-    subspaces and KMeans each (seeded MLlib fits). Returns a list of m
-    (ks, dim/m) numpy codebooks — tiny (m·ks·dim/m floats), a driver-
-    side artifact like any model.
-
-    With m=8, ks=16 a 64-dim float32 vector (256 B) compresses to 8
-    one-byte codes — 32× — and ADC scoring never decompresses."""
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    d_sub = dim // m
-    books = []
-    for s in range(m):
-        sub = embeddings.select(
-            array_to_vector(
-                F.slice(F.col(vec_col).cast("array<double>"), s * d_sub + 1, d_sub)
-            ).alias("features")
-        )
-        model = KMeans(
-            k=ks, seed=seed + s, featuresCol="features", predictionCol="c"
-        ).fit(sub)
-        books.append(np.array(model.clusterCenters()))
-    return books
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode each vector as m nearest-subcentroid codes (array<int>,
-    byte-ranged). One vectorized Arrow pass; codebooks broadcast."""
-    import numpy as np
-    import pandas as pd
-
-    bc = embeddings.sparkSession.sparkContext.broadcast(
-        [np.asarray(b, dtype=np.float64) for b in codebooks]
-    )
-    m = len(codebooks)
-    d_sub = codebooks[0].shape[1]
-
-    def enc(batches):
-        books = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for s, book in enumerate(books):
-                subm = mat[:, s * d_sub : (s + 1) * d_sub]
-                d2 = ((subm[:, None, :] - book[None, :, :]) ** 2).sum(-1)
-                codes[:, s] = d2.argmin(1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "codes": list(map(list, codes))}
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        enc, f"{id_col} long, codes array<int>"
-    )
-
-
-def pq_topk(
-    encoded: DataFrame,
-    codebooks,
-    qvec: Sequence[float],
-    k: int,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: the query's m
-    per-subspace distance tables are tiny literal arrays, and each
-    row's score is m `element_at` lookups summed — pure JVM expression
-    over the compressed column, no decompression, no Python in the
-    scan. Plans as TakeOrderedAndProject like the exact tier."""
-    import numpy as np
-
-    q = np.asarray(qvec, dtype=np.float64)
-    m = len(codebooks)
-    d_sub = codebooks[0].shape[1]
-    dist = None
-    for s, book in enumerate(codebooks):
-        qs = q[s * d_sub : (s + 1) * d_sub]
-        table = ((np.asarray(book) - qs[None, :]) ** 2).sum(1)
-        arr = f64_array_lit(table)
-        term = F.element_at(arr, F.col("codes")[s] + 1)
-        dist = term if dist is None else dist + term
-    return (
-        encoded.select(id_col, dist.alias("dist2"))
-        .orderBy(F.asc("dist2"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def ivf_knn_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1062,9 +928,8 @@ def pq_codebooks_from_labels(
     corpus's label column: codeword = rounded per-position mean of the
     label's subvector (the per-subspace analog of ivf_centroids).
 
-    The deterministic counterpart of pq_train's KMeans codebooks: the
-    encode/ADC dataflow downstream is identical, but every codeword is
-    reproducible as plain SQL aggregation, so the whole PQ pipeline is
+    Codewords come from labels, not a k-means fit, so every codeword is
+    reproducible as plain SQL aggregation and the whole PQ pipeline is
     DuckDB-oracle-checkable. Rounding the codewords (both sides) pins
     the downstream distance arithmetic to identical inputs.
 
@@ -1147,10 +1012,10 @@ def pq_topk_from_labels(
     recon(doc) concatenates the doc's m codewords. Because dot and norm²
     decompose over subspaces, the query needs only the m·cells-row
     lookup table (qdot_s, cnorm2_s) — broadcast — and per doc a sum of m
-    looked-up terms: the compressed column is never decompressed, same
-    as pq_topk's distance tables. End-to-end: codebook build (corpus
-    pass 1), encode (corpus pass 2), then top-k touches only the code
-    table — the 32× smaller surrogate corpus.
+    looked-up terms: the compressed column is never decompressed.
+    End-to-end: codebook build (corpus pass 1), encode (corpus pass 2),
+    then top-k touches only the code table — the 32× smaller surrogate
+    corpus.
     """
     import math
 

@@ -100,8 +100,7 @@ def fact_conflicts(
     LATEST batch per conversation as the new side and everything
     earlier as existing. That keeps the pair count LINEAR in the new
     batch (new × blocked-existing), never the quadratic all-history
-    self-join. The streaming ingest path calls
-    ``fact_conflicts_between`` directly with its own epoch split.
+    self-join.
     """
     f = _with_fact_parts(m2)
     latest = f.groupBy("conversation_id").agg(
@@ -169,10 +168,10 @@ def fact_conflicts_between(
     _parsed: bool = False,
 ) -> DataFrame:
     """Two-sided conflict kernel: detect conflicts of ``new`` facts
-    against ``existing`` facts (both the stored M2 shape). The
-    streaming ingest twin feeds each micro-batch as ``new`` and the
-    accumulated store as ``existing`` (epoch order already implies
-    temporal order, so ``require_batch_order=False`` there)."""
+    against ``existing`` facts (both the stored M2 shape). With
+    ``require_batch_order`` only pairs whose existing fact has the
+    earlier batch_id count; without it the sides' split alone is the
+    temporal order."""
     if not _parsed:
         existing = _with_fact_parts(existing)
         new = _with_fact_parts(new)

@@ -1332,22 +1332,31 @@ def bm25_batch_topk_from_index(
 ) -> DataFrame:
     """(query_id, doc_id, score) — BM25 for a BATCH of queries in ONE
     job: a single bucket-pruned postings scan over the union of all
-    query terms, broadcast-joined to the tiny (query_id, term) map,
-    scored per (query, doc), per-query top-k window. N queries cost one
-    index scan instead of N — the server-side throughput shape
-    (reference touts parallel query handling; this is its plan form).
+    query terms; each posting row fans out to the queries holding its
+    term through a ``term → array<query_id>`` map literal (one parse, no
+    join, no Python worker), is scored per (query, doc), and a per-query
+    top-k window keeps k. N queries cost one index scan instead of N —
+    the server-side throughput shape (reference touts parallel query
+    handling; this is its plan form).
     """
     from pyspark.sql import Window
 
-    rows = [
-        (qid, t)
-        for qid, q in sorted(queries.items())
-        for t in sorted({t for t in _py_tokenize(q)})
-    ]
-    qterms = spark.createDataFrame(rows, "query_id int, term string")
-    all_terms = sorted({t for _, t in rows})
+    from memfuse_spark.functions.lits import sql_literal
+
+    qids: dict[str, list[int]] = {}
+    for qid, q in sorted(queries.items()):
+        for t in sorted(set(_py_tokenize(q))):
+            qids.setdefault(t, []).append(int(qid))
+    all_terms = sorted(qids)
+    term_qids = F.expr(
+        "CAST(map("
+        + ", ".join(
+            f"{sql_literal(t)}, array({', '.join(map(str, qids[t]))})" for t in all_terms
+        )
+        + ") AS map<string, array<int>>)"
+    )
     postings = spark.table(index_name).filter(F.col("term").isin(all_terms))
-    matched = postings.join(F.broadcast(qterms), "term")
+    matched = postings.withColumn("query_id", F.explode(term_qids[F.col("term")]))
     scored = (
         matched.select(
             "query_id", "doc_id", _bm25_term_score(k1, b, _stats_literals(spark, index_name))

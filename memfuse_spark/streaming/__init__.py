@@ -1,5 +1,6 @@
 """Structured Streaming layer (SURVEY.md §2.10): the reference's buffer
-pipeline re-expressed as streaming primitives — micro-batch ingest with
-foreachBatch, the RoundBuffer token/size/oversize triggers as an
-applyInPandasWithState operator, and read-your-writes as a union view.
+pipeline re-expressed as epoch-store writes — micro-batch ingest with
+foreachBatch into replay-safe epoch stores, read-your-writes as a union
+view, and the RoundBuffer triggers as the batch per-session grouping
+``chunking.contextual_chunks``.
 """

@@ -1,4 +1,4 @@
-"""Streaming buffer semantics (SURVEY.md §2.10 B1-B4, §3.3).
+"""Streaming buffer semantics (SURVEY.md §2.10 B1-B5, §3.3).
 
 The reference hand-rolls a streaming pipeline: RoundBuffer accumulates
 message batches per session and flushes on token/size/session triggers
@@ -7,18 +7,20 @@ flushes to stores (`buffer/hybrid_buffer.py:27-360`), FlushManager runs
 async workers (`buffer/flush_manager.py`), QueryBuffer unions un-flushed
 rows with storage for read-your-writes (`buffer/query_buffer.py:331-389`).
 
-Spark-first mapping:
-- B1 RoundBuffer  → ``applyInPandasWithState`` keyed by session. Token
-  (800) / size (5) / oversize triggers are per-key state transitions; the
-  reference's "session changed" trigger is an artifact of its single
-  serial buffer — per-key state makes it unnecessary (each session has
-  its own buffer), which is also the only shape that scales: state is
-  sharded across executors by key.
-- B2/B3 Hybrid+FlushManager → ``foreachBatch``: chunk → embed → append
-  all sinks inside one exactly-once micro-batch function; Spark's own
-  micro-batch machinery replaces the worker pool.
-- B4 read-your-writes → union of the un-flushed (stream) table with the
+Spark-first mapping, one code path per op:
+- B1 RoundBuffer → ``chunking.contextual_chunks``: a per-session greedy
+  budget grouping (``applyInPandas`` keyed by session), served as the
+  ``round_buffer_batch`` query. Keying by session replaces the
+  reference's "session changed" trigger, an artifact of its single
+  serial buffer.
+- B2/B3 Hybrid+FlushManager → ``foreachBatch``: each micro-batch lands
+  as one epoch of every store it feeds (:func:`write_epoch`, replay-safe);
+  Spark's own micro-batch machinery replaces the worker pool. The three
+  streams are :func:`ingest_stream` (M0/M1/M2), :func:`index_ingest_stream`
+  and :func:`vector_ingest_stream`.
+- B4 read-your-writes → union of the un-flushed table with the
   persisted table, buffer rows winning on id collision.
+- B5 SpeculativeBuffer → :func:`speculative_prefetch`.
 """
 
 from __future__ import annotations
@@ -27,126 +29,10 @@ import json
 import os
 import shutil
 import uuid
-from collections.abc import Iterator
-from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MAX_TOKENS = 800  # config/buffer/default.yaml:27-29
-MAX_SIZE = 5
-
-FLUSH_SCHEMA = StructType(
-    [
-        StructField("session_id", StringType()),
-        StructField("flush_seq", IntegerType()),
-        StructField("content", StringType()),
-        StructField("message_ids", ArrayType(StringType())),
-        StructField("n_messages", IntegerType()),
-        StructField("token_count", IntegerType()),
-        StructField("trigger", StringType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("contents", ArrayType(StringType())),
-        StructField("ids", ArrayType(StringType())),
-        StructField("tokens", IntegerType()),
-        StructField("flush_seq", IntegerType()),
-    ]
-)
-
-
-def _round_buffer_fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-    """Per-session buffer state machine (reference round_buffer.py:78-163):
-
-    - oversized message (alone > MAX_TOKENS): current buffer flushes,
-      the message passes straight through as its own flush (:116-129)
-    - token trigger: flush BEFORE adding when the running count would
-      exceed MAX_TOKENS (:134-138)
-    - size trigger: flush AFTER adding when count reaches MAX_SIZE (:141-145)
-    Buffered leftovers stay in state across micro-batches.
-    """
-    session_id = key[0]
-    if state.exists:
-        contents, ids, tokens, flush_seq = state.get
-        contents, ids = list(contents), list(ids)
-    else:
-        contents, ids, tokens, flush_seq = [], [], 0, 0
-
-    out = []
-
-    def flush(trigger: str) -> None:
-        nonlocal contents, ids, tokens, flush_seq
-        if not contents:
-            return
-        out.append(
-            (
-                session_id,
-                flush_seq,
-                "\n\n".join(contents),
-                list(ids),
-                len(contents),
-                tokens,
-                trigger,
-            )
-        )
-        contents, ids, tokens = [], [], 0
-        flush_seq += 1
-
-    # A key's micro-batch data may arrive as MULTIPLE pandas chunks;
-    # sorting each chunk independently would process rows out of global
-    # sequence order (wrong flush grouping). Concatenate, then sort once.
-    chunks = list(pdfs)
-    batch = (
-        pd.concat(chunks, ignore_index=True).sort_values(
-            ["sequence_number"], kind="mergesort"
-        )
-        if chunks
-        else pd.DataFrame()
-    )
-    if len(batch):
-        for _, r in batch.iterrows():
-            mtok = int(r["token_count"])
-            if mtok > MAX_TOKENS:
-                flush("pre_oversize")
-                contents, ids, tokens = [str(r["content"])], [str(r["message_id"])], mtok
-                flush("oversize")
-                continue
-            if tokens + mtok > MAX_TOKENS:
-                flush("tokens")
-            contents.append(str(r["content"]))
-            ids.append(str(r["message_id"]))
-            tokens += mtok
-            if len(contents) >= MAX_SIZE:
-                flush("size")
-
-    state.update((contents, ids, tokens, flush_seq))
-    if out:
-        yield pd.DataFrame(out, columns=[f.name for f in FLUSH_SCHEMA.fields])
-
-
-def round_buffer_stream(messages: DataFrame) -> DataFrame:
-    """Apply the B1 round-buffer to a *streaming* messages DataFrame
-    keyed by session_id. Input columns: session_id, message_id,
-    sequence_number, content, token_count."""
-    return messages.groupBy("session_id").applyInPandasWithState(
-        _round_buffer_fn,
-        FLUSH_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        "NoTimeout",
-    )
-
+from pyspark.sql.types import StructType
 
 SCHEMA_FILE = "_schema.json"  # an epoch store's recorded read schema
 BASE_FILE = "_base_epochs.json"  # the epoch ids compaction folded into the base
@@ -300,16 +186,6 @@ def _epoch_stream(stream: DataFrame, out_base: str, process_batch) -> "Streaming
     )
 
 
-def _prior_epochs(spark: SparkSession, path: str, epoch_id: int, schema: str) -> DataFrame:
-    """The epoch store at ``path`` minus epoch ``epoch_id`` (a replay
-    must not see its own earlier attempt), without the ``epoch_id``
-    column. Empty with ``schema`` only while the store does not exist
-    yet; any other read failure raises."""
-    if not os.path.exists(path):
-        return spark.createDataFrame([], schema)
-    return read_epochs(spark, path).filter(F.col("epoch_id") != epoch_id).drop("epoch_id")
-
-
 def write_hierarchy_epoch(batch: DataFrame, epoch_id: int, out_base: str) -> None:
     """Write one micro-batch's M0/M1/M2 fan-out, each layer one epoch
     of its store (:func:`write_epoch`: replay-safe)."""
@@ -437,144 +313,6 @@ def speculative_prefetch(
     )
 
 
-class SpeculativeCache:
-    """B5 cache bookkeeping around :func:`speculative_prefetch`
-    (reference speculative_buffer.py interface: update / get_prefetched
-    / stats with hit tracking; max_size + context_window semantics)."""
-
-    def __init__(self, corpus: DataFrame, max_size: int = 10, context_window: int = 3):
-        self.corpus = corpus
-        self.max_size = max_size
-        self.context_window = context_window
-        self._recent: list = []
-        self._cache: dict = {}
-        self.total_hits = 0
-        self.total_misses = 0
-
-    def update(self, recent_ids: list) -> None:
-        """Record recent accesses and refresh the prefetch cache from
-        the last `context_window` of them."""
-        self._recent = (self._recent + list(recent_ids))[-self.context_window :]
-        rows = speculative_prefetch(
-            self.corpus, self._recent, k=self.max_size
-        ).collect()
-        self._cache = {r[0]: r[1] for r in rows}
-
-    def get(self, item_id):
-        if item_id in self._cache:
-            self.total_hits += 1
-            return self._cache[item_id]
-        self.total_misses += 1
-        return None
-
-    def stats(self) -> dict:
-        total = self.total_hits + self.total_misses
-        return {
-            "cache_size": len(self._cache),
-            "max_size": self.max_size,
-            "context_window": self.context_window,
-            "total_hits": self.total_hits,
-            "total_misses": self.total_misses,
-            "hit_rate_percent": round(100.0 * self.total_hits / total, 2)
-            if total
-            else 0.0,
-        }
-
-
-def stream_dedup(
-    events_stream: DataFrame,
-    id_cols: list[str] | None = None,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup: duplicate keys arriving within the
-    watermark horizon are dropped (dropDuplicatesWithinWatermark), and —
-    unlike a plain dropDuplicates on a stream — the dedup state is
-    EVICTED once the watermark passes, so state size is bounded by the
-    duplicate-arrival window rather than the whole stream history. The
-    streaming twin of dedup.exact_dedup for at-least-once sources
-    (e.g. Kafka redeliveries)."""
-    return events_stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        id_cols or ["event_id"]
-    )
-
-
-def windowed_event_counts(
-    events_stream: DataFrame,
-    window: str = "5 minutes",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked event-time windowed aggregation (late data handled by
-    the watermark; the reference has no event-time semantics — this is
-    the Spark-native upgrade, SURVEY.md §2.10)."""
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(win, "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-    )
-
-
-def dedup_ingest_stream(
-    docs_stream: DataFrame,
-    out_base: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float | None = None,
-) -> "StreamingQuery":
-    """Streaming incremental near-dup: each micro-batch dedups against
-    the accumulated LSH signature index, then absorbs into it.
-
-    The streaming twin of dedup.incremental_neardup_pairs (the
-    daily-crawl shape, continuous): per epoch the NEW docs are
-    shingled/signed/banded; candidates come from the batch×index
-    equi-join plus within-batch; verified pairs, the batch's index rows
-    and the batch's docs all land under ``out_base`` partitioned by
-    epoch_id with dynamic overwrite — a replayed epoch REPLACES its
-    partitions, so the index never double-counts a batch (the same
-    exactly-once pattern as ingest_stream). The historical corpus is
-    only ever touched as (a) its index rows in the candidate equi-join
-    and (b) shingle rehydration for the candidate ids — never
-    re-signed.
-
-    Outputs under out_base: ``pairs/`` (doc_a, doc_b, jaccard),
-    ``index/`` (doc_id, band, bucket), ``docs/`` (raw batch rows).
-    """
-    from memfuse_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        incremental_neardup_pairs,
-    )
-
-    thr = JACCARD_THRESHOLD if threshold is None else threshold
-    spark = docs_stream.sparkSession
-
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        def prior(name: str, schema: str) -> DataFrame:
-            return _prior_epochs(spark, os.path.join(out_base, name), epoch_id, schema)
-
-        index = prior("index", f"{id_col} long, band int, bucket string")
-        prior_docs = prior("docs", f"{id_col} long, {text_col} string")
-        all_docs = prior_docs.select(id_col, text_col).unionByName(
-            batch.select(id_col, text_col)
-        )
-        pairs, new_rows = incremental_neardup_pairs(
-            batch,
-            all_docs,
-            index.select(id_col, "band", "bucket"),
-            id_col=id_col,
-            text_col=text_col,
-            threshold=thr,
-        )
-        write_epoch(pairs, os.path.join(out_base, "pairs"), epoch_id)
-        write_epoch(new_rows, os.path.join(out_base, "index"), epoch_id)
-        write_epoch(
-            batch.select(id_col, text_col), os.path.join(out_base, "docs"), epoch_id
-        )
-
-    return _epoch_stream(docs_stream, out_base, process_batch)
-
-
 def index_ingest_stream(
     docs_stream: DataFrame,
     out_base: str,
@@ -676,59 +414,3 @@ def vector_ingest_stream(
             batch, out_base, epoch_id, dim, num_planes, vec_col
         ),
     )
-
-
-def conflict_ingest_stream(
-    facts_stream: DataFrame,
-    out_base: str,
-    detector=None,
-) -> "StreamingQuery":
-    """Streaming insert-time fact conflict detection: each micro-batch
-    of M2 facts is checked against the accumulated fact store, then
-    absorbed into it — the continuous form of the reference's
-    per-write conflict pass (hierarchy/conflict_detection.py:85-108,
-    triggered from the write path memory_layer_impl.py:191).
-
-    Per epoch: conflicts = fact_conflicts_between(prior store, batch)
-    — epoch order IS temporal order, so the within-conversation
-    batch_id comparison is not re-required — and both the conflict
-    rows and the batch's facts land under ``out_base`` partitioned by
-    epoch_id with dynamic overwrite: a replayed epoch REPLACES its own
-    partitions (prior state read excludes them), the same exactly-once
-    contract as ingest_stream / dedup_ingest_stream.
-
-    Outputs under out_base: ``conflicts/`` (the fact_conflicts shape +
-    epoch_id), ``facts/`` (the accumulated store).
-
-    ``detector=``: the same LLM plug point as the batch kernel
-    (``fact_conflicts_between(detector=)``) — e.g.
-    ``prompts.llm_detector(provider)``, which rides the real
-    prompt-build → call → parse contract per candidate pair. The
-    default keeps the deterministic rule tier.
-    """
-    from memfuse_spark.operators.conflicts import fact_conflicts_between
-
-    spark = facts_stream.sparkSession
-    fact_schema = (
-        "chunk_id string, conversation_id string, fact_content string, "
-        "entities array<string>, confidence double"
-    )
-
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        prior = _prior_epochs(
-            spark, os.path.join(out_base, "facts"), epoch_id, fact_schema
-        )
-        # vs the store, plus within-batch (earlier chunks of the same
-        # write batch are "existing" by the time later ones insert —
-        # batch_id order supplies the within-epoch temporal order)
-        conflicts = fact_conflicts_between(
-            prior, batch, detector=detector
-        ).unionByName(
-            fact_conflicts_between(
-                batch, batch, require_batch_order=True, detector=detector
-            )
-        )
-        write_epoch(conflicts, os.path.join(out_base, "conflicts"), epoch_id)
-        write_epoch(batch, os.path.join(out_base, "facts"), epoch_id)
-
-    return _epoch_stream(facts_stream, out_base, process_batch)

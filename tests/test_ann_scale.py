@@ -1,15 +1,14 @@
-"""Scale-path ANN: partition-pruned bucketed corpus, MLlib variants."""
+"""Scale-path ANN: partition-pruned bucketed corpus, MLlib k-means cells,
+IVF-PQ."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from memfuse_spark.operators.ann import (
     ann_lsh_topk,
     bucketed_topk,
     ivf_kmeans_centroids,
-    mllib_lsh_topk,
 )
 from memfuse_spark.plans.pipeline import anchor_vector
 from memfuse_spark.streaming.buffer import write_vector_epoch
@@ -54,57 +53,6 @@ def test_ivf_kmeans_assigns_all(spark, tables):
     cells = {r.cell for r in assigned.select("cell").distinct().collect()}
     assert cells <= set(range(5)) and len(cells) > 1
     assert len(model.clusterCenters()) == 5
-
-
-def test_mllib_lsh_finds_anchor(spark, tables):
-    emb = tables["embeddings"]
-    qvec = anchor_vector(spark, emb, 0)
-    got = mllib_lsh_topk(emb, qvec, 5)
-    rows = got.collect()
-    assert len(rows) == 5
-    # the anchor itself is at distance ~0
-    assert rows and min(r.distCol for r in rows) == pytest.approx(0.0, abs=1e-6)
-    assert any(r.vec_id == 0 for r in rows)
-
-
-def test_pq_adc_recall_and_compression(spark):
-    """IVF-PQ tier: 32x compression (8 byte-codes vs 64 float32), ADC
-    scoring stays JVM-side, and recall@10 vs the exact scan is high on
-    normalized vectors (L2 ADC ranking ~ cosine ranking)."""
-    import math
-
-    from memfuse_spark.functions.vector import normalize
-    from memfuse_spark.operators.ann import pq_encode, pq_topk, pq_train
-    from memfuse_spark.operators.similarity import similarity_topk
-
-    # synthetic clustered corpus: 6 cluster directions + small wobble
-    dim, n = 64, 240
-    rows = []
-    for i in range(n):
-        c = i % 6
-        vec = [
-            math.cos(0.5 * c + 0.07 * j) + 0.01 * math.sin(1.3 * i + j)
-            for j in range(dim)
-        ]
-        rows.append((i, vec))
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>").select(
-        "vec_id", normalize("embedding").alias("embedding")
-    )
-    books = pq_train(emb, m=8, ks=16, dim=dim)
-    encoded = pq_encode(emb, books)
-
-    first = encoded.first()
-    assert len(first.codes) == 8 and all(0 <= c < 16 for c in first.codes)
-
-    qvec = [r.embedding for r in emb.filter(F.col("vec_id") == 0).collect()][0]
-    approx = {r.vec_id for r in pq_topk(encoded, books, qvec, 10).collect()}
-    exact = {r.vec_id for r in similarity_topk(emb, qvec, 10).collect()}
-    assert len(approx & exact) >= 6  # recall@10 >= 0.6 on clustered data
-
-    # ADC scoring is JVM expression work - no Python eval in the scan
-    plan = pq_topk(encoded, books, qvec, 10)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_ivfpq_probe_restriction_and_full_probe_equivalence(spark):

@@ -274,137 +274,3 @@ def test_validation_status_lattice(spark):
     assert rows["c4-0"].entity_support == pytest.approx(0.5)
     assert rows["c4-0"].validation_score == pytest.approx(0.475)
 
-
-def test_conflict_ingest_stream_matches_batch_kernel(spark, tmp_path):
-    """Streaming insert-time conflicts over two micro-batches equal the
-    two-sided kernel applied per split; the store absorbs both epochs
-    exactly once."""
-    import os
-
-    from memfuse_spark.operators.conflicts import fact_conflicts_between
-    from memfuse_spark.streaming import buffer as sb
-
-    epoch0 = [
-        ("c1-0", "c1", "a co_occurs_with b", ["a", "b"], 0.9),
-        ("c2-0", "c2", "x co_occurs_with y", ["x", "y"], 0.95),
-    ]
-    epoch1 = [
-        ("c1-5", "c1", "a co_occurs_with c", ["a", "c"], 0.9),  # VALUE_MISMATCH
-        ("c2-5", "c2", "y co_occurs_with x", ["y", "x"], 0.93),  # SEMANTIC
-        ("c3-5", "c3", "p co_occurs_with q", ["p", "q"], 0.9),
-        # within-batch: later chunk of the SAME epoch contradicts c3-5
-        ("c3-7", "c3", "p co_occurs_with r", ["p", "r"], 0.9),
-    ]
-    src = str(tmp_path / "facts_src")
-    _m2(spark, epoch0).coalesce(1).write.mode("append").parquet(src)
-    _m2(spark, epoch1).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "conflict_out")
-    stream = (
-        spark.readStream.schema(
-            "chunk_id string, conversation_id string, fact_content string, "
-            "entities array<string>, confidence double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = sb.conflict_ingest_stream(stream, out)
-    q.awaitTermination(240)
-
-    got = spark.read.parquet(os.path.join(out, "conflicts"))
-    key = lambda r: (r.existing_chunk_id, r.new_chunk_id, r.conflict_type)
-    # one epoch introduced conflicts vs the other's store; which file
-    # became epoch 0 is load-order-dependent, so compare against the
-    # kernel on both splits
-    def batch_twin(e_rows, n_rows):
-        cross = fact_conflicts_between(_m2(spark, e_rows), _m2(spark, n_rows))
-        w0 = fact_conflicts_between(
-            _m2(spark, e_rows), _m2(spark, e_rows), require_batch_order=True
-        )
-        w1 = fact_conflicts_between(
-            _m2(spark, n_rows), _m2(spark, n_rows), require_batch_order=True
-        )
-        return (
-            {key(r) for r in cross.collect()}
-            | {key(r) for r in w0.collect()}
-            | {key(r) for r in w1.collect()}
-        )
-
-    got_keys = {key(r) for r in got.collect()}
-    assert got_keys in (batch_twin(epoch0, epoch1), batch_twin(epoch1, epoch0))
-    # the within-epoch1 contradiction was caught
-    assert ("c3-5", "c3-7", "VALUE_MISMATCH") in got_keys
-    assert got_keys  # non-vacuous
-    # store absorbed every fact exactly once
-    facts = spark.read.parquet(os.path.join(out, "facts"))
-    assert facts.count() == 6
-    assert facts.select("chunk_id").distinct().count() == 6
-    # threshold ladder applied in-stream
-    assert {r.action for r in got.collect()} <= {
-        "auto_resolve", "escalate", "ignore"
-    }
-
-
-def test_conflict_ingest_stream_with_llm_detector_seam(spark, tmp_path):
-    """The streaming insert-time path accepts the same detector= plug
-    as the batch kernel — wired here through prompts.llm_detector, so
-    the REAL prompt-build -> call -> parse contract runs inside the
-    foreachBatch epochs."""
-    import os
-
-    from memfuse_spark import prompts as P
-    from memfuse_spark.streaming import buffer as sb
-
-    def _make_fake():
-        import json as _json
-
-        def fake(prompt: str) -> str:
-            new = prompt.split("<new_fact>\n")[1].split("\n</new_fact>")[0]
-            if "co_occurs_with c" in new:
-                return _json.dumps(
-                    {
-                        "conflicts_detected": True,
-                        "conflicts": [
-                            {"type": "VALUE_MISMATCH", "severity": "HIGH",
-                             "confidence": 0.96}
-                        ],
-                    }
-                )
-            return "all consistent"
-
-        return fake
-
-    src = str(tmp_path / "facts_src")
-    _m2(
-        spark, [("c1-0", "c1", "a co_occurs_with b", ["a", "b"], 0.9)]
-    ).coalesce(1).write.mode("append").parquet(src)
-    _m2(
-        spark,
-        [
-            ("c1-5", "c1", "a co_occurs_with c", ["a", "c"], 0.9),
-            ("c1-6", "c1", "a co_occurs_with d", ["a", "d"], 0.9),
-        ],
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "conflict_det_out")
-    stream = (
-        spark.readStream.schema(
-            "chunk_id string, conversation_id string, fact_content string, "
-            "entities array<string>, confidence double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = sb.conflict_ingest_stream(
-        stream, out, detector=P.llm_detector(_make_fake())
-    )
-    q.awaitTermination(240)
-
-    got = spark.read.parquet(os.path.join(out, "conflicts")).collect()
-    # the fake flags ONLY pairs whose new fact asserts "co_occurs_with
-    # c"; the rule tier would also have flagged c1-6's mismatch, so a
-    # c1-6 row would mean the detector was ignored on some path
-    assert {(r.new_chunk_id, r.conflict_type) for r in got} == {
-        ("c1-5", "VALUE_MISMATCH")
-    }
-    assert all(r.confidence == 0.96 and r.severity == "HIGH" for r in got)

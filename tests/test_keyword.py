@@ -163,6 +163,45 @@ def test_index_stats_are_literals_recorded_at_build(spark, tmp_path):
     assert none.schema.simpleString() == "struct<doc_id:bigint,score:double>"
 
 
+def test_batch_bm25_fans_out_queries_without_a_python_scan(spark, tmp_path):
+    """The batch BM25 maps each posting to the queries holding its term
+    through a plan literal: its executed plan scans no Python RDD, and
+    every query's rows equal the single-query ad-hoc BM25 exactly, also
+    for terms shared by several queries and for a query that matches
+    nothing."""
+    from memfuse_spark.operators.keyword import (
+        bm25_batch_topk_from_index,
+        build_postings_index,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (0, "spark shuffles data between stages"),
+            (1, "a table scan reads parquet row groups"),
+            (2, "the query planner reorders joins"),
+            (3, "spark query execution uses whole stage codegen"),
+            (4, "scan scan scan"),
+        ],
+        "doc_id bigint, text string",
+    )
+    build_postings_index(spark, docs, "batch_idx", path=str(tmp_path))
+    queries = {0: "spark query scan", 1: "table scan", 2: "zebra", 5: "Spark's stage"}
+    batch = bm25_batch_topk_from_index(spark, "batch_idx", queries, 3, score_decimals=30)
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "batch_idx" in plan
+    got = {}
+    for r in batch.collect():
+        got.setdefault(r.query_id, set()).add((r.doc_id, r.score))
+    want = {
+        qid: {tuple(r) for r in bm25_topk(docs, text, 3, score_decimals=30).collect()}
+        for qid, text in queries.items()
+    }
+    assert got == {qid: rows for qid, rows in want.items() if rows}
+    assert set(got) == {0, 1, 5} and len(got[0]) == 3
+    assert batch.schema.simpleString() == "struct<query_id:int,doc_id:bigint,score:double>"
+    assert bm25_batch_topk_from_index(spark, "batch_idx", {}, 3).collect() == []
+
+
 def test_adhoc_bm25_leaves_no_cached_rdds(spark):
     from memfuse_spark import cache
     from memfuse_spark.operators.keyword import bm25_topk, tfidf_topk

@@ -261,8 +261,9 @@ def test_graph_store_neighbor_expansion_bucket_prunes(spark):
     from memfuse_spark.operators import graph as g
 
     _, edges = m._graph_edges(spark, SF_DIR)
-    # autoBucketedScan rewrites a join-free bucketed scan to a plain one
-    # (skipping the pruning rule) — pin it off for the assertion, as in
+    # autoBucketedScan plans a join-free bucketed scan as a plain one,
+    # which still prunes to the frontier's bucket files but prints no
+    # SelectedBucketsCount — pin it off for the assertion, as in
     # test_warehouse.py
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try:

@@ -193,46 +193,6 @@ def test_prefix_filter_scoped_cache_rotates(spark, docs):
 # LRU query-result cache
 # ---------------------------------------------------------------------------
 
-def test_query_cache_hit_returns_same_rows(spark, docs):
-    from memfuse_spark.cache import QueryResultCache
-
-    c = QueryResultCache(capacity=2)
-    res = docs.orderBy("doc_id").limit(5)
-    c.put("k1", res)
-    hit = c.get(spark, "k1")
-    assert hit is not None
-    assert [r["doc_id"] for r in hit.collect()] == [r["doc_id"] for r in res.collect()]
-    assert c.stats()["hits"] == 1
-
-
-def test_query_cache_lru_eviction(spark, docs):
-    from memfuse_spark.cache import QueryResultCache
-
-    c = QueryResultCache(capacity=2)
-    small = docs.limit(1)
-    c.put("a", small)
-    c.put("b", small)
-    c.get(spark, "a")          # a is now most-recent
-    c.put("c", small)          # evicts b (LRU), not a
-    assert c.get(spark, "b") is None
-    assert c.get(spark, "a") is not None
-    assert c.get(spark, "c") is not None
-
-
-def test_query_cache_get_or_compute(spark, docs):
-    from memfuse_spark.cache import QueryResultCache
-
-    c = QueryResultCache()
-    calls = []
-
-    def thunk():
-        calls.append(1)
-        return docs.limit(3)
-
-    c.get_or_compute(spark, "k", thunk)
-    c.get_or_compute(spark, "k", thunk)
-    assert len(calls) == 1
-
 
 # ---------------------------------------------------------------------------
 # Bloom semi-join

@@ -1,5 +1,6 @@
-"""Structured Streaming buffer semantics (B1/B2/B4) driven end-to-end
-with file sources + memory/parquet sinks."""
+"""Structured Streaming buffer semantics (B2/B4/B5) driven end-to-end:
+file-source streams into the epoch stores, read-your-writes and
+speculative prefetch."""
 
 from __future__ import annotations
 
@@ -10,122 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from memfuse_spark.streaming import buffer as sb
-
-
-def _write_messages(spark, path, rows):
-    spark.createDataFrame(
-        rows,
-        "session_id string, message_id string, sequence_number int, "
-        "content string, token_count int",
-    ).coalesce(1).write.mode("append").parquet(path)
-
-
-MSG_SCHEMA = (
-    "session_id string, message_id string, sequence_number int, "
-    "content string, token_count int"
-)
-
-
-def test_round_buffer_triggers(spark, tmp_path):
-    src = str(tmp_path / "msgs")
-    # batch 1: 4 small messages (no flush yet) + token-trigger message
-    _write_messages(
-        spark,
-        src,
-        [("s1", f"m{i}", i, f"msg {i}", 100) for i in range(1, 5)]
-        + [("s1", "m5", 5, "big one", 500)],
-    )
-    stream = spark.readStream.schema(MSG_SCHEMA).parquet(src)
-    flushed = sb.round_buffer_stream(stream)
-    q = (
-        flushed.writeStream.format("memory")
-        .queryName("flushes")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    got = spark.sql("select * from flushes").collect()
-    # 4*100 + 500 would exceed 800 → flush of first 4 on 'tokens'; the
-    # 500-token message stays buffered in state
-    assert len(got) == 1
-    assert got[0].trigger == "tokens"
-    assert got[0].n_messages == 4
-    assert got[0].token_count == 400
-    assert got[0].message_ids == ["m1", "m2", "m3", "m4"]
-
-    # batch 2: oversized message → buffered 500 flushes first, then the
-    # oversized one passes straight through
-    _write_messages(spark, src, [("s1", "m6", 6, "x" * 4000, 1000)])
-    q.processAllAvailable()
-    got = spark.sql("select * from flushes order by flush_seq").collect()
-    assert [r.trigger for r in got] == ["tokens", "pre_oversize", "oversize"]
-    assert got[1].message_ids == ["m5"]
-    assert got[2].message_ids == ["m6"] and got[2].token_count == 1000
-
-    # batch 3: size trigger — 5 tiny messages flush immediately
-    _write_messages(
-        spark, src, [("s2", f"n{i}", i, f"tiny {i}", 10) for i in range(1, 6)]
-    )
-    q.processAllAvailable()
-    s2 = spark.sql("select * from flushes where session_id = 's2'").collect()
-    assert len(s2) == 1 and s2[0].trigger == "size" and s2[0].n_messages == 5
-    q.stop()
-
-
-def test_round_buffer_token_trigger_with_exact_bpe_counts(spark, tmp_path):
-    """B1's token trigger fed by the EXACT token tier (VERDICT r6 #5):
-    token_count computed by the trained-BPE tokenizer column
-    (bpe.exact_token_count) instead of the len/4 heuristic — mirrors
-    the reference preferring real tokenizer counts for its buffer
-    budgets (utils/token_counter.py:26-70). The trigger operator is
-    count-source-agnostic; this drives the real streaming path with
-    exact counts end-to-end."""
-    from memfuse_spark.operators.bpe import bpe_merges, exact_token_count
-
-    # train a tiny merge table on a corpus where merges actually fire
-    corpus = spark.createDataFrame(
-        [(i, "alpha beta alpha beta gamma") for i in range(8)],
-        "doc_id bigint, text string",
-    )
-    merges = [
-        (r.rank, r.left, r.right) for r in bpe_merges(corpus, rounds=2).collect()
-    ]
-    assert merges, "training produced no merges"
-
-    # 150 repeats: 450 raw tokens -> 300 exact ('alpha beta' merges,
-    # gamma separates the merged pairs). The len/4 heuristic would read
-    # ~638 tokens (2550 chars) and flush after ONE message; the exact
-    # count flushes after TWO (300+300=600, +300 would exceed 800) —
-    # the trigger behavior observably follows the exact tier.
-    msgs = [
-        ("s1", f"m{i}", i, "alpha beta gamma " * 150) for i in range(1, 4)
-    ]
-    df = spark.createDataFrame(
-        msgs, "session_id string, message_id string, sequence_number int, content string"
-    ).withColumn(
-        "token_count", exact_token_count(F.col("content"), merges).cast("int")
-    )
-    rows = df.collect()
-    assert all(r.token_count == 300 for r in rows), rows  # exact, not len/4
-
-    src = str(tmp_path / "msgs_bpe")
-    df.coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(MSG_SCHEMA).parquet(src)
-    q = (
-        sb.round_buffer_stream(stream)
-        .writeStream.format("memory")
-        .queryName("flushes_bpe")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_bpe"))
-        .start()
-    )
-    q.processAllAvailable()
-    got = spark.sql("select * from flushes_bpe").collect()
-    q.stop()
-    assert len(got) == 1 and got[0].trigger == "tokens"
-    assert got[0].message_ids == ["m1", "m2"]
-    assert got[0].token_count == 600  # sum of EXACT counts, not len//4
 
 
 def test_ingest_stream_builds_hierarchy(spark, tmp_path):
@@ -169,37 +54,26 @@ def test_read_your_writes_buffer_wins(spark):
     assert got == {"m1": "fresh content", "m2": "stored", "m3": "unflushed"}
 
 
-def test_windowed_event_counts_stream(spark, tmp_path):
-    src = str(tmp_path / "wevents")
-    t0 = datetime.datetime(2025, 1, 1)
-    rows = [
-        (i, t0 + datetime.timedelta(minutes=i), 1, "click" if i % 2 else "view", 1.0)
-        for i in range(10)
-    ]
-    spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
-    ).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
-    ).parquet(src)
-    agg = sb.windowed_event_counts(stream, window="5 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("wincounts")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "wckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    got = spark.sql("select * from wincounts").collect()
-    q.stop()
-    assert sum(r.n_events for r in got) == 10
-    assert all(r.window.end > r.window.start for r in got)
-
-
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, props string"
 )
+
+
+def test_speculative_prefetch_ranks_by_mean_of_recent(spark):
+    """B5: the prefetch set is the corpus top-k by cosine to the mean of
+    the recent items, the recent items themselves excluded."""
+    emb = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0, 0.0]),
+            (1, [0.9, 0.1, 0.0, 0.0]),
+            (2, [0.8, 0.2, 0.0, 0.0]),
+            (3, [0.0, 0.0, 1.0, 0.0]),
+            (4, [0.0, 0.0, 0.9, 0.1]),
+        ],
+        "vec_id bigint, embedding array<double>",
+    )
+    got = [r.vec_id for r in sb.speculative_prefetch(emb, [0, 1], k=1).collect()]
+    assert got == [2]  # the orthogonal cluster (3, 4) is not prefetched
 
 
 def _events(spark, first_id: int, n: int):
@@ -344,26 +218,6 @@ def test_empty_epoch_leaves_hierarchy_store_unchanged(spark, tmp_path):
     assert [len(before[n]) for n in ("m0", "m1", "m2")] == [10, 2, 2]
 
 
-def test_conflict_ingest_stream_raises_on_unreadable_store(spark, tmp_path):
-    """A fact store that exists but cannot be read fails the epoch; it
-    is not read as an empty history (which would silently skip every
-    conflict against it)."""
-    src = str(tmp_path / "facts_src")
-    spark.createDataFrame(
-        [("c1-0", "c1", "a co_occurs_with b", ["a", "b"], 0.9)],
-        "chunk_id string, conversation_id string, fact_content string, "
-        "entities array<string>, confidence double",
-    ).coalesce(1).write.parquet(src)
-    out = tmp_path / "conflict_out"
-    (out / "facts").mkdir(parents=True)
-    (out / "facts" / "notes.txt").write_text("not a parquet file")
-
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = sb.conflict_ingest_stream(stream, str(out))
-    with pytest.raises(Exception, match="(?i)parquet"):
-        q.awaitTermination(240)
-
-
 def test_write_epoch_rejects_schema_drift(spark, tmp_path):
     """An epoch whose column names or types differ from the store's
     recorded schema is refused before anything is written; a difference
@@ -380,14 +234,35 @@ def test_write_epoch_rejects_schema_drift(spark, tmp_path):
     assert sorted(map(repr, sb.read_epochs(spark, path).collect())) == before
 
 
+def test_write_epoch_leaves_session_write_mode_alone(spark, tmp_path):
+    """write_epoch's replay-safe dynamic overwrite is a write option: the
+    session's partitionOverwriteMode is unchanged afterwards, and a
+    plain overwrite of a partitioned table still replaces every
+    partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    path = str(tmp_path / "store")
+    for epoch in (0, 1, 1):
+        sb.write_epoch(_docs(spark, 10 * epoch, 5), path, epoch)
+    assert sb.read_epochs(spark, path).count() == 10
+    assert spark.conf.get(key) == before
+
+    table = str(tmp_path / "t")
+    rows = "p int, v string"
+    spark.createDataFrame([(1, "a"), (2, "b")], rows).write.partitionBy("p").parquet(table)
+    spark.createDataFrame([(3, "c")], rows).write.mode("overwrite").partitionBy(
+        "p"
+    ).parquet(table)
+    assert [r.p for r in spark.read.parquet(table).collect()] == [3]
+
+
 def test_read_epochs_schema_is_the_inferred_schema(spark, tmp_path):
     """Every epoch store reads back through its recorded schema with
     exactly the schema parquet inference gives (names, types, order,
-    nullability): hierarchy, index and vector stores, the vector store
-    after compaction, and the sketch store. A store without a recorded
-    schema raises instead of being inferred."""
+    nullability): hierarchy, index and vector stores, and the vector
+    store after compaction. A store without a recorded schema raises
+    instead of being inferred."""
     from memfuse_spark.operators.ann import compact_bucketed_corpus
-    from memfuse_spark.streaming.windows import sketch_ingest_stream
 
     out = str(tmp_path / "stores")
     for epoch, first in ((0, 0), (1, 100)):
@@ -408,13 +283,6 @@ def test_read_epochs_schema_is_the_inferred_schema(spark, tmp_path):
     for epoch, n in ((0, 0), (1, 10)):
         sb.write_vector_epoch(_vectors(spark, 0, n), first_empty, epoch, dim=4, num_planes=3)
     assert_recorded_is_inferred(os.path.join(first_empty, "vectors"))
-
-    src = str(tmp_path / "sketch_src")
-    for first in (0, 100):
-        _docs(spark, first, 10).coalesce(1).write.mode("append").parquet(src)
-    q = sketch_ingest_stream(spark, src, spark.read.parquet(src).schema, str(tmp_path / "hh"))
-    q.awaitTermination(240)
-    assert_recorded_is_inferred(str(tmp_path / "hh" / "cms"))
 
     os.remove(os.path.join(out, "m0", sb.SCHEMA_FILE))
     with pytest.raises(FileNotFoundError):
@@ -479,98 +347,6 @@ def test_stream_reads_job_budget(spark, tmp_path):
     want = ann_lsh_topk(vecs[0].unionByName(vecs[1]), qvec, 5, num_planes=3).collect()
     assert [(r.vec_id, r.score) for r in rows] == [(r.vec_id, r.score) for r in want]
     assert rows
-
-
-def test_speculative_cache_hit_tracking(spark):
-    """B5 cache semantics: prefetched = top similar to the recent
-    context; hits/misses tracked; bounded by max_size."""
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0, 0.0]),
-            (1, [0.9, 0.1, 0.0, 0.0]),
-            (2, [0.8, 0.2, 0.0, 0.0]),
-            (3, [0.0, 0.0, 1.0, 0.0]),
-            (4, [0.0, 0.0, 0.9, 0.1]),
-        ],
-        "vec_id bigint, embedding array<double>",
-    )
-    cache = sb.SpeculativeCache(emb, max_size=1, context_window=2)
-    cache.update([0, 1])
-    # most similar to mean([e0, e1]) excluding {0, 1} is 2
-    assert cache.get(2) is not None
-    assert cache.get(3) is None  # orthogonal cluster → miss
-    stats = cache.stats()
-    assert stats["total_hits"] == 1 and stats["total_misses"] == 1
-    assert stats["cache_size"] <= 1
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """Duplicate event ids delivered again within the watermark are
-    dropped; state is watermark-bounded (at-least-once source twin of
-    exact_dedup)."""
-    import datetime as dt
-
-    src = str(tmp_path / "dup_events")
-    t0 = dt.datetime(2025, 1, 1)
-    rows = [(i, t0 + dt.timedelta(seconds=i), f"payload {i}") for i in range(5)]
-    dupes = [(1, t0 + dt.timedelta(seconds=61), "payload 1 redelivered"),
-             (3, t0 + dt.timedelta(seconds=63), "payload 3 redelivered")]
-    spark.createDataFrame(
-        rows + dupes, "event_id bigint, ts timestamp, props string"
-    ).coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema(
-        "event_id bigint, ts timestamp, props string"
-    ).parquet(src)
-    deduped = sb.stream_dedup(stream, ["event_id"], watermark="5 minutes")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    got = spark.sql("select event_id from dedup_sink").collect()
-    q.stop()
-    ids = sorted(r.event_id for r in got)
-    assert ids == [0, 1, 2, 3, 4]  # each id exactly once
-
-
-def test_dedup_ingest_stream_matches_batch_pipeline(spark, tmp_path):
-    """Streaming incremental near-dup over two micro-batches produces
-    exactly the full-pipeline pair set: within-epoch0 pairs + epoch1-
-    touching pairs partition the pair space."""
-    from memfuse_spark.catalog import load_table
-    from memfuse_spark.operators.dedup import minhash_lsh_pairs
-    from tests.conftest import SF_DIR_MED
-
-    docs = load_table(spark, SF_DIR_MED, "documents").select("doc_id", "text")
-    src = str(tmp_path / "docs_src")
-    docs.filter("doc_id < 250").coalesce(1).write.mode("append").parquet(src)
-    docs.filter("doc_id >= 250").coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "dedup_out")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = sb.dedup_ingest_stream(stream, out)
-    q.awaitTermination(240)
-
-    got_pairs = spark.read.parquet(os.path.join(out, "pairs"))
-    got = {(r.doc_a, r.doc_b, r.jaccard) for r in got_pairs.collect()}
-    want = {
-        (r.doc_a, r.doc_b, r.jaccard) for r in minhash_lsh_pairs(docs).collect()
-    }
-    assert got == want
-    assert want  # fixture yields near-dup pairs
-    # each pair reported exactly once (epochs partition the pair space)
-    assert got_pairs.count() == got_pairs.select("doc_a", "doc_b").distinct().count()
-    # the index absorbed both batches
-    idx = spark.read.parquet(os.path.join(out, "index"))
-    assert idx.select("doc_id").distinct().count() == docs.count()
 
 
 def test_complete_workflow_ingest_to_hybrid_query(spark, tmp_path):

@@ -47,9 +47,10 @@ def test_gold_layout_prunes_and_joins_without_shuffle(spark, tmp_path):
     )
     assert joined.count() == flat_count
 
-    # 4. bucket pruning on a key-equality scan (autoBucketedScan would
-    # rewrite a join-free bucketed scan back to a plain one and skip the
-    # pruning rule — pin it off for the assertion)
+    # 4. bucket pruning on a key-equality scan. autoBucketedScan plans a
+    # join-free bucketed scan as a plain one, which still reads only the
+    # selected buckets' files but prints no SelectedBucketsCount — pin
+    # it off so the plan string shows the pruning
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try:
         one = spark.table(names["documents_gold"]).filter(F.col("doc_id") == 7)

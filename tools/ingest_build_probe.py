@@ -88,7 +88,7 @@ def main() -> int:
                 )
                 secs.append(round(time.time() - t0, 2))
         elif component == "dedup":
-            # the dedup_ingest_stream foreachBatch body, epoch by epoch:
+            # incremental near-dup over an epoch store, epoch by epoch:
             # batch signed/banded, candidates = batch×index equi-join +
             # within-batch, index absorbed after each epoch
             from memfuse_spark.catalog import load_table
