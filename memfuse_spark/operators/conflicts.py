@@ -113,14 +113,8 @@ def fact_conflicts(
     old_side = f2.filter(F.col("batch_id") < F.col("__max_batch")).drop(
         "__max_batch"
     )
-    return fact_conflicts_between(
-        old_side,
-        new_side,
-        auto_resolve_threshold=auto_resolve_threshold,
-        escalation_threshold=escalation_threshold,
-        detector=detector,
-        require_batch_order=True,
-        _parsed=True,
+    return _fact_conflicts_between(
+        old_side, new_side, auto_resolve_threshold, escalation_threshold, detector
     )
 
 
@@ -147,42 +141,25 @@ def fact_conflicts_cumulative(
     in the corpus.
     """
     f = _with_fact_parts(m2)
-    return fact_conflicts_between(
-        f,
-        f,
-        auto_resolve_threshold=auto_resolve_threshold,
-        escalation_threshold=escalation_threshold,
-        detector=detector,
-        require_batch_order=True,
-        _parsed=True,
+    return _fact_conflicts_between(
+        f, f, auto_resolve_threshold, escalation_threshold, detector
     )
 
 
-def fact_conflicts_between(
+def _fact_conflicts_between(
     existing: DataFrame,
     new: DataFrame,
-    auto_resolve_threshold: float = AUTO_RESOLVE_THRESHOLD,
-    escalation_threshold: float = ESCALATION_THRESHOLD,
-    detector=None,
-    require_batch_order: bool = False,
-    _parsed: bool = False,
+    auto_resolve_threshold: float,
+    escalation_threshold: float,
+    detector,
 ) -> DataFrame:
     """Two-sided conflict kernel: detect conflicts of ``new`` facts
-    against ``existing`` facts (both the stored M2 shape). With
-    ``require_batch_order`` only pairs whose existing fact has the
-    earlier batch_id count; without it the sides' split alone is the
-    temporal order."""
-    if not _parsed:
-        existing = _with_fact_parts(existing)
-        new = _with_fact_parts(new)
+    against ``existing`` facts (both :func:`_with_fact_parts` rows);
+    only pairs whose existing fact has the earlier batch_id count."""
     cols = existing.columns
     e = existing.select([F.col(c).alias(f"e_{c}") for c in cols])
     n = new.select([F.col(c).alias(f"n_{c}") for c in cols])
-    later = (
-        (F.col("e_batch_id") < F.col("n_batch_id"))
-        if require_batch_order
-        else F.lit(True)
-    )
+    later = F.col("e_batch_id") < F.col("n_batch_id")
 
     # same-subject candidates (the reference blocks on the new fact's
     # entity overlap before prompting); duplicates excluded by rule

@@ -158,6 +158,14 @@ def m2_facts_from_m1(
     a co-occurrence fact; confidence grows with their combined share of
     the chunk; facts below the 0.7 threshold are dropped (:543-557).
 
+    The rule path is a row map over ``m1`` (no shuffle of its own, so
+    it reuses M1's one exchange): per chunk, the stopword-filtered
+    tokens' distinct values ranked by (tf desc, tok asc), the top two
+    kept, ``n_tok`` the count of filtered tokens. Precondition:
+    ``chunk_id`` is unique per input row, which every caller meets by
+    passing one :func:`m1_from_m0` result (rows sharing a chunk_id
+    would yield one fact each instead of one merged fact).
+
     ``extractor=`` is the LLM-mode plug point (reference PRIMARY path,
     fact_extraction_processor.py:107-230), mirroring
     ``rerank.rerank(scorer=)``: a callable
@@ -212,32 +220,37 @@ def m2_facts_from_m1(
         )
         return facts.filter(F.col("confidence") >= confidence_threshold)
     toks = m1.select(
-        "chunk_id", "conversation_id", F.explode(tokenize("content")).alias("tok")
-    ).filter(~F.col("tok").isin(*STOPWORDS))
-    tf = toks.groupBy("chunk_id", "conversation_id", "tok").agg(F.count("*").alias("tf"))
-    w = Window.partitionBy("chunk_id").orderBy(F.desc("tf"), F.asc("tok"))
-    top2 = tf.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 2)
-    n_tok = toks.groupBy("chunk_id").agg(F.count("*").alias("n_tok"))
-    facts = (
-        top2.groupBy("chunk_id", "conversation_id")
-        .agg(
-            F.max(F.when(F.col("rnk") == 1, F.col("tok"))).alias("entity_a"),
-            F.max(F.when(F.col("rnk") == 2, F.col("tok"))).alias("entity_b"),
-            F.sum("tf").alias("top_tf"),
-        )
-        .join(n_tok, "chunk_id")
-        .filter(F.col("entity_b").isNotNull())
-        .select(
-            "chunk_id",
-            "conversation_id",
-            F.concat_ws(" ", "entity_a", F.lit("co_occurs_with"), "entity_b").alias(
-                "fact_content"
+        "chunk_id",
+        "conversation_id",
+        F.filter(tokenize("content"), lambda t: ~t.isin(*STOPWORDS)).alias("__toks"),
+    )
+    # one (-tf, tok) struct per distinct token: ascending struct order is
+    # tf desc, tok asc, so the first two are the chunk's top pair
+    ranked = F.array_sort(
+        F.transform(
+            F.array_distinct("__toks"),
+            lambda t: F.struct(
+                (-F.size(F.filter("__toks", lambda x: x == t))).alias("neg_tf"),
+                t.alias("tok"),
             ),
-            F.array("entity_a", "entity_b").alias("entities"),
-            F.round(
-                F.least(F.lit(0.5) + F.col("top_tf") / F.col("n_tok"), F.lit(1.0)), 6
-            ).alias("confidence"),
         )
+    )
+    top2 = toks.select(
+        "chunk_id",
+        "conversation_id",
+        F.slice(ranked, 1, 2).alias("__top"),
+        F.size("__toks").alias("n_tok"),
+    ).filter(F.size("__top") == 2)
+    entity_a, entity_b = F.col("__top")[0]["tok"], F.col("__top")[1]["tok"]
+    top_tf = -(F.col("__top")[0]["neg_tf"] + F.col("__top")[1]["neg_tf"])
+    facts = top2.select(
+        "chunk_id",
+        "conversation_id",
+        F.concat_ws(" ", entity_a, F.lit("co_occurs_with"), entity_b).alias("fact_content"),
+        F.array(entity_a, entity_b).alias("entities"),
+        F.round(F.least(F.lit(0.5) + top_tf / F.col("n_tok"), F.lit(1.0)), 6).alias(
+            "confidence"
+        ),
     )
     return facts.filter(F.col("confidence") >= confidence_threshold)
 

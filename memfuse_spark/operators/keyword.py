@@ -22,9 +22,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from memfuse_spark.functions.lits import values_df
 from memfuse_spark.functions.text import tokenize
 
 BM25_K1 = 1.5
@@ -989,6 +990,11 @@ LIMIT {k}
 """
 
 
+def _sql_schema(df: DataFrame) -> list[tuple[str, str]]:
+    """``df``'s columns as ``(name, sql type)`` pairs for ``values_df``."""
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
 def rm3_topk_from_index(
     spark,
     index_name: str,
@@ -1012,23 +1018,27 @@ def rm3_topk_from_index(
     an id-pruned scan of the raw table re-tokenizes JUST those rows
     (identical tf/dl to the index by construction — same tokenizer);
     without it, the term-keyed index is scanned once. Two tiny mid-query
-    actions (feedback rows, weight rows) keep every downstream subplan
-    static — driver-safe at any corpus size. Same math and rounding
-    boundaries as the ad-hoc path.
+    actions (the feedback rows with their score total, the expansion
+    terms with their weight sum; both sums run in Spark) keep every
+    downstream subplan static — driver-safe at any corpus size. Their
+    rows come back as ``values_df`` literal relations, which broadcast
+    without a job. Same math and rounding boundaries as the ad-hoc path.
     """
     q_terms = sorted({t for t in _py_tokenize(query)})
     lam = orig_weight
     qw = 1.0 / len(q_terms)
     postings = spark.table(index_name)  # (term, doc_id, tf, dl, df)
     stats = _stats_literals(spark, index_name)
+    whole = Window.partitionBy()  # over a top-n result: one partition, in rank order
     matched1 = postings.filter(F.col("term").isin(q_terms))
     pass1 = _bm25_score(matched1, fb_docs, k1, b, score_decimals, stats)
-    # materialize the <= fb_docs feedback rows ONCE — pass1 feeds three
-    # downstream subplans (doc join, score total, and transitively the
-    # weight table) and would otherwise re-run its pruned scan per use
+    # materialize the <= fb_docs feedback rows and their score total ONCE
+    # and pass them back as a literal relation (no Python-RDD scan):
+    # pass1 feeds the relevance model and would otherwise re-run its
+    # pruned scan per use
+    pass1 = pass1.withColumn("total", F.sum("score").over(whole))
     pass1_rows = pass1.collect()
-    pass1 = spark.createDataFrame(pass1_rows, schema=pass1.schema)
-    total = pass1.agg(F.sum("score").alias("total"))
+    pass1 = values_df(spark, pass1_rows, _sql_schema(pass1))
     if docs is not None:
         fb_ids = [r["doc_id"] for r in pass1_rows]
         fb_postings = build_postings(
@@ -1038,7 +1048,6 @@ def rm3_topk_from_index(
         fb_postings = postings
     rm1 = (
         fb_postings.join(F.broadcast(pass1), "doc_id")
-        .crossJoin(F.broadcast(total))
         .groupBy("term")
         .agg(
             F.round(
@@ -1051,25 +1060,30 @@ def rm3_topk_from_index(
         )
     )
     top_terms = rm1.orderBy(F.desc("w"), F.asc("term")).limit(fb_terms)
-    fb_sum = top_terms.agg(F.sum("w").alias("s"))
-    qdf = spark.createDataFrame([(t,) for t in q_terms], "term string")
-    weights = (
-        qdf.withColumn("qw", F.lit(qw))
-        .join(top_terms, "term", "full_outer")
-        .crossJoin(F.broadcast(fb_sum))
-        .select(
-            "term",
-            F.round(
-                lam * F.coalesce(F.col("qw"), F.lit(0.0))
-                + (1.0 - lam)
-                * F.coalesce(F.col("w") / F.col("s"), F.lit(0.0)),
-                9,
-            ).alias("wt"),
-        )
+    top_rows = top_terms.withColumn("s", F.sum("w").over(whole)).collect()
+    # the full outer join of query and expansion terms, as literal rows
+    fb = {r["term"]: r for r in top_rows}
+    terms2 = sorted(set(q_terms) | set(fb))
+    wdf = values_df(
+        spark,
+        [
+            (
+                t,
+                qw if t in q_terms else None,
+                fb[t]["w"] if t in fb else None,
+                top_rows[0]["s"] if top_rows else None,
+            )
+            for t in terms2
+        ],
+        [("term", "string"), ("qw", "double"), ("w", "double"), ("s", "double")],
+    ).select(
+        "term",
+        F.round(
+            lam * F.coalesce(F.col("qw"), F.lit(0.0))
+            + (1.0 - lam) * F.coalesce(F.col("w") / F.col("s"), F.lit(0.0)),
+            9,
+        ).alias("wt"),
     )
-    wrows = weights.collect()  # <= |Q| + fb_terms rows
-    wdf = spark.createDataFrame(wrows, schema=weights.schema)
-    terms2 = sorted(r["term"] for r in wrows)
     matched2 = postings.filter(F.col("term").isin(terms2)).join(
         F.broadcast(wdf), "term"
     )

@@ -58,7 +58,6 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from typing import TypeVar
 
-from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,6 +72,7 @@ from memfuse_spark.operators.fusion import (
 from memfuse_spark.operators.fusion import rrf_fusion, tag_store, union_results  # noqa: F401
 from memfuse_spark.operators.keyword import bm25_topk, bm25_topk_from_index
 from memfuse_spark.operators.similarity import similarity_topk
+from memfuse_spark.threads import run_beside
 
 
 T = TypeVar("T")
@@ -89,32 +89,17 @@ def _keyword_plan(
 
 def _collect_beside(side: DataFrame, main: Callable[[], T]) -> tuple[list, T]:
     """``(side.collect(), main())`` with the collect on an
-    InheritableThread while the caller runs ``main``.
+    InheritableThread while the caller runs ``main``
+    (:func:`~memfuse_spark.threads.run_beside`: ``side`` and every plan
+    ``main`` builds are built on the caller's thread, the thread's jobs
+    count under the caller's job group, and it is joined before this
+    returns or raises; ``main``'s error wins, else the thread's)."""
 
-    The thread only collects: ``side`` is built on the caller's thread,
-    as is every plan ``main`` builds, so the driver-side construction a
-    tracer wraps stays on one thread. The thread starts with the
-    caller's local properties (job group, description), so its jobs
-    count under the caller's group. It is joined before this returns or
-    raises, so no job of the recall outlives it; ``main``'s error wins,
-    else the thread's error is raised here."""
-    out: dict[str, object] = {}
+    def collect() -> list:  # this module's frame in a failed collect's traceback
+        return side.collect()
 
-    def collect() -> None:
-        try:
-            out["rows"] = side.collect()
-        except BaseException as exc:  # re-raised on the caller's thread
-            out["error"] = exc
-
-    worker = InheritableThread(target=collect, session=side.sparkSession)
-    worker.start()
-    try:
-        result = main()
-    finally:
-        worker.join()
-    if "error" in out:
-        raise out["error"]
-    return out["rows"], result
+    result, rows = run_beside(side.sparkSession, main, collect)
+    return rows, result
 
 
 def _graph_branch(layers, fsk: int) -> list:

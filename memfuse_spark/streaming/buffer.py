@@ -17,7 +17,12 @@ Spark-first mapping, one code path per op:
   as one epoch of every store it feeds (:func:`write_epoch`, replay-safe);
   Spark's own micro-batch machinery replaces the worker pool. The three
   streams are :func:`ingest_stream` (M0/M1/M2), :func:`index_ingest_stream`
-  and :func:`vector_ingest_stream`.
+  and :func:`vector_ingest_stream`. A writer that feeds several stores
+  (:func:`write_hierarchy_epoch`, :func:`write_index_epoch`) builds every
+  store's plan and checks its schema on the caller's thread, then runs
+  the writes side by side on driver threads (:func:`_write_epochs`, the
+  reference's parallel layer fan-out, hierarchy/parallel_manager.py:
+  93-360), all joined before it returns or raises.
 - B4 read-your-writes → union of the un-flushed table with the
   persisted table, buffer rows winning on id collision.
 - B5 SpeculativeBuffer → :func:`speculative_prefetch`.
@@ -29,10 +34,13 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from memfuse_spark.threads import run_beside
 
 SCHEMA_FILE = "_schema.json"  # an epoch store's recorded read schema
 BASE_FILE = "_base_epochs.json"  # the epoch ids compaction folded into the base
@@ -44,10 +52,11 @@ def write_epoch(df: DataFrame, path: str, epoch_id: int, *partition_cols: str) -
     ``epoch_id`` partition (``partition_cols`` nest below it), written
     with dynamic partition overwrite as a write option, so replaying an
     epoch REPLACES its own partitions instead of double-appending. Every
-    epoch store in the engine is written through here. An epoch that
-    :func:`compact_epochs` already folded into the store's base (listed
-    in its hidden ``_base_epochs.json``) is skipped, so replaying it
-    after a compaction is a no-op too.
+    epoch store in the engine is written through here (or through
+    :func:`_write_epochs`, which runs several side by side). An epoch
+    that :func:`compact_epochs` already folded into the store's base
+    (listed in its hidden ``_base_epochs.json``) is skipped, so
+    replaying it after a compaction is a no-op too.
 
     After the data commit the store's read schema is recorded in the
     hidden ``_schema.json`` at the store root (Spark, pyarrow and DuckDB
@@ -61,8 +70,17 @@ def write_epoch(df: DataFrame, path: str, epoch_id: int, *partition_cols: str) -
     it, so a query starts no schema-inference job. An epoch whose column
     names or types differ from the recorded schema (nullability aside)
     raises ``ValueError`` before anything is written."""
+    _epoch_write(df, path, epoch_id, *partition_cols)()
+
+
+def _epoch_write(
+    df: DataFrame, path: str, epoch_id: int, *partition_cols: str
+) -> Callable[[], None]:
+    """:func:`write_epoch` in two steps: the skip and schema checks run
+    here, on the caller's thread (a drift raises ``ValueError`` now);
+    the returned call writes the epoch and records the schema."""
     if epoch_id in _base_epochs(path):
-        return
+        return lambda: None
     out = df.withColumn("epoch_id", F.lit(epoch_id))
     parts = ["epoch_id", *partition_cols]
     data = StructType([f for f in out.schema.fields if f.name not in parts])
@@ -77,19 +95,34 @@ def write_epoch(df: DataFrame, path: str, epoch_id: int, *partition_cols: str) -
                 f"epoch {epoch_id} of {path}: columns {data.simpleString()} + {parts}"
                 f" differ from the recorded {recorded.simpleString()}"
             )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*parts)
-        .parquet(path)
-    )
-    # the data schema is given, so only the partition directories are
-    # listed (driver-side, no job); a store without rows yet has none
-    schema = df.sparkSession.read.schema(data).parquet(path).schema
-    for c in parts:
-        if c not in schema.names:
-            schema.add(c, out.schema[c].dataType)
-    _write_atomic(os.path.join(path, SCHEMA_FILE), schema.json())
+
+    def write() -> None:
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*parts)
+            .parquet(path)
+        )
+        # the data schema is given, so only the partition directories are
+        # listed (driver-side, no job); a store without rows yet has none
+        schema = df.sparkSession.read.schema(data).parquet(path).schema
+        for c in parts:
+            if c not in schema.names:
+                schema.add(c, out.schema[c].dataType)
+        _write_atomic(os.path.join(path, SCHEMA_FILE), schema.json())
+
+    return write
+
+
+def _write_epochs(epoch_id: int, stores: dict[str, DataFrame]) -> None:
+    """One epoch of each ``{path: df}`` store, side by side: every
+    store's plan is already built and its schema is checked here, on
+    the caller's thread, so a drift in any store raises before any
+    store of the epoch is written. The writes then run on driver
+    threads (:func:`~memfuse_spark.threads.run_beside`), all joined
+    before this returns or raises."""
+    writes = [_epoch_write(df, path, epoch_id) for path, df in stores.items()]
+    run_beside(next(iter(stores.values())).sparkSession, *writes)
 
 
 def _write_atomic(path: str, text: str) -> None:
@@ -188,22 +221,33 @@ def _epoch_stream(stream: DataFrame, out_base: str, process_batch) -> "Streaming
 
 def write_hierarchy_epoch(batch: DataFrame, epoch_id: int, out_base: str) -> None:
     """Write one micro-batch's M0/M1/M2 fan-out, each layer one epoch
-    of its store (:func:`write_epoch`: replay-safe)."""
+    of its store (:func:`write_epoch`: replay-safe). Each layer's plan
+    is derived once, on the caller's thread: M1 groups M0's rows within
+    M0's per-conversation exchange and M2 is a row map over M1's chunks,
+    so each store's write shuffles the batch once (2 jobs, 6 for the
+    epoch). Every schema is checked before any store is written, and
+    the three writes then run side by side (:func:`_write_epochs`)."""
     from memfuse_spark.operators import hierarchy as h
 
     m0 = h.m0_from_events(batch)
-    write_epoch(m0, os.path.join(out_base, "m0"), epoch_id)
     m1 = h.m1_from_m0(m0)
-    write_epoch(m1, os.path.join(out_base, "m1"), epoch_id)
     m2 = h.m2_facts_from_m1(m1)
-    write_epoch(m2, os.path.join(out_base, "m2"), epoch_id)
+    _write_epochs(
+        epoch_id,
+        {
+            os.path.join(out_base, "m0"): m0,
+            os.path.join(out_base, "m1"): m1,
+            os.path.join(out_base, "m2"): m2,
+        },
+    )
 
 
 def ingest_stream(events_stream: DataFrame, out_base: str) -> "StreamingQuery":
     """B2/B9 micro-batch ingest: each batch writes M0, M1 chunks and M2
     facts in one exactly-once ``foreachBatch`` (the reference's parallel
-    layer fan-out, hierarchy/parallel_manager.py:93-360 — Spark writes
-    the three tables from one batch closure).
+    layer fan-out, hierarchy/parallel_manager.py:93-360 — the three
+    tables are written side by side from one batch closure,
+    :func:`write_hierarchy_epoch`).
 
     Exactly-once: output is PARTITIONED BY epoch_id and written with
     dynamic partition overwrite, so a retried epoch (checkpoint replay
@@ -354,7 +398,9 @@ def write_index_epoch(
 ) -> None:
     """One epoch's index partials (shared by the stream above and the
     batch builds): postings + df partial + stats partial, each under an
-    epoch_id partition with dynamic overwrite (replay-safe)."""
+    epoch_id partition with dynamic overwrite (replay-safe). The three
+    plans are built and their schemas checked on the caller's thread,
+    then written side by side (:func:`_write_epochs`)."""
     from memfuse_spark.operators.keyword import (
         build_postings,
         corpus_stats,
@@ -362,12 +408,14 @@ def write_index_epoch(
     )
 
     postings = build_postings(batch, id_col, text_col)
-    for name, df in (
-        ("postings", postings),
-        ("dfparts", document_frequency(postings)),
-        ("statsparts", corpus_stats(postings)),
-    ):
-        write_epoch(df, os.path.join(out_base, name), epoch_id)
+    _write_epochs(
+        epoch_id,
+        {
+            os.path.join(out_base, "postings"): postings,
+            os.path.join(out_base, "dfparts"): document_frequency(postings),
+            os.path.join(out_base, "statsparts"): corpus_stats(postings),
+        },
+    )
 
 
 def write_vector_epoch(

@@ -48,6 +48,10 @@ def test_m1_batches_and_lineage(events):
 def test_m2_facts_confidence_filter(events):
     m1 = h.m1_from_m0(h.m0_from_events(events), batch_size=5)
     facts = h.m2_facts_from_m1(m1, confidence_threshold=0.0).collect()
+    # the row map equals the keyed-aggregation reference fact for fact
+    assert _facts(h.m2_facts_from_m1(m1, confidence_threshold=0.0)) == _facts(
+        _m2_by_shuffle(m1, confidence_threshold=0.0)
+    )
     assert all(f.fact_content.split(" ")[1] == "co_occurs_with" for f in facts)
     assert all(0.0 <= f.confidence <= 1.0 for f in facts)
     assert all(len(f.entities) == 2 for f in facts)
@@ -127,3 +131,93 @@ def test_m1_former_seam_injects_llm_mode(events):
         assert r.m0_raw_ids == rule_rows[cid].m0_raw_ids
         assert r.token_count == -(-len(r.content) // 4)
         assert r.embedding != rule_rows[cid].embedding
+
+
+def _m2_by_shuffle(m1, confidence_threshold=h.CONFIDENCE_THRESHOLD):
+    """The rule-based M2 as a keyed aggregation: explode the tokens,
+    count (chunk, token), rank by a window over chunk_id, join the
+    per-chunk token count. ``m2_facts_from_m1`` computes the same facts
+    as a row map; this is the reference it is checked against."""
+    from pyspark.sql import Window
+
+    from memfuse_spark.functions.text import tokenize
+    from memfuse_spark.operators.textanalysis import STOPWORDS
+
+    toks = m1.select(
+        "chunk_id", "conversation_id", F.explode(tokenize("content")).alias("tok")
+    ).filter(~F.col("tok").isin(*STOPWORDS))
+    tf = toks.groupBy("chunk_id", "conversation_id", "tok").agg(F.count("*").alias("tf"))
+    w = Window.partitionBy("chunk_id").orderBy(F.desc("tf"), F.asc("tok"))
+    top2 = tf.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 2)
+    n_tok = toks.groupBy("chunk_id").agg(F.count("*").alias("n_tok"))
+    facts = (
+        top2.groupBy("chunk_id", "conversation_id")
+        .agg(
+            F.max(F.when(F.col("rnk") == 1, F.col("tok"))).alias("entity_a"),
+            F.max(F.when(F.col("rnk") == 2, F.col("tok"))).alias("entity_b"),
+            F.sum("tf").alias("top_tf"),
+        )
+        .join(n_tok, "chunk_id")
+        .filter(F.col("entity_b").isNotNull())
+        .select(
+            "chunk_id",
+            "conversation_id",
+            F.concat_ws(" ", "entity_a", F.lit("co_occurs_with"), "entity_b").alias(
+                "fact_content"
+            ),
+            F.array("entity_a", "entity_b").alias("entities"),
+            F.round(
+                F.least(F.lit(0.5) + F.col("top_tf") / F.col("n_tok"), F.lit(1.0)), 6
+            ).alias("confidence"),
+        )
+    )
+    return facts.filter(F.col("confidence") >= confidence_threshold)
+
+
+def _facts(df):
+    return sorted(
+        (r.chunk_id, r.conversation_id, r.fact_content, list(r.entities), r.confidence)
+        for r in df.collect()
+    )
+
+
+M2_EDGE_CHUNKS = [
+    # tf ties at the top (alpha, beta, zeta all 2): token asc breaks them
+    ("tie", "zeta beta alpha beta alpha zeta gamma"),
+    # a tie for rank 2 only (c, d, e all 1 behind b's 3)
+    ("tie2", "e d b c b b"),
+    # one distinct non-stopword token: no second entity, no fact
+    ("single", "apple the apple a apple"),
+    # every token a stopword: nothing to rank
+    ("stop", "the a and of to in is it"),
+    ("empty", ""),
+    ("null", None),
+    # top_tf / n_tok = 2 / 10: confidence exactly 0.7 is kept ...
+    ("at", " ".join(f"w{i}" for i in range(10))),
+    # ... and 2 / 11 (0.681818) is dropped
+    ("below", " ".join(f"w{i:02d}" for i in range(11))),
+]
+
+
+def test_m2_rule_edge_cases_match_shuffle_reference(spark):
+    """The row-map rule path equals the keyed-aggregation reference on
+    tf ties (token asc breaks them), a chunk with one distinct
+    non-stopword token, an all-stopword, empty or null chunk, and a
+    confidence of exactly the 0.7 threshold (kept) or just below it."""
+    m1 = spark.createDataFrame(
+        [(cid, 7, text) for cid, text in M2_EDGE_CHUNKS],
+        "chunk_id string, conversation_id long, content string",
+    )
+    got = _facts(h.m2_facts_from_m1(m1))
+    assert got == _facts(_m2_by_shuffle(m1))
+    assert got == [
+        ("at", 7, "w0 co_occurs_with w1", ["w0", "w1"], 0.7),
+        ("tie", 7, "alpha co_occurs_with beta", ["alpha", "beta"], 1.0),
+        ("tie2", 7, "b co_occurs_with c", ["b", "c"], 1.0),
+    ]
+    # every chunk with two distinct tokens has a fact at threshold 0
+    unfiltered = _facts(h.m2_facts_from_m1(m1, confidence_threshold=0.0))
+    assert unfiltered == _facts(_m2_by_shuffle(m1, confidence_threshold=0.0))
+    assert [f[0] for f in unfiltered] == ["at", "below", "tie", "tie2"]
+    assert unfiltered[1][4] == 0.681818
+

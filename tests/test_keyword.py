@@ -362,6 +362,54 @@ def test_rm3_index_path_matches_adhoc(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {name}_stats")
 
 
+def test_rm3_index_path_job_budget(spark, tmp_path):
+    """The indexed RM3 collects its feedback rows (with their score
+    total) and its expansion terms (with their weight sum) in Spark and
+    passes them back as literal relations: one query runs at most 7
+    jobs (9 with ``docs``), its plan scans no Python RDD, and its rows
+    equal the ad-hoc RM3's, also for a query with no vocabulary term."""
+    import random
+
+    from memfuse_spark.operators.keyword import (
+        build_postings_index,
+        rm3_topk,
+        rm3_topk_from_index,
+    )
+
+    rng = random.Random(3)
+    vocab = [f"w{i}" for i in range(30)]
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(10, 40)))) for i in range(120)],
+        "doc_id bigint, text string",
+    )
+    name = "rm3_budget_idx"
+    build_postings_index(spark, docs, name, path=str(tmp_path), num_buckets=16)
+    sc = spark.sparkContext
+    try:
+        cases = (
+            ("w3 w7 w11", False, 7),
+            ("w3 w7 w11", True, 9),
+            ("zebra w5", False, 7),
+            ("zebra", False, 7),
+        )
+        for i, (query, with_docs, budget) in enumerate(cases):
+            group = f"rm3-budget-{i}"
+            sc.setJobGroup(group, group)
+            try:
+                df = rm3_topk_from_index(spark, name, query, 10, docs=docs if with_docs else None)
+                rows = [(r.doc_id, r.score) for r in df.collect()]
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= budget, query
+            assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+            assert rows == [(r.doc_id, r.score) for r in rm3_topk(docs, query, 10).collect()]
+            assert bool(rows) == (query != "zebra")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(f"DROP TABLE IF EXISTS {name}_stats")
+
+
 def _merged_index(spark, out_base):
     """The incremental index at ``out_base`` as a reader sees it, one
     entry per merged partial: postings rows, df summed per term, and

@@ -234,6 +234,141 @@ def test_write_epoch_rejects_schema_drift(spark, tmp_path):
     assert sorted(map(repr, sb.read_epochs(spark, path).collect())) == before
 
 
+def _sequential_epoch(writer, batch, epoch_id, out):
+    """``writer``'s epoch derived and written store by store, each by
+    its own :func:`write_epoch` call, one after another."""
+    from memfuse_spark.operators import hierarchy as h
+    from memfuse_spark.operators.keyword import (
+        build_postings,
+        corpus_stats,
+        document_frequency,
+    )
+
+    if writer == "write_hierarchy_epoch":
+        m0 = h.m0_from_events(batch)
+        m1 = h.m1_from_m0(m0)
+        stores = {"m0": m0, "m1": m1, "m2": h.m2_facts_from_m1(m1)}
+    else:
+        postings = build_postings(batch, "doc_id", "text")
+        stores = {
+            "postings": postings,
+            "dfparts": document_frequency(postings),
+            "statsparts": corpus_stats(postings),
+        }
+    for name, df in stores.items():
+        sb.write_epoch(df, os.path.join(out, name), epoch_id)
+
+
+@pytest.mark.parametrize("writer", ["write_hierarchy_epoch", "write_index_epoch"])
+def test_side_by_side_writer_equals_sequential_stores(spark, tmp_path, writer):
+    """The writer's stores, written side by side, equal row for row
+    (epoch ids included) and in recorded schema those of the same
+    epochs written store by store with sequential write_epoch calls."""
+    write, make_batch, names = EPOCH_WRITERS[writer]
+    new, seq = str(tmp_path / "side_by_side"), str(tmp_path / "sequential")
+    for epoch, (first, n) in enumerate(((0, 23), (100, 9))):
+        batch = make_batch(spark, first, n)
+        write(batch, epoch, new)
+        _sequential_epoch(writer, batch, epoch, seq)
+    got = _store_rows(spark, new, names)
+    assert all(got.values())
+    assert got == _store_rows(spark, seq, names)
+    for name in names:
+        assert sb.read_epochs(spark, os.path.join(new, name)).schema == sb.read_epochs(
+            spark, os.path.join(seq, name)
+        ).schema
+
+
+def _in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_hierarchy_epoch_job_budget(spark, tmp_path):
+    """A hierarchy epoch runs at most 6 Spark jobs (one exchange and one
+    write per store; M2 adds no shuffle of its own), every one of them
+    under the caller's job group, the writer threads' jobs included."""
+    sc = spark.sparkContext
+    out = str(tmp_path / "budget")
+    for epoch, first in ((0, 0), (1, 100)):
+        group = f"hierarchy-epoch-budget-{epoch}"
+        batch = _events(spark, first, 40)
+        _in_group(spark, group, lambda: sb.write_hierarchy_epoch(batch, epoch, out))
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 3 <= len(jobs) <= 6, jobs
+    assert [len(v) for v in _store_rows(spark, out, ("m0", "m1", "m2")).values()] == [80, 16, 16]
+
+
+def test_store_write_error_raises_after_every_thread_joined(spark, tmp_path, monkeypatch):
+    """When one store's write fails (m1, on a writer thread), the
+    writer raises that error only after the other stores' writes have
+    finished, and no thread or job of the epoch is left running."""
+    import threading
+    import time
+
+    from pyspark import InheritableThread
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    parquet = DataFrameWriter.parquet
+
+    def failing_m1(self, path, *args, **kwargs):
+        if os.path.basename(path) == "m1":
+            raise RuntimeError("m1 store write failed")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_m1)
+    sc = spark.sparkContext
+    out = str(tmp_path / "failing")
+    group = "hierarchy-epoch-failing"
+    with pytest.raises(RuntimeError, match="m1 store write failed"):
+        _in_group(spark, group, lambda: sb.write_hierarchy_epoch(_events(spark, 0, 20), 0, out))
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert not [t for t in threading.enumerate() if isinstance(t, InheritableThread)]
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    for name in ("m0", "m2"):  # both finished before the error surfaced
+        assert os.path.exists(os.path.join(out, name, sb.SCHEMA_FILE)), name
+    assert not os.path.exists(os.path.join(out, "m1"))
+    time.sleep(0.5)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
+@pytest.mark.parametrize(
+    "writer, store",
+    [
+        (w, name)
+        for w in ("write_hierarchy_epoch", "write_index_epoch")
+        for name in EPOCH_WRITERS[w][2]
+    ],
+)
+def test_schema_drift_in_one_store_writes_no_store(spark, tmp_path, writer, store):
+    """A schema drift in any single store of a multi-store epoch raises
+    ValueError before any store of that epoch is written."""
+    import json
+
+    write, make_batch, names = EPOCH_WRITERS[writer]
+    out = str(tmp_path / "drift")
+    write(make_batch(spark, 0, 10), 0, out)
+    path = os.path.join(out, store, sb.SCHEMA_FILE)
+    with open(path) as fh:
+        recorded = json.load(fh)
+    recorded["fields"][0]["name"] = "drifted_" + recorded["fields"][0]["name"]
+    with open(path, "w") as fh:
+        json.dump(recorded, fh)
+
+    def listing():
+        return {n: sorted(os.listdir(os.path.join(out, n))) for n in names}
+
+    before = listing()
+    with pytest.raises(ValueError, match="drifted_"):
+        write(make_batch(spark, 100, 5), 1, out)
+    assert listing() == before
+
+
 def test_write_epoch_leaves_session_write_mode_alone(spark, tmp_path):
     """write_epoch's replay-safe dynamic overwrite is a write option: the
     session's partitionOverwriteMode is unchanged afterwards, and a
